@@ -114,11 +114,14 @@ def spread_scan(df: DataFrame, spark: SparkSession, key: str) -> DataFrame:
     a corpus scan is a single task and every per-row-expensive operator
     (shingle hashing, minhash signatures, 64-dim dot products, Arrow
     Python stages) runs on one core while 31 idle — measured 8× below
-    per-core throughput at sf0.1 vs sf1. Hash-partitioning on the id
-    key is deterministic (unlike round-robin) and balanced for the
-    uniform id domains here. At cluster scale a real corpus scan
-    already has ≥ cores splits, the predicate is false, and NO shuffle
-    is added — this is a small-input adaptation, not a plan change.
+    per-core throughput at sf0.1 vs sf1. Hash-partitioning on `key` (a
+    SQL expression over the frame's columns) is deterministic (unlike
+    round-robin) and balanced for the uniform id domains here: "doc_id"
+    spreads docs, "doc_id div 4" keeps each synthetic dup group of 4 in
+    one partition so per-worker group caches hit. At cluster scale a
+    real corpus scan already has ≥ cores splits, the predicate is
+    false, and NO shuffle is added — this is a small-input adaptation,
+    not a plan change.
     """
     target = spark.sparkContext.defaultParallelism
     try:
@@ -134,7 +137,12 @@ def spread_scan(df: DataFrame, spark: SparkSession, key: str) -> DataFrame:
         if scan_partitions(df) >= target:
             return df
     except Exception:
+        from .runlog import get_logger
+
+        get_logger(__name__).warning(
+            "spread_scan: partition probe failed, scan left unspread", exc_info=True
+        )
         return df
     from pyspark.sql import functions as F
 
-    return df.repartition(target, F.col(key))
+    return df.repartition(target, F.expr(key))

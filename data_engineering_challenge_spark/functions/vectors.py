@@ -28,40 +28,6 @@ def norm(a: Column) -> Column:
     return F.sqrt(dot(a, a))
 
 
-# r11 (guide §1.2 per-task work): F.aggregate / F.zip_with are
-# higher-order functions interpreted per element. The unrolled
-# left-associative sum below evaluates the IDENTICAL IEEE op sequence
-# — ((0.0 + a0*b0) + a1*b1) + ... — so doubles stay bit-identical
-# (pinned by tests/test_vectors_unrolled.py), and it compiles through
-# whole-stage codegen. MEASURED crossover: at <= ~16 dims the unrolled
-# form wins ~1.4-2x; at 64 dims the generated method exceeds what the
-# JIT will compile and runs ~4x SLOWER than the fold — so the 64-dim
-# cosine paths keep dot()/norm(), and only the small-dim paths (PQ
-# subvectors, 16-dim truncation, 16-slot signature match) use these.
-# Built as ONE SQL string parsed JVM-side (the r10 py4j-flood rule),
-# hence the name-based API.
-
-
-def dot_sql(a: str, b: str, dim: int) -> str:
-    """SQL text of the unrolled dot fold over `dim`-wide array columns
-    named `a`/`b` (names must be plain attributes or SQL-safe exprs)."""
-    expr = "0.0D"
-    for i in range(dim):
-        expr = f"({expr} + ({a}[{i}] * {b}[{i}]))"
-    return expr
-
-
-def dot_named(a: str, b: str, dim: int) -> Column:
-    """Unrolled twin of :func:`dot` for named columns — bit-identical
-    op order, whole-stage-codegen-able (pinned by tests)."""
-    return F.expr(dot_sql(a, b, dim))
-
-
-def norm_named(a: str, dim: int) -> Column:
-    """Unrolled twin of :func:`norm` for a named column."""
-    return F.sqrt(dot_named(a, a, dim))
-
-
 def cosine(a: Column, b: Column) -> Column:
     """dot(a,b) / (norm(a) * norm(b)) — formula written identically in
     the DuckDB oracles (NOT sqrt(na*nb): parenthesization must match

@@ -34,24 +34,20 @@ from pyspark.storagelevel import StorageLevel
 from ..catalog import load_table, spread_scan
 from ..functions.text import normalize_text, tokens, word_ngrams
 from ..registry import register
+from .banding import (
+    MAX_BAND_BUCKET,
+    MINHASH_PAIRS_SQL,
+    NUM_MINHASH,
+    banded_self_pairs,
+    cap_hot_buckets,
+    fp_pairs_cte,
+    lsh_candidates,
+    minhash_bands,
+    scored_pairs,
+)
 
 from ..functions.text import NORM_SQL as _NORM_SQL  # noqa: E402 — oracle twin of normalize_text
 
-NUM_MINHASH = 16
-MINHASH_BANDS = 4  # 4 bands x 4 rows
-# Hot-band escape hatch: a band bucket shared by k docs yields k^2
-# candidate pairs in the bucket self-join. On boilerplate-heavy corpora
-# (license headers, templated pages) a single bucket can hold millions
-# of docs and one reducer gets a quadratic cell no matter what AQE
-# does. Buckets above the cap are dropped from CANDIDATE GENERATION
-# only: such docs are near-identical boilerplate whose pairs carry no
-# ranking information, and every surviving band of a doc still
-# generates its pairs (recall degrades gracefully, per-band). The cap
-# is part of the operator's defined semantics — the oracle applies the
-# identical rule, so the driver verifies the capped operator, not an
-# uncapped idealization. Calibration + cluster re-tuning rule:
-# SCALING.md "Threshold provenance".
-MAX_BAND_BUCKET = 64
 # ngram_jaccard_pairs is the EXACT verifier and is candidate-quadratic
 # by construction when gram document frequency grows linearly with the
 # corpus (fixed-vocabulary corpora — the round-6 verdict's one weak
@@ -70,8 +66,7 @@ MAX_BAND_BUCKET = 64
 # shuffle would exceed ~300 GB. Env-overridable for clusters that can
 # afford more.
 NGRAM_MAX_CANDIDATES = 100_000_000
-SIMHASH_BITS = 60  # 4 chunks x 15 bits; < 2^63 so it fits BIGINT exactly
-SIMHASH_CHUNKS = 4
+SIMHASH_BITS = 60  # banding.FP_CHUNKS x FP_CHUNK_BITS; < 2^63 so it fits BIGINT exactly
 SIMHASH_MAX_HAMMING = 3  # provenance: SCALING.md "Threshold provenance"
 
 
@@ -339,9 +334,9 @@ def _minhash_signatures(
     )
 
 
-# Shared oracle CTE chain: grams → sliced-digest signatures → bands →
-# hot-bucket cap → candidate pairs. Used verbatim by minhash_lsh_pairs
-# and by the precision audit, so both verify the SAME candidate set.
+# Shared oracle CTE chain: grams → sliced-digest signatures → the
+# banding twin (bands → hot-bucket cap → candidate pairs → estimate).
+# Every MinHash oracle starts from it, so all verify the SAME pairs.
 _MINHASH_CAND_SQL = f"""g AS ({_GRAMS_SQL}),
         hh AS (
             SELECT doc_id, sha256(gram) AS d1, sha256('x:' || gram) AS d2 FROM g
@@ -355,126 +350,14 @@ _MINHASH_CAND_SQL = f"""g AS ({_GRAMS_SQL}),
             GROUP BY doc_id, j
         ),
         sig AS (SELECT doc_id, list(mh ORDER BY j) AS s FROM h GROUP BY doc_id),
-        bands AS (
-            SELECT doc_id, b,
-                   md5(array_to_string(s[b*4+1:b*4+4], '|')) AS bh
-            FROM sig, range(0, {MINHASH_BANDS}) t(b)
-        ),
-        capped AS (
-            SELECT doc_id, b, bh FROM (
-                SELECT doc_id, b, bh,
-                       COUNT(*) OVER (PARTITION BY b, bh) AS bsz
-                FROM bands
-            ) WHERE bsz <= {MAX_BAND_BUCKET}
-        ),
-        cand AS (
-            SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-            FROM capped a
-            JOIN capped b ON a.b = b.b AND a.bh = b.bh AND a.doc_id < b.doc_id
-        )"""
-
-
-
-def _sig_est(a: str = "s_a", b: str = "s_b") -> F.Column:
-    """Estimated Jaccard = matching signature slots / NUM_MINHASH, as
-    ONE unrolled codegen expression (r11). The zip_with+aggregate HOF
-    pair it replaces is interpreted per element (CodegenFallback);
-    integer addition is exact, so the unrolled sum is value-identical
-    and the single float division is unchanged."""
-    terms = " + ".join(
-        f"CAST(({a}[{j}] = {b}[{j}]) AS INT)" for j in range(NUM_MINHASH)
-    )
-    return F.expr(f"({terms})") / float(NUM_MINHASH)
-
-
-def _band_hash_arr() -> F.Column:
-    """4 md5 band hashes of the signature array `s` (one Column)."""
-    rows_per_band = NUM_MINHASH // MINHASH_BANDS
-    return F.array(
-        *[
-            F.md5(
-                F.concat_ws(
-                    "|", *[F.col("s").getItem(b * rows_per_band + i) for i in range(rows_per_band)]
-                ).cast("binary")
-            )
-            for b in range(MINHASH_BANDS)
-        ]
-    )
-
-
-def _lsh_candidates(sig: DataFrame) -> DataFrame:
-    """(doc_a, doc_b) candidate pairs from banded signatures with the
-    hot-bucket cap — the shared head of every MinHash consumer. r11
-    measured the alternative `_lsh_pairs_est` (estimator streamed
-    through the band join, no candidate materialization) SLOWER at
-    sf1 (+24-28%) and sf10 (+3-5%): carrying the 16-slot signature
-    through the bucket-cap window's sort+shuffle costs more than the
-    two narrow join-backs it saves. Query paths use this shape."""
-    bands = sig.select("doc_id", F.posexplode(_band_hash_arr()).alias("b", "bh"))
-    # hot-bucket cap: the windowed count shuffles on exactly the join
-    # key (b, bh), so the filter costs no extra exchange and the
-    # quadratic self-join below never sees a bucket above the cap
-    bucket_w = W.partitionBy("b", "bh")
-    bands = bands.withColumn("bsz", F.count(F.lit(1)).over(bucket_w)).filter(
-        F.col("bsz") <= MAX_BAND_BUCKET
-    ).drop("bsz")
-    a, b = bands.alias("a"), bands.alias("b")
-    return (
-        a.join(b, (F.col("a.b") == F.col("b.b")) & (F.col("a.bh") == F.col("b.bh")) & (F.col("a.doc_id") < F.col("b.doc_id")))
-        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .distinct()
-    )
-
-
-def _lsh_pairs_est(sig: DataFrame) -> DataFrame:
-    """(doc_a, doc_b, est_jaccard), one row per band collision, NOT
-    deduped — the r10 simhash/phash banded-join shape applied to the
-    MinHash family: signatures RIDE the band rows and the estimator is
-    computed in the join projection, so candidate pairs are never
-    materialized, never shuffled, and never joined back to the
-    signature table. MEASURED SLOWER than _lsh_candidates + join-backs
-    at sf1 (+24-28%) and sf10 (+3-5%) — the signature array through
-    the bucket-cap window's sort+shuffle costs more than it saves —
-    so NO query path uses it (r11). Kept as the documented
-    alternative (pair-set equality with _lsh_candidates pinned by
-    pytest) for corpora where band collisions are dominated by
-    non-dups the est filter could drop pre-exchange."""
-    bands = sig.select("doc_id", "s", F.posexplode(_band_hash_arr()).alias("b", "bh"))
-    # same hot-bucket cap as _lsh_candidates: the window shuffles on
-    # exactly the self-join key; band rows carry the 16-slot signature
-    # (~136 B) through it — linear in corpus, vs the candidate-space
-    # exchanges it removes (quadratic per bucket before the cap).
-    bucket_w = W.partitionBy("b", "bh")
-    bands = bands.withColumn("bsz", F.count(F.lit(1)).over(bucket_w)).filter(
-        F.col("bsz") <= MAX_BAND_BUCKET
-    ).drop("bsz")
-    a, b = bands.alias("a"), bands.alias("b")
-    return a.join(
-        b,
-        (F.col("a.b") == F.col("b.b"))
-        & (F.col("a.bh") == F.col("b.bh"))
-        & (F.col("a.doc_id") < F.col("b.doc_id")),
-    ).select(
-        F.col("a.doc_id").alias("doc_a"),
-        F.col("b.doc_id").alias("doc_b"),
-        _sig_est("a.s", "b.s").alias("est_jaccard"),
-    )
-
+        {MINHASH_PAIRS_SQL}"""
 
 
 @register(
     "minhash_lsh_pairs",
     oracle=f"""
         WITH {_MINHASH_CAND_SQL}
-        SELECT doc_a, doc_b, est_jaccard FROM (
-            SELECT doc_a, doc_b,
-                   len(list_filter(range(1, {NUM_MINHASH + 1}),
-                                   i -> sa.s[i] = sb.s[i])) / {NUM_MINHASH}.0
-                       AS est_jaccard
-            FROM cand
-            JOIN sig sa ON sa.doc_id = doc_a
-            JOIN sig sb ON sb.doc_id = doc_b
-        )
+        SELECT doc_a, doc_b, est_jaccard FROM est
         WHERE est_jaccard >= 0.5
         ORDER BY doc_a, doc_b
     """,
@@ -490,40 +373,15 @@ def _lsh_pairs_est(sig: DataFrame) -> DataFrame:
 )
 def minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     sig = _minhash_signatures(spark, sf_dir)
-    # r11 measured BOTH pair shapes and kept this one: the banded join
-    # with the estimator inside (_lsh_pairs_est) carries the 16-slot
-    # signature through the hot-bucket-cap window's sort+shuffle and
-    # ran 28% SLOWER at sf1 (3.44 -> 4.42 s min-of-3) and ~3% slower
-    # at sf10 (24.36 -> 25.01 s) than materialized candidates + two
-    # signature join-backs. The estimator itself stays the unrolled
-    # codegen sum (_sig_est, bit-identical to the zip_with fold).
-    cand = _lsh_candidates(sig)
-    sa = sig.select(F.col("doc_id").alias("doc_a"), F.col("s").alias("s_a"))
-    sb = sig.select(F.col("doc_id").alias("doc_b"), F.col("s").alias("s_b"))
-    return (
-        cand.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .select("doc_a", "doc_b", _sig_est().alias("est_jaccard"))
-        .filter(F.col("est_jaccard") >= 0.5)
-        .orderBy("doc_a", "doc_b")
-    )
+    return scored_pairs(lsh_candidates(sig), sig, 0.5).orderBy("doc_a", "doc_b")
 
 
 @register(
     "minhash_precision_audit",
     oracle=f"""
         WITH {_MINHASH_CAND_SQL},
-        est AS (
-            SELECT doc_a, doc_b,
-                   len(list_filter(range(1, {NUM_MINHASH + 1}),
-                                   i -> sa.s[i] = sb.s[i])) / {NUM_MINHASH}.0
-                       AS est_jaccard
-            FROM cand
-            JOIN sig sa ON sa.doc_id = doc_a
-            JOIN sig sb ON sb.doc_id = doc_b
-        ),
         sz AS (SELECT doc_id, COUNT(*) AS n FROM g GROUP BY doc_id),
-        -- r11: exact-verify side joins on 60-bit md5 gram hashes (8 B
+        -- exact-verify side joins on 60-bit md5 gram hashes (8 B
         -- shuffle keys) instead of ~20-char gram strings — the same
         -- hashed-gram equality ngram_jaccard_pairs already defines
         -- (collision-free at 60 bits for any verifiable corpus);
@@ -566,20 +424,9 @@ def minhash_precision_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     # dominant cost) runs once, not twice
     g = _reused(_distinct_grams(spark, sf_dir))
     sig = _minhash_signatures(spark, sf_dir, grams=g)
-    # r11 kept the materialized-candidates shape after measuring the
-    # banded-estimator join slower here (sf1 5.67 -> 7.05 s, sf10
-    # 58.8 -> 61.7 s — the 16-slot signature rides the bucket-cap
-    # window's sort+shuffle); the estimator is the unrolled _sig_est.
-    # The pair+est frame feeds BOTH the report and the exact-verify
-    # joins, so it is persisted (candidate-sized — tiny vs the corpus).
-    cand0 = _lsh_candidates(sig)
-    sa_sig = sig.select(F.col("doc_id").alias("doc_a"), F.col("s").alias("s_a"))
-    sb_sig = sig.select(F.col("doc_id").alias("doc_b"), F.col("s").alias("s_b"))
-    est = _reused(
-        cand0.join(sa_sig, "doc_a")
-        .join(sb_sig, "doc_b")
-        .select("doc_a", "doc_b", _sig_est().alias("est_jaccard"))
-    )
+    # the pair+est frame feeds BOTH the report and the exact-verify
+    # joins, so it is persisted (candidate-sized — tiny vs the corpus)
+    est = _reused(scored_pairs(lsh_candidates(sig), sig))
     cand = est.select("doc_a", "doc_b")
     d = spread_scan(  # single-file scan at test SFs: see catalog.spread_scan
         load_table(spark, sf_dir, "documents"), spark, "doc_id"
@@ -588,10 +435,9 @@ def minhash_precision_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         F.size(F.array_distinct(word_ngrams(tokens(F.col("text")), 3))).alias("n"),
     )
-    # r11 (guide §2.3 shuffle fewer bytes): the exact-intersection joins
-    # carry a 60-bit md5 gram hash (8 B key) instead of the ~20-char
-    # gram string — computed map-side off the persisted gram frame, so
-    # no extra pass. Same hashed-gram equality ngram_jaccard_pairs
+    # the exact-intersection joins carry a 60-bit md5 gram hash (8 B
+    # key) instead of the ~20-char gram string — computed map-side off
+    # the persisted gram frame, so no extra pass. Same hashed-gram equality ngram_jaccard_pairs
     # defines; the oracle CTE applies the identical rule (lockstep).
     gh = F.conv(F.substring(F.md5(F.col("gram").cast("binary")), 1, 15), 16, 10).cast(
         "long"
@@ -649,9 +495,22 @@ def minhash_precision_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 INCR_DELTA_BUCKETS = 100
 INCR_DELTA_FROM = 90  # md5 buckets >= this are the "new batch" (10%)
-_INCR_BUCKET_SQL = (
-    "('0x' || substr(md5('inc:' || CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT"
-    f" % {INCR_DELTA_BUCKETS}"
+
+
+def _incr_bucket_sql(col: str) -> str:
+    """DuckDB twin of :func:`_incr_bucket` over the SQL column `col`."""
+    return (
+        f"('0x' || substr(md5('inc:' || CAST({col} AS VARCHAR)), 1, 8))::BIGINT"
+        f" % {INCR_DELTA_BUCKETS}"
+    )
+
+
+# delta-involvement filter over a pair table's (doc_a, doc_b): the
+# oracle twin of the incremental probes' bucket split (it commutes with
+# the pair join, so it can apply after a full-corpus pairs CTE)
+_INCR_PAIR_FILTER_SQL = (
+    f"({_incr_bucket_sql('doc_a')} >= {INCR_DELTA_FROM}"
+    f" OR {_incr_bucket_sql('doc_b')} >= {INCR_DELTA_FROM})"
 )
 
 
@@ -772,44 +631,13 @@ def extend_minhash_index(spark: SparkSession, sf_dir: str, table_dir: str) -> in
     return write_snapshot(corpus_sig.unionByName(delta_sig), table_dir)
 
 
-def _band_hashes_col():
-    rows_per_band = NUM_MINHASH // MINHASH_BANDS
-    return F.array(
-        *[
-            F.md5(
-                F.concat_ws(
-                    "|",
-                    *[
-                        F.col("s").getItem(b * rows_per_band + i)
-                        for i in range(rows_per_band)
-                    ],
-                ).cast("binary")
-            )
-            for b in range(MINHASH_BANDS)
-        ]
-    )
-
-
 @register(
     "incremental_dedup",
     oracle=f"""
-        WITH {_MINHASH_CAND_SQL},
-        est AS (
-            SELECT doc_a, doc_b,
-                   len(list_filter(range(1, {NUM_MINHASH + 1}),
-                                   i -> sa.s[i] = sb.s[i])) / {NUM_MINHASH}.0
-                       AS est_jaccard
-            FROM cand
-            JOIN sig sa ON sa.doc_id = doc_a
-            JOIN sig sb ON sb.doc_id = doc_b
-        )
+        WITH {_MINHASH_CAND_SQL}
         SELECT doc_a, doc_b, est_jaccard
         FROM est
-        WHERE est_jaccard >= 0.5
-          AND (('0x' || substr(md5('inc:' || CAST(doc_a AS VARCHAR)), 1, 8))::BIGINT
-                   % {INCR_DELTA_BUCKETS} >= {INCR_DELTA_FROM}
-               OR ('0x' || substr(md5('inc:' || CAST(doc_b AS VARCHAR)), 1, 8))::BIGINT
-                   % {INCR_DELTA_BUCKETS} >= {INCR_DELTA_FROM})
+        WHERE est_jaccard >= 0.5 AND {_INCR_PAIR_FILTER_SQL}
         ORDER BY doc_a, doc_b
     """,
     doc="Incremental dedup of a NEW document batch (the 10% of docs in "
@@ -854,18 +682,9 @@ def incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark, sf_dir, grams=_grams_of(delta_docs)
     ).withColumn("is_delta", F.lit(True))
     allsig = _reused(corpus_sig.unionByName(delta_sig))
-    bands = allsig.select(
-        "doc_id", "is_delta", F.posexplode(_band_hashes_col()).alias("b", "bh")
-    )
     # hot-bucket cap over the UNION — identical bucket sizes to the
-    # full-corpus run, windowed on exactly the join key (no extra
-    # exchange), same rule as _lsh_candidates
-    bands = (
-        bands.withColumn("bsz", F.count(F.lit(1)).over(W.partitionBy("b", "bh")))
-        .filter(F.col("bsz") <= MAX_BAND_BUCKET)
-        .drop("bsz")
-    )
-    bands = _reused(bands)
+    # full-corpus run
+    bands = _reused(cap_hot_buckets(minhash_bands(allsig, "doc_id", "is_delta")))
     delta_bands = bands.filter(F.col("is_delta"))
     a, b = delta_bands.alias("a"), bands.alias("b")
     # delta x union join (NOT a full self-join): every delta-involved
@@ -884,16 +703,7 @@ def incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .distinct()
     )
-    sa = allsig.select(F.col("doc_id").alias("doc_a"), F.col("s").alias("s_a"))
-    sb = allsig.select(F.col("doc_id").alias("doc_b"), F.col("s").alias("s_b"))
-    est = _sig_est()
-    return (
-        cand.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .select("doc_a", "doc_b", est.alias("est_jaccard"))
-        .filter(F.col("est_jaccard") >= 0.5)
-        .orderBy("doc_a", "doc_b")
-    )
+    return scored_pairs(cand, allsig, 0.5).orderBy("doc_a", "doc_b")
 
 
 def _simhash_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -952,22 +762,8 @@ def _simhash_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
                    CAST(SUM(CASE WHEN s > 0 THEN mask ELSE 0 END) AS BIGINT) AS fp
             FROM s GROUP BY doc_id
         ),
-        bands AS (
-            SELECT doc_id, c, (fp >> (c * 15)) & 32767 AS chunk
-            FROM f, range(0, {SIMHASH_CHUNKS}) r(c)
-        ),
-        cand AS (
-            SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-            FROM bands a
-            JOIN bands b ON a.c = b.c AND a.chunk = b.chunk AND a.doc_id < b.doc_id
-        )
-        SELECT doc_a, doc_b, hamming FROM (
-            SELECT doc_a, doc_b, bit_count(xor(fa.fp, fb.fp)) AS hamming
-            FROM cand
-            JOIN f fa ON fa.doc_id = doc_a
-            JOIN f fb ON fb.doc_id = doc_b
-        )
-        WHERE hamming <= {SIMHASH_MAX_HAMMING}
+        {fp_pairs_cte("", SIMHASH_MAX_HAMMING)}
+        SELECT doc_a, doc_b, hamming FROM pairs
         ORDER BY doc_a, doc_b
     """,
     doc="SimHash near-dup pairs: 60-bit token-level simhash, candidates "
@@ -976,42 +772,23 @@ def _simhash_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("dedup", "extension"),
 )
 def simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # The phash/wavhash band join applied back to the family that
-    # inspired it: fingerprints ride ON the band rows and the Hamming
-    # verify evaluates INSIDE the join condition, so chance chunk
-    # collisions are xor/popcount'd and dropped in the streamed join
-    # output. The previous shape (materialize candidates via distinct,
-    # then two join-backs to fetch fingerprints) shuffled the full
-    # candidate space — text simhash chunks are content-skewed, so at
-    # sf10 that exchange went quadratic (measured 677 s; this plan:
-    # one band shuffle, candidates never materialized).
-    from .multimodal import _banded_self_pairs
-
-    f_ = _simhash_fingerprints(spark, sf_dir)
-    return _banded_self_pairs(f_, SIMHASH_MAX_HAMMING)
+    # fingerprints ride ON the band rows: text simhash chunks are
+    # content-skewed, and materialized candidates made the sf10 band
+    # exchange quadratic (677 s)
+    return banded_self_pairs(_simhash_fingerprints(spark, sf_dir), SIMHASH_MAX_HAMMING)
 
 
 @register(
     "dedup_source_matrix",
     oracle=f"""
         WITH {_MINHASH_CAND_SQL},
-        est AS (
-            SELECT doc_a, doc_b FROM (
-                SELECT doc_a, doc_b,
-                       len(list_filter(range(1, {NUM_MINHASH + 1}),
-                                       i -> sa.s[i] = sb.s[i])) / {NUM_MINHASH}.0
-                           AS est_jaccard
-                FROM cand
-                JOIN sig sa ON sa.doc_id = doc_a
-                JOIN sig sb ON sb.doc_id = doc_b
-            ) WHERE est_jaccard >= 0.5
-        ),
         lab AS (
             SELECT LEAST(da.source, db.source) AS source_a,
                    GREATEST(da.source, db.source) AS source_b
             FROM est e
             JOIN documents da ON da.doc_id = e.doc_a
             JOIN documents db ON db.doc_id = e.doc_b
+            WHERE e.est_jaccard >= 0.5
         )
         SELECT source_a, source_b, COUNT(*) AS n_pairs
         FROM lab
@@ -1030,19 +807,7 @@ def simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def dedup_source_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     sig = _minhash_signatures(spark, sf_dir)
-    # r11 measured the banded-estimator join slower than materialized
-    # candidates + signature join-backs at every SF it could run (see
-    # minhash_lsh_pairs) — kept the candidate shape, unrolled _sig_est.
-    cand = _lsh_candidates(sig)
-    sa = sig.select(F.col("doc_id").alias("doc_a"), F.col("s").alias("s_a"))
-    sb = sig.select(F.col("doc_id").alias("doc_b"), F.col("s").alias("s_b"))
-    pairs = (
-        cand.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .select("doc_a", "doc_b", _sig_est().alias("est_jaccard"))
-        .filter(F.col("est_jaccard") >= 0.5)
-        .select("doc_a", "doc_b")
-    )
+    pairs = scored_pairs(lsh_candidates(sig), sig, 0.5).select("doc_a", "doc_b")
     # NO static broadcast hint on the pair side: pairs are SF-scaled
     # (bucket-capped but linear in corpus on boilerplate-heavy feeds),
     # and a hint bypasses Spark's 8 GiB broadcast ceiling — the exact

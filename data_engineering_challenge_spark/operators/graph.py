@@ -54,6 +54,10 @@ MAX_ITERATIONS = 50
 from ..functions.text import NORM_SQL as _NORM_SQL  # noqa: E402 — oracle twin of normalize_text
 
 
+# bounded wait for the CC loop's Observation read (see _observed_changed)
+_OBSERVATION_WAIT_S = 300.0
+
+
 def _observed_changed(obs: Observation, checkpointed: DataFrame) -> int:
     """Read the loop's fused convergence metric with a bounded wait.
 
@@ -61,21 +65,28 @@ def _observed_changed(obs: Observation, checkpointed: DataFrame) -> int:
     through `withAction` (which fires the QueryExecutionListener that
     populates the Observation). That holds on Spark 3.5/4.x but is
     undocumented; if a future version materializes checkpoints outside
-    the listener path, a bare `obs.get` would hang the loop forever
-    (ADVICE r10). Bounded wait + fall back to the direct count probe —
-    the pre-r10 two-jobs-per-iteration behavior, correct just slower."""
-    from concurrent.futures import ThreadPoolExecutor
-    from concurrent.futures import TimeoutError as _FTimeout
+    the listener path, a bare `obs.get` would hang the loop forever.
+    Bounded wait + fall back to the direct count probe (two jobs per
+    iteration instead of one: correct, just slower). The reader is a
+    daemon thread, so a hung `obs.get` never blocks interpreter exit."""
+    import threading
 
-    ex = ThreadPoolExecutor(max_workers=1)
-    try:
-        fut = ex.submit(lambda: obs.get["changed"])
+    box: dict = {}
+
+    def read() -> None:
         try:
-            return int(fut.result(timeout=300.0) or 0)
-        except _FTimeout:
-            return checkpointed.filter(F.col("lbl") != F.col("old_lbl")).count()
-    finally:
-        ex.shutdown(wait=False)
+            box["changed"] = obs.get["changed"]
+        except Exception as exc:  # re-raised on the caller's thread
+            box["error"] = exc
+
+    reader = threading.Thread(target=read, name="cc-observation", daemon=True)
+    reader.start()
+    reader.join(_OBSERVATION_WAIT_S)
+    if "error" in box:
+        raise box["error"]
+    if "changed" not in box:
+        return checkpointed.filter("lbl != old_lbl").count()
+    return int(box["changed"] or 0)
 
 
 def connected_components(

@@ -29,9 +29,16 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..catalog import load_table
+from ..catalog import load_table, spread_scan
 from ..functions.text import NORM_SQL as _NORM_SQL
 from ..registry import register
+from .banding import (
+    banded_self_pairs,
+    fp_pairs_cte,
+    incremental_fp_pairs,
+    landing_fp_transform,
+)
+from .dedup import INCR_DELTA_FROM, _INCR_PAIR_FILTER_SQL, _incr_bucket
 
 META_SCHEMA = (
     "doc_id bigint, payload_bytes bigint, payload_md5 string, "
@@ -911,7 +918,7 @@ def wav_roundtrip_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # Perceptual-hash image near-dup detection (round 10): the stage that
 # CONNECTS the real stdlib codecs above to the banded-Hamming dedup
-# machinery (operators/dedup.py simhash_pairs) — the image-content
+# machinery (operators/banding.py) — the image-content
 # near-duplicate detector every production multimodal corpus pipeline
 # runs before training. No reference analogue (the reference is
 # text/tabular only); north-star extension per SURVEY.md §7.4.
@@ -923,21 +930,14 @@ def wav_roundtrip_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 #
 # Scale posture (100 TB): the per-doc decode→resize→hash runs in one
 # Arrow-batched mapInPandas pass (payloads never leave executors); the
-# only shuffle is the 4-rows-per-doc band table keyed on (c, chunk).
-# The Hamming verify is evaluated INSIDE the band self-join condition
-# (fingerprints ride on the band rows — 8 bytes), so candidate pairs
-# are filtered in the streamed join output and never materialized:
-# with uniform 60-bit hashes the expected candidate volume is
-# 4·n²/2^16 xor/popcount evaluations (~1.5e9 at 5M docs — CPU spread
-# across the cluster, not a shuffle), and only true near-dups (plus
-# the pair dedup) ever hit an exchange.
+# only shuffle is the 4-rows-per-doc band table keyed on (c, chunk),
+# with the Hamming verify inside the band join (banding.banded_self_pairs).
 
 PHASH_GROUP = 4          # docs per synthetic dup group (bounds pairs linearly)
 PHASH_BASE = 16          # base image is 16x16 — a multiple of 8, so every
 #                          integer upscale samples back to the SAME 8x8 grid
 PHASH_SCALES = (1, 2, 1, 1)  # per-variant upscale: v1 is a 2x resized copy
 PHASH_BITS = 60
-PHASH_CHUNKS = 4
 PHASH_MAX_HAMMING = 3
 _PHASH_DISTINCT_CID = 1_000_000_007  # v3 gets unrelated content (precision foil)
 
@@ -1119,56 +1119,6 @@ def _phash_f_ctes(pfx: str = "") -> str:
         )"""
 
 
-def _fp_pairs_cte(pfx: str, max_hamming: int) -> str:
-    """CTE chain turning ``{pfx}f(doc_id, fp)`` into the banded
-    near-dup pair table ``{pfx}pairs(doc_a, doc_b, hamming)`` — the
-    relational twin of _banded_self_pairs, shared by every modality."""
-    return f"""
-        {pfx}bands AS (
-            SELECT doc_id, fp, c, (fp >> (c * 15)) & 32767 AS chunk
-            FROM {pfx}f, range(0, {PHASH_CHUNKS}) r(c)
-        ),
-        {pfx}pairs AS (
-            SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b,
-                   bit_count(xor(a.fp, b.fp)) AS hamming
-            FROM {pfx}bands a
-            JOIN {pfx}bands b
-              ON a.c = b.c AND a.chunk = b.chunk AND a.doc_id < b.doc_id
-            WHERE bit_count(xor(a.fp, b.fp)) <= {max_hamming}
-        )"""
-
-
-# delta-involvement filter over a pairs CTE's (doc_a, doc_b) — the
-# oracle twin of the incremental probe's bucket split (commutes with
-# the pair join, so it can apply after the generic pairs CTE)
-_INCR_PAIR_FILTER_SQL = """
-        (('0x' || substr(md5('inc:' || CAST(doc_a AS VARCHAR)), 1, 8))
-             ::BIGINT % 100 >= 90
-         OR ('0x' || substr(md5('inc:' || CAST(doc_b AS VARCHAR)), 1, 8))
-             ::BIGINT % 100 >= 90)"""
-
-
-def _spread_by_group(
-    df: DataFrame, spark: SparkSession, group: int
-) -> DataFrame:
-    """spread_scan variant keyed on the dup-GROUP id (doc_id div
-    group) instead of doc_id: members of one synthetic group land in
-    the same partition, so the per-worker base-grid/base-clip
-    lru_cache actually hits (hash-partitioning by doc_id scatters the
-    3-4 docs of a group across workers and nearly every doc recomputes
-    its group's md5 grid). Same small-input-only guard as
-    catalog.spread_scan — a no-op at cluster scale."""
-    from ..catalog import scan_partitions
-
-    target = spark.sparkContext.defaultParallelism
-    try:
-        if scan_partitions(df) >= target:
-            return df
-    except Exception:
-        return df
-    return df.repartition(target, F.expr(f"doc_id div {group}"))
-
-
 def _phash_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, fp): synthesize the doc's BMP, then hash it THROUGH the
     codec — every fingerprint has passed through actual BMP bytes
@@ -1176,8 +1126,10 @@ def _phash_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     shortcut. One Arrow-batched pass, zero shuffle (the group-keyed
     spread only redistributes the single-file scan at test SFs — a
     multi-file 100-TB layout is already parallel)."""
-    d = _spread_by_group(
-        load_table(spark, sf_dir, "documents"), spark, PHASH_GROUP
+    # spread keyed on the dup GROUP: a group's docs land in one
+    # partition, so the per-worker base-grid lru_cache hits
+    d = spread_scan(
+        load_table(spark, sf_dir, "documents"), spark, f"doc_id div {PHASH_GROUP}"
     )
 
     def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -1195,7 +1147,7 @@ def _phash_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "phash_pairs",
     oracle=f"""
-        WITH {_phash_f_ctes()}, {_fp_pairs_cte("", PHASH_MAX_HAMMING)}
+        WITH {_phash_f_ctes()}, {fp_pairs_cte("", PHASH_MAX_HAMMING)}
         SELECT doc_a, doc_b, hamming FROM pairs
         ORDER BY doc_a, doc_b
     """,
@@ -1225,36 +1177,7 @@ def phash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # _reused rule; at cluster scale this is the stored-fingerprint
     # stage a production run would write to parquet anyway)
     f_ = track_persist(_phash_fingerprints(spark, sf_dir))
-    return _banded_self_pairs(f_, PHASH_MAX_HAMMING)
-
-
-def _banded_self_pairs(fps: DataFrame, max_hamming: int) -> DataFrame:
-    """Banded-Hamming self-join over a (doc_id, fp) fingerprint frame —
-    shared by the image (phash) and audio (wavhash) near-dup detectors.
-    The Hamming verify rides INSIDE the join condition: fingerprints
-    are 8 bytes on each band row, so chance chunk collisions are
-    xor/popcount'd and dropped in the streamed join output — candidates
-    are never materialized or shuffled (see module header for the
-    5M-doc math)."""
-    bands = _phash_bands(fps)
-    a, b = bands.alias("a"), bands.alias("b")
-    ham = F.bit_count(F.col("a.fp").bitwiseXOR(F.col("b.fp")))
-    return (
-        a.join(
-            b,
-            (F.col("a.c") == F.col("b.c"))
-            & (F.col("a.chunk") == F.col("b.chunk"))
-            & (F.col("a.doc_id") < F.col("b.doc_id"))
-            & (ham <= max_hamming),
-        )
-        .select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-            ham.alias("hamming"),
-        )
-        .dropDuplicates(["doc_a", "doc_b"])
-        .orderBy("doc_a", "doc_b")
-    )
+    return banded_self_pairs(f_, PHASH_MAX_HAMMING)
 
 
 # ---------------------------------------------------------------------------
@@ -1278,7 +1201,6 @@ def _build_fp_index(spark, sf_dir: str, table_dir: str, fp_fn) -> int:
     INCR_DELTA_FROM) and publish (doc_id, fp) as a versioned snapshot.
     Generic over the modality's fingerprint pass (`fp_fn`: (spark,
     sf_dir) -> (doc_id, fp) frame) — shared by phash and wavhash."""
-    from ..operators.dedup import INCR_DELTA_FROM, _incr_bucket
     from ..sinks.versioned import write_snapshot
 
     fps = fp_fn(spark, sf_dir).filter(
@@ -1291,7 +1213,6 @@ def _extend_fp_index(spark, sf_dir: str, table_dir: str, fp_fn) -> int:
     """Fold the delta batch's fingerprints into snapshot v+1 —
     idempotent (corpus-bucket filter on the read side, the
     extend_minhash_index protocol)."""
-    from ..operators.dedup import INCR_DELTA_FROM, _incr_bucket
     from ..sinks.versioned import read_snapshot, write_snapshot
 
     corpus = read_snapshot(spark, table_dir).filter(
@@ -1315,21 +1236,10 @@ def extend_phash_index(spark: SparkSession, sf_dir: str, table_dir: str) -> int:
     return _extend_fp_index(spark, sf_dir, table_dir, _phash_fingerprints)
 
 
-def _phash_bands(fps: DataFrame) -> DataFrame:
-    """(doc_id, fp, c, chunk) band rows of a fingerprint frame."""
-    chunks = F.array(
-        *[
-            F.shiftright(F.col("fp"), c * 15).bitwiseAND(F.lit(32767))
-            for c in range(PHASH_CHUNKS)
-        ]
-    )
-    return fps.select("doc_id", "fp", F.posexplode(chunks).alias("c", "chunk"))
-
-
 @register(
     "incremental_phash_pairs",
     oracle=f"""
-        WITH {_phash_f_ctes()}, {_fp_pairs_cte("", PHASH_MAX_HAMMING)}
+        WITH {_phash_f_ctes()}, {fp_pairs_cte("", PHASH_MAX_HAMMING)}
         SELECT doc_a, doc_b, hamming FROM pairs
         WHERE {_INCR_PAIR_FILTER_SQL}
         ORDER BY doc_a, doc_b
@@ -1347,58 +1257,9 @@ def _phash_bands(fps: DataFrame) -> DataFrame:
     tags=("multimodal", "dedup", "lsh", "incremental", "udf", "extension"),
 )
 def incremental_phash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _incremental_fp_pairs(
+    return incremental_fp_pairs(
         spark, sf_dir, phash_index_dir(sf_dir), build_phash_index,
         _phash_fingerprints, PHASH_MAX_HAMMING,
-    )
-
-
-def _incremental_fp_pairs(
-    spark, sf_dir, table_dir, build_fn, fp_fn, max_hamming
-) -> DataFrame:
-    """Generic incremental fingerprint probe (shared by phash and
-    wavhash): the NEW batch's payloads are fingerprinted fresh and
-    probed against the FROZEN index — read back as a 16-byte-row
-    snapshot scan, never a corpus re-decode."""
-    from ..operators.dedup import INCR_DELTA_FROM, _incr_bucket
-    from ..registry import track_persist
-    from ..sinks.versioned import read_snapshot
-
-    if not os.path.exists(os.path.join(table_dir, "manifest.json")):
-        build_fn(spark, sf_dir, table_dir)
-    # corpus-bucket filter: a folded snapshot (v2+) also holds delta
-    # fingerprints — unioning them with the freshly computed delta
-    # would duplicate band rows (same guard as incremental_dedup)
-    corpus = read_snapshot(spark, table_dir).filter(
-        _incr_bucket(F.col("doc_id")) < INCR_DELTA_FROM
-    )
-    delta = track_persist(
-        fp_fn(spark, sf_dir).filter(
-            _incr_bucket(F.col("doc_id")) >= INCR_DELTA_FROM
-        )
-    )
-    delta_bands = _phash_bands(delta)
-    union_bands = _phash_bands(corpus).unionByName(delta_bands)
-    a, b = delta_bands.alias("a"), union_bands.alias("b")
-    ham = F.bit_count(F.col("a.fp").bitwiseXOR(F.col("b.fp")))
-    # delta x union join (never a full self-join): every delta-involved
-    # pair shares a chunk with its delta member (pigeonhole), so this
-    # join sees exactly the delta's posting lists
-    return (
-        a.join(
-            b,
-            (F.col("a.c") == F.col("b.c"))
-            & (F.col("a.chunk") == F.col("b.chunk"))
-            & (F.col("a.doc_id") != F.col("b.doc_id"))
-            & (ham <= max_hamming),
-        )
-        .select(
-            F.least(F.col("a.doc_id"), F.col("b.doc_id")).alias("doc_a"),
-            F.greatest(F.col("a.doc_id"), F.col("b.doc_id")).alias("doc_b"),
-            ham.alias("hamming"),
-        )
-        .dropDuplicates(["doc_a", "doc_b"])
-        .orderBy("doc_a", "doc_b")
     )
 
 
@@ -1431,55 +1292,9 @@ def landing_phash_transform(
     the batch incremental_phash_pairs' job — the same stream/batch
     split landing_dedup_transform documents); pinned in tests against
     the batch query restricted to corpus partners."""
-    return _landing_fp_transform(
+    return landing_fp_transform(
         spark, sf_dir, raw, phash_index_dir(sf_dir), build_phash_index,
         phash_of_payload_rows, PHASH_MAX_HAMMING,
-    )
-
-
-def _landing_fp_transform(
-    spark, sf_dir, raw, table_dir, build_fn, row_fp_fn, max_hamming
-) -> DataFrame:
-    """Generic landing-zone fingerprint filter (shared by phash and
-    wavhash): arriving delta docs are fingerprinted per row (stateless
-    Arrow pass) and probed against the FROZEN index via a
-    stream-static band join."""
-    from ..operators.dedup import INCR_DELTA_FROM, _incr_bucket
-    from ..registry import track_persist
-    from ..sinks.versioned import read_snapshot
-
-    if not os.path.exists(os.path.join(table_dir, "manifest.json")):
-        build_fn(spark, sf_dir, table_dir)
-    corpus = read_snapshot(spark, table_dir).filter(
-        _incr_bucket(F.col("doc_id")) < INCR_DELTA_FROM
-    )
-    # static side persisted pre-partitioned on the join key so every
-    # micro-batch's probe reuses the cached distribution (the
-    # landing_dedup lesson: without this the per-trigger re-exchange
-    # of the static side caps throughput)
-    corpus_bands = track_persist(
-        _phash_bands(corpus)
-        .withColumnsRenamed({"doc_id": "doc_a", "fp": "fp_a"})
-        .repartition("c", "chunk")
-    )
-    delta = raw.filter(_incr_bucket(F.col("doc_id")) >= INCR_DELTA_FROM)
-    delta_bands = _phash_bands(row_fp_fn(delta)).withColumnsRenamed(
-        {"doc_id": "doc_b", "fp": "fp_b"}
-    )
-    ham = F.bit_count(F.col("fp_a").bitwiseXOR(F.col("fp_b")))
-    return (
-        delta_bands.hint("shuffle_hash")
-        .join(corpus_bands, ["c", "chunk"])
-        .filter(ham <= max_hamming)
-        .select(
-            F.least("doc_a", "doc_b").alias("pa"),
-            F.greatest("doc_a", "doc_b").alias("pb"),
-            ham.alias("hamming"),
-        )
-        .withColumnsRenamed({"pa": "doc_a", "pb": "doc_b"})
-        # a doc's 4 band rows arrive in one micro-batch, so duplicate
-        # hits are same-batch only — state is output-bounded
-        .dropDuplicates(["doc_a", "doc_b"])
     )
 
 
@@ -1513,7 +1328,7 @@ def incremental_phash_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Scale posture is the phash section's verbatim: one Arrow-batched
 # mapInPandas synth→REAL-RIFF-decode→hash pass (payloads never leave
 # executors), then the shared 4×15-bit band self-join with the popcount
-# verify inside the join condition (_banded_self_pairs).
+# verify inside the join condition (banding.banded_self_pairs).
 
 WAVHASH_GROUP = 4        # docs per synthetic dup group (bounds pairs linearly)
 WAVHASH_FRAMES = 60      # one bit per frame — fits a signed BIGINT exactly
@@ -1586,10 +1401,10 @@ def _wavhash_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, fp): synthesize the doc's WAV, then hash it THROUGH the
     codec — every fingerprint has passed through actual RIFF bytes
     (chunk walk, word alignment, int16 packing), not an arithmetic
-    shortcut. One Arrow-batched pass, zero shuffle (group-keyed spread:
-    see _spread_by_group)."""
-    d = _spread_by_group(
-        load_table(spark, sf_dir, "documents"), spark, WAVHASH_GROUP
+    shortcut. One Arrow-batched pass, zero shuffle (group-keyed spread,
+    as in _phash_fingerprints)."""
+    d = spread_scan(
+        load_table(spark, sf_dir, "documents"), spark, f"doc_id div {WAVHASH_GROUP}"
     )
 
     def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -1650,7 +1465,7 @@ def _wavhash_f_ctes(pfx: str = "") -> str:
 @register(
     "wavhash_pairs",
     oracle=f"""
-        WITH {_wavhash_f_ctes()}, {_fp_pairs_cte("", WAVHASH_MAX_HAMMING)}
+        WITH {_wavhash_f_ctes()}, {fp_pairs_cte("", WAVHASH_MAX_HAMMING)}
         SELECT doc_a, doc_b, hamming FROM pairs
         ORDER BY doc_a, doc_b
     """,
@@ -1679,7 +1494,7 @@ def wavhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (the phash_pairs rule — at cluster scale this is the stored-
     # fingerprint stage a production run writes to parquet anyway)
     f_ = track_persist(_wavhash_fingerprints(spark, sf_dir))
-    return _banded_self_pairs(f_, WAVHASH_MAX_HAMMING)
+    return banded_self_pairs(f_, WAVHASH_MAX_HAMMING)
 
 
 # -- wavhash nightly lifecycle: the audio family gets the same frozen
@@ -1720,7 +1535,7 @@ def wavhash_of_payload_rows(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
 @register(
     "incremental_wavhash_pairs",
     oracle=f"""
-        WITH {_wavhash_f_ctes()}, {_fp_pairs_cte("", WAVHASH_MAX_HAMMING)}
+        WITH {_wavhash_f_ctes()}, {fp_pairs_cte("", WAVHASH_MAX_HAMMING)}
         SELECT doc_a, doc_b, hamming FROM pairs
         WHERE {_INCR_PAIR_FILTER_SQL}
         ORDER BY doc_a, doc_b
@@ -1740,7 +1555,7 @@ def wavhash_of_payload_rows(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     tags=("multimodal", "dedup", "lsh", "incremental", "udf", "extension"),
 )
 def incremental_wavhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _incremental_fp_pairs(
+    return incremental_fp_pairs(
         spark, sf_dir, wavhash_index_dir(sf_dir), build_wavhash_index,
         _wavhash_fingerprints, WAVHASH_MAX_HAMMING,
     )
@@ -1754,7 +1569,7 @@ def landing_wavhash_transform(
     hold?' — stream scope is corpus-delta pairs only (delta-delta
     pairs are the batch incremental_wavhash_pairs' job; the same
     stream/batch split the image twin documents)."""
-    return _landing_fp_transform(
+    return landing_fp_transform(
         spark, sf_dir, raw, wavhash_index_dir(sf_dir), build_wavhash_index,
         wavhash_of_payload_rows, WAVHASH_MAX_HAMMING,
     )
@@ -1794,8 +1609,8 @@ def incremental_wavhash_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "multimodal_retention_plan",
     oracle=f"""
-        WITH {_phash_f_ctes("i")}, {_fp_pairs_cte("i", PHASH_MAX_HAMMING)},
-        {_wavhash_f_ctes("au")}, {_fp_pairs_cte("au", WAVHASH_MAX_HAMMING)},
+        WITH {_phash_f_ctes("i")}, {fp_pairs_cte("i", PHASH_MAX_HAMMING)},
+        {_wavhash_f_ctes("au")}, {fp_pairs_cte("au", WAVHASH_MAX_HAMMING)},
         tn AS (
             SELECT doc_id, md5({_NORM_SQL}) AS cfp FROM documents
         ),
@@ -1915,8 +1730,8 @@ def apply_multimodal_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "multimodal_retention_apply",
     oracle=f"""
-        WITH {_phash_f_ctes("i")}, {_fp_pairs_cte("i", PHASH_MAX_HAMMING)},
-        {_wavhash_f_ctes("au")}, {_fp_pairs_cte("au", WAVHASH_MAX_HAMMING)},
+        WITH {_phash_f_ctes("i")}, {fp_pairs_cte("i", PHASH_MAX_HAMMING)},
+        {_wavhash_f_ctes("au")}, {fp_pairs_cte("au", WAVHASH_MAX_HAMMING)},
         tn AS (
             SELECT doc_id, md5({_NORM_SQL}) AS cfp FROM documents
         ),

@@ -478,7 +478,6 @@ def dedup_savings(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 FUZZY_DECON_EST_JACCARD = 0.5  # same bar as minhash_lsh_pairs
 
-from .dedup import NUM_MINHASH as _NUM_MINHASH  # noqa: E402 — shared sketch params
 from .dedup import _MINHASH_CAND_SQL  # noqa: E402 — shared oracle CTE chain
 
 
@@ -490,23 +489,18 @@ from .dedup import _MINHASH_CAND_SQL  # noqa: E402 — shared oracle CTE chain
             SELECT doc_id, {_SPLIT_CASE_SQL} AS split FROM documents
         ),
         crossed AS (
-            SELECT c.doc_a, c.doc_b, sa.split AS split_a, sb.split AS split_b
-            FROM cand c
-            JOIN splits sa ON sa.doc_id = c.doc_a
-            JOIN splits sb ON sb.doc_id = c.doc_b
+            SELECT e.doc_a, e.doc_b, e.est_jaccard,
+                   sa.split AS split_a, sb.split AS split_b
+            FROM est e
+            JOIN splits sa ON sa.doc_id = e.doc_a
+            JOIN splits sb ON sb.doc_id = e.doc_b
             WHERE (sa.split = 'train' AND sb.split = 'test')
                OR (sa.split = 'test' AND sb.split = 'train')
         )
-        SELECT * FROM (
-            SELECT CASE WHEN split_a = 'test' THEN doc_a ELSE doc_b END AS test_doc,
-                   CASE WHEN split_a = 'test' THEN doc_b ELSE doc_a END AS train_doc,
-                   len(list_filter(range(1, {_NUM_MINHASH} + 1),
-                                   i -> ga.s[i] = gb.s[i])) / {_NUM_MINHASH}.0
-                       AS est_jaccard
-            FROM crossed
-            JOIN sig ga ON ga.doc_id = doc_a
-            JOIN sig gb ON gb.doc_id = doc_b
-        )
+        SELECT CASE WHEN split_a = 'test' THEN doc_a ELSE doc_b END AS test_doc,
+               CASE WHEN split_a = 'test' THEN doc_b ELSE doc_a END AS train_doc,
+               est_jaccard
+        FROM crossed
         WHERE est_jaccard >= {FUZZY_DECON_EST_JACCARD}
         ORDER BY test_doc, train_doc
     """,
@@ -523,22 +517,11 @@ from .dedup import _MINHASH_CAND_SQL  # noqa: E402 — shared oracle CTE chain
     tags=("text", "dedup", "lsh", "sampling", "extension"),
 )
 def fuzzy_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .dedup import _lsh_candidates, _minhash_signatures, _sig_est
+    from .banding import lsh_candidates, scored_pairs
+    from .dedup import _minhash_signatures
 
     sig = _minhash_signatures(spark, sf_dir)
-    # r11 measured the banded-estimator join (dedup._lsh_pairs_est)
-    # slower than materialized candidates + signature join-backs at
-    # sf1 and sf10 (see minhash_lsh_pairs) — kept the candidate shape;
-    # the estimator is the unrolled codegen _sig_est.
-    cand = _lsh_candidates(sig)
-    sa = sig.select(F.col("doc_id").alias("doc_a"), F.col("s").alias("s_a"))
-    sb = sig.select(F.col("doc_id").alias("doc_b"), F.col("s").alias("s_b"))
-    pairs = (
-        cand.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .select("doc_a", "doc_b", _sig_est().alias("est_jaccard"))
-        .filter(F.col("est_jaccard") >= FUZZY_DECON_EST_JACCARD)
-    )
+    pairs = scored_pairs(lsh_candidates(sig), sig, FUZZY_DECON_EST_JACCARD)
     d = load_table(spark, sf_dir, "documents")
     splits = d.select("doc_id", _split_col().alias("split"))
     crossed = (

@@ -50,7 +50,7 @@ COSINE_DUP_THRESHOLD = 0.4  # synthetic embeddings are near-orthogonal;
 # bucket. Both engines derive the cap from the same integer COUNT →
 # bit-replayable. Dropped buckets are dense near-duplicate cores whose
 # pairs carry no ranking information (same rationale as
-# dedup.MAX_BAND_BUCKET); recall degrades per-band, gracefully. At
+# banding.MAX_BAND_BUCKET); recall degrades per-band, gracefully. At
 # cluster scale the structural fix is PLANES_PER_BAND ≈ log2(n) so
 # bucket count tracks corpus size; the cap is the skew escape hatch
 # that holds either way.
@@ -328,7 +328,7 @@ def ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     "only corpus-sized shuffle is keyed on (band, bucket), and buckets "
     "denser than max(64, 8·⌈n/256⌉) — 8× the uniform expectation — are "
     "dropped from candidate generation on BOTH engines (hot-bucket skew "
-    "cap, same semantics as dedup.MAX_BAND_BUCKET), so a clustered "
+    "cap, same semantics as banding.MAX_BAND_BUCKET), so a clustered "
     "corpus can never hand one reducer a quadratic cell.",
     tags=("dedup", "similarity", "lsh", "extension"),
 )
@@ -874,19 +874,6 @@ def _pq_l2_col(a: F.Column, b: F.Column) -> F.Column:
     )
 
 
-def _pq_l2_named(a: str, b: str, dim: int = PQ_SUBDIM) -> F.Column:
-    """Unrolled twin of :func:`_pq_l2_col` (see vectors.dot_named):
-    identical left-assoc op order. UNUSED by query paths — r11 measured
-    it 2.5-4x SLOWER at sf10 inside the PQ encode/LUT joins (16 dims
-    of unrolled multiply-adds plus the join's own codegen exceeds the
-    JIT method budget; ann_ivfpq_topk 6.9 -> 29.9 s). Kept, with its
-    bit-identity test, as the documented negative result."""
-    expr = "0.0D"
-    for i in range(dim):
-        expr = f"({expr} + (({a}[{i}] - {b}[{i}]) * ({a}[{i}] - {b}[{i}])))"
-    return F.expr(expr)
-
-
 def _pq_subs(vec: F.Column) -> F.Column:
     """Array of PQ_SUBSPACES contiguous PQ_SUBDIM-dim slices."""
     return F.array(
@@ -931,10 +918,6 @@ def _pq_encode(e: DataFrame, codebook: DataFrame) -> DataFrame:
     esub = e.select(
         "vec_id", F.posexplode(_pq_subs(F.col("v"))).alias("s0", "sub")
     ).select((F.col("s0") + 1).alias("s"), "vec_id", "sub")
-    # r11: the unrolled 16-dim L2 (_pq_l2_named) measured 2.5-4x
-    # SLOWER at sf10 (ann_pq_topk 7.6 -> 19.3 s, ann_ivfpq 6.9 -> 29.9 s,
-    # pq_recon 2.3 -> 9.0 s): 16 dims sits past the JIT method budget
-    # once the encode join's surrounding codegen is added. Fold kept.
     d = _pq_l2_col(F.col("sub"), F.col("cvec"))
     return (
         esub.join(F.broadcast(codebook), "s")

@@ -410,7 +410,7 @@ def extend_span_index(spark: SparkSession, sf_dir: str, table_dir: str) -> int:
 
 
 from .dedup import INCR_DELTA_FROM as _INCR_FROM  # noqa: E402 — shared split
-from .dedup import _INCR_BUCKET_SQL  # noqa: E402 — oracle twin of _incr_bucket
+from .dedup import _incr_bucket_sql  # noqa: E402 — oracle twin of _incr_bucket
 
 
 @register(
@@ -422,7 +422,7 @@ from .dedup import _INCR_BUCKET_SQL  # noqa: E402 — oracle twin of _incr_bucke
                SUM(span_len)::BIGINT AS dup_tokens,
                MAX(span_len)::BIGINT AS longest_span
         FROM spans
-        WHERE {_INCR_BUCKET_SQL} >= {_INCR_FROM}
+        WHERE {_incr_bucket_sql("doc_id")} >= {_INCR_FROM}
         GROUP BY doc_id ORDER BY doc_id
         """
     ),
@@ -809,7 +809,7 @@ def apply_incremental_span_removal(
     oracle=f"""
         WITH t AS (
             SELECT doc_id, {_TOK_SQL} AS toks,
-                   ({_INCR_BUCKET_SQL} >= {_INCR_FROM}) AS isd
+                   ({_incr_bucket_sql("doc_id")} >= {_INCR_FROM}) AS isd
             FROM documents
             WHERE len({_TOK_SQL}) >= {SPAN_K}
         ), g AS (

@@ -425,11 +425,9 @@ def landing_dedup_transform(
     arbitrary documents stream `raw` — shared by the registered
     pipeline below and tools/stream_bench.py. See
     incremental_dedup_stream for semantics."""
+    from ..operators.banding import cap_hot_buckets, minhash_bands, sig_est
     from ..operators.dedup import (
         INCR_DELTA_FROM,
-        MAX_BAND_BUCKET,
-        NUM_MINHASH,
-        _band_hashes_col,
         _incr_bucket,
         build_minhash_index,
         minhash_index_dir,
@@ -438,7 +436,6 @@ def landing_dedup_transform(
     )
     from ..functions.text import tokens, word_ngrams
     from ..sinks.versioned import read_snapshot
-    from pyspark.sql import Window as W
 
     table_dir = minhash_index_dir(sf_dir)
     if not os.path.exists(os.path.join(table_dir, "manifest.json")):
@@ -449,15 +446,8 @@ def landing_dedup_transform(
     corpus_sig = read_snapshot(spark, table_dir).filter(
         _incr_bucket(F.col("doc_id")) < INCR_DELTA_FROM
     )
-    corpus_bands = (
-        corpus_sig.select(
-            F.col("doc_id").alias("doc_a"),
-            F.col("s").alias("s_a"),
-            F.posexplode(_band_hashes_col()).alias("b", "bh"),
-        )
-        .withColumn("bsz", F.count(F.lit(1)).over(W.partitionBy("b", "bh")))
-        .filter(F.col("bsz") <= MAX_BAND_BUCKET)
-        .drop("bsz")
+    corpus_bands = cap_hot_buckets(
+        minhash_bands(corpus_sig, F.col("doc_id").alias("doc_a"), F.col("s").alias("s_a"))
     )
     # static side is re-read per micro-batch: persist the capped band
     # table once (at 100 TB this is the stored-signature scan, not a
@@ -484,14 +474,9 @@ def landing_dedup_transform(
         .select("doc_id", row_minhash_digests(F.col("g")).alias("ds"))
         .select("doc_id", row_minhash_from_digests(F.col("ds")).alias("s"))
     )
-    delta_bands = delta_sig.select(
-        F.col("doc_id").alias("doc_b"),
-        F.col("s").alias("s_b"),
-        F.posexplode(_band_hashes_col()).alias("b", "bh"),
+    delta_bands = minhash_bands(
+        delta_sig, F.col("doc_id").alias("doc_b"), F.col("s").alias("s_b")
     )
-    from ..operators.dedup import _sig_est
-
-    est = _sig_est()  # unrolled codegen estimator (r11, see dedup._sig_est)
     return (
         # SHUFFLE_HASH on the micro-batch side: the hash map builds on
         # the (tiny) delta batch and PROBES the pre-partitioned cached
@@ -505,7 +490,7 @@ def landing_dedup_transform(
         .select(
             F.least("doc_a", "doc_b").alias("pa"),
             F.greatest("doc_a", "doc_b").alias("pb"),
-            est.alias("est_jaccard"),
+            sig_est().alias("est_jaccard"),
         )
         .withColumnsRenamed({"pa": "doc_a", "pb": "doc_b"})
         .filter(F.col("est_jaccard") >= 0.5)

@@ -1,4 +1,4 @@
-"""MinHash hot-band skew cap (operators/dedup.py MAX_BAND_BUCKET).
+"""MinHash hot-band skew cap (operators/banding.py MAX_BAND_BUCKET).
 
 A band bucket holding k docs contributes k^2 candidate pairs to the
 bucket self-join; at corpus scale a boilerplate bucket is the one key
@@ -16,10 +16,8 @@ import pandas as pd
 import pytest
 
 from data_engineering_challenge_spark import testing
-from data_engineering_challenge_spark.operators.dedup import (
-    MAX_BAND_BUCKET,
-    minhash_lsh_pairs,
-)
+from data_engineering_challenge_spark.operators.banding import MAX_BAND_BUCKET, minhash_bands
+from data_engineering_challenge_spark.operators.dedup import minhash_lsh_pairs
 from data_engineering_challenge_spark.registry import all_queries
 
 BOILERPLATE = (
@@ -71,26 +69,14 @@ def test_cap_is_inert_on_registered_corpus(spark, sf_dir):
     from data_engineering_challenge_spark.operators import dedup as dd
 
     sig = dd._minhash_signatures(spark, sf_dir)
-    rows_per_band = dd.NUM_MINHASH // dd.MINHASH_BANDS
-    band_hashes = F.array(
-        *[
-            F.md5(
-                F.concat_ws(
-                    "|",
-                    *[F.col("s").getItem(b * rows_per_band + i) for i in range(rows_per_band)],
-                ).cast("binary")
-            )
-            for b in range(dd.MINHASH_BANDS)
-        ]
-    )
     biggest = (
-        sig.select(F.posexplode(band_hashes).alias("b", "bh"))
+        minhash_bands(sig)
         .groupBy("b", "bh")
         .count()
         .agg(F.max("count"))
         .collect()[0][0]
     )
-    assert biggest <= dd.MAX_BAND_BUCKET
+    assert biggest <= MAX_BAND_BUCKET
 
 
 def test_salted_join_spreads_hot_key_across_reducers(spark):

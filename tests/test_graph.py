@@ -134,3 +134,42 @@ def test_apply_dedup_retention_keeps_longest(spark, tmp_path):
     rep = {r["source"]: r for r in dedup_retention_apply(spark, str(root)).collect()}
     assert rep["a"]["docs_kept"] == 1 and rep["a"]["docs_dropped"] == 1
     assert rep["b"]["docs_kept"] == 1 and rep["b"]["docs_dropped"] == 1
+
+
+def test_hung_observation_read_does_not_block_exit():
+    """If `Observation.get` never returns, the CC loop falls back to the
+    count probe after its bounded wait, and the abandoned reader thread
+    must not keep the interpreter alive at exit."""
+    import subprocess
+    import sys
+    import textwrap
+    from pathlib import Path
+
+    script = textwrap.dedent(
+        """
+        import threading
+
+        from data_engineering_challenge_spark.operators import graph
+
+        class HungObservation:
+            @property
+            def get(self):
+                threading.Event().wait()
+
+        class Checkpointed:
+            def filter(self, condition):
+                return self
+
+            def count(self):
+                return 7
+
+        graph._OBSERVATION_WAIT_S = 0.5
+        print(graph._observed_changed(HungObservation(), Checkpointed()))
+        """
+    )
+    root = Path(__file__).resolve().parent.parent
+    proc = subprocess.run(
+        [sys.executable, "-c", script], cwd=root, capture_output=True, text=True, timeout=120
+    )
+    assert proc.returncode == 0, proc.stderr
+    assert proc.stdout.split() == ["7"]

@@ -224,7 +224,7 @@ def test_incremental_matches_full_when_cap_binds(spark, tmp_path, monkeypatch):
     run — or it would emit pairs the full run suppresses."""
     import pandas as pd
 
-    from data_engineering_challenge_spark.operators.dedup import MAX_BAND_BUCKET
+    from data_engineering_challenge_spark.operators.banding import MAX_BAND_BUCKET
 
     corpus_ids = [i for i in range(3000) if _bucket(i) < INCR_DELTA_FROM]
     delta_ids = [i for i in range(3000) if _bucket(i) >= INCR_DELTA_FROM]

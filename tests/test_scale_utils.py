@@ -216,6 +216,34 @@ def test_spread_scan_spreads_small_scans_and_leaves_parallel_frames_alone(spark,
     assert spread_scan(wide, spark, "doc_id") is wide  # no-op, no shuffle
 
 
+def test_spread_scan_logs_a_failed_partition_probe(spark, monkeypatch):
+    """A failing partition probe leaves the frame unspread AND says so
+    through the run logger instead of passing silently."""
+    import logging
+
+    from data_engineering_challenge_spark import catalog
+
+    records = []
+
+    class Keep(logging.Handler):
+        def emit(self, record):
+            records.append(record)
+
+    def failing_probe(df):
+        raise RuntimeError("probe failed")
+
+    log = logging.getLogger(catalog.__name__)
+    keep = Keep()
+    log.addHandler(keep)
+    monkeypatch.setattr(catalog, "scan_partitions", failing_probe)
+    try:
+        df = spark.range(3)
+        assert catalog.spread_scan(df, spark, "id") is df
+    finally:
+        log.removeHandler(keep)
+    assert [r.levelno for r in records] == [logging.WARNING]
+
+
 def test_sessionize_hybrid_hot_path_matches_lag_semantics(spark):
     """The segmented-scan branch of sessionize_skew_hybrid must produce
     EXACTLY the sessions of the plain lag formulation — including

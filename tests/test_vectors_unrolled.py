@@ -1,76 +1,18 @@
-"""r11: the unrolled codegen twins of the HOF vector folds must be
-BIT-identical to the aggregate/zip_with originals — same IEEE op
-sequence ((0.0 + a0*b0) + a1*b1) + ..., so any drift is a bug that
-would surface as an oracle hash mismatch at driver time. Pinned here
-on adversarial doubles (negatives, tiny/huge magnitudes, ties) where
-a reassociated sum WOULD differ."""
+"""The MinHash estimator `banding.sig_est` is an unrolled codegen sum;
+it must be BIT-identical to the zip_with/aggregate fold it stands in
+for, or the MinHash queries would drift from their oracles."""
 
 from __future__ import annotations
 
-import math
 import struct
 
 from pyspark.sql import functions as F
 
-from data_engineering_challenge_spark.functions.vectors import (
-    dot,
-    dot_named,
-    norm,
-    norm_named,
-)
-from data_engineering_challenge_spark.operators.dedup import NUM_MINHASH, _sig_est
-from data_engineering_challenge_spark.operators.similarity import (
-    _pq_l2_col,
-    _pq_l2_named,
-)
+from data_engineering_challenge_spark.operators.banding import NUM_MINHASH, sig_est
 
 
 def _bits(x: float) -> int:
     return struct.unpack("<Q", struct.pack("<d", x))[0]
-
-
-def _vecs(dim: int, n: int = 64):
-    """Deterministic adversarial vectors: mixed signs and magnitudes
-    spanning ~30 orders so a reassociated sum visibly diverges."""
-    rows = []
-    for r in range(n):
-        a = [
-            ((-1) ** (r + i)) * math.ldexp(1.0 + ((r * 31 + i * 17) % 97) / 97.0, (i % 41) - 20)
-            for i in range(dim)
-        ]
-        b = [
-            ((-1) ** (i * r)) * math.ldexp(1.0 + ((r * 13 + i * 7) % 89) / 89.0, ((i * 3) % 37) - 18)
-            for i in range(dim)
-        ]
-        rows.append((r, a, b))
-    return rows
-
-
-def test_dot_named_bit_identical_to_fold(spark):
-    df = spark.createDataFrame(
-        _vecs(64), "id long, a array<double>, b array<double>"
-    )
-    got = df.select(
-        dot(F.col("a"), F.col("b")).alias("fold"),
-        dot_named("a", "b", 64).alias("unrolled"),
-        norm(F.col("a")).alias("nfold"),
-        norm_named("a", 64).alias("nunrolled"),
-    ).collect()
-    for r in got:
-        assert _bits(r["fold"]) == _bits(r["unrolled"])
-        assert _bits(r["nfold"]) == _bits(r["nunrolled"])
-
-
-def test_pq_l2_named_bit_identical_to_fold(spark):
-    df = spark.createDataFrame(
-        _vecs(8), "id long, a array<double>, b array<double>"
-    )
-    got = df.select(
-        _pq_l2_col(F.col("a"), F.col("b")).alias("fold"),
-        _pq_l2_named("a", "b", 8).alias("unrolled"),
-    ).collect()
-    for r in got:
-        assert _bits(r["fold"]) == _bits(r["unrolled"])
 
 
 def test_sig_est_matches_fold(spark):
@@ -82,51 +24,6 @@ def test_sig_est_matches_fold(spark):
     df = spark.createDataFrame(rows, "id long, s_a array<long>, s_b array<long>")
     eq = F.zip_with("s_a", "s_b", lambda x, y: (x == y).cast("int"))
     fold = F.aggregate(eq, F.lit(0), lambda acc, v: acc + v) / float(NUM_MINHASH)
-    got = df.select(fold.alias("fold"), _sig_est().alias("unrolled")).collect()
+    got = df.select(fold.alias("fold"), sig_est().alias("unrolled")).collect()
     for r in got:
         assert _bits(r["fold"]) == _bits(r["unrolled"])
-
-
-def test_lsh_pairs_est_matches_reference_candidates(spark, sf_dir):
-    """The r11 banded-estimator join (_lsh_pairs_est) must produce
-    exactly the reference formulation's candidate pair set, and its
-    rided estimator must equal the join-back estimator per pair."""
-    from data_engineering_challenge_spark.operators.dedup import (
-        _lsh_candidates,
-        _lsh_pairs_est,
-        _minhash_signatures,
-    )
-
-    sig = _minhash_signatures(spark, sf_dir).localCheckpoint()
-    ref_pairs = {
-        (r["doc_a"], r["doc_b"]) for r in _lsh_candidates(sig).collect()
-    }
-    got = _lsh_pairs_est(sig).collect()
-    got_pairs = {(r["doc_a"], r["doc_b"]) for r in got}
-    assert got_pairs == ref_pairs
-    # every duplicate band-collision row of a pair carries one value
-    seen = {}
-    for r in got:
-        k = (r["doc_a"], r["doc_b"])
-        assert _bits(seen.setdefault(k, r["est_jaccard"])) == _bits(r["est_jaccard"])
-    # and that value equals the reference join-back estimator
-    sa = sig.select(F.col("doc_id").alias("doc_a"), F.col("s").alias("s_a"))
-    sb = sig.select(F.col("doc_id").alias("doc_b"), F.col("s").alias("s_b"))
-    ref_est = {
-        (r["doc_a"], r["doc_b"]): r["est"]
-        for r in _lsh_candidates(sig)
-        .join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .select("doc_a", "doc_b", _sig_est().alias("est"))
-        .collect()
-    }
-    for k, v in seen.items():
-        assert _bits(ref_est[k]) == _bits(v)
-
-
-def test_unrolled_dot_plans_without_codegen_fallback(spark):
-    """The point of the rewrite: the projection must be codegen-able —
-    no higher-order-function nodes left in the expression."""
-    df = spark.createDataFrame(_vecs(64), "id long, a array<double>, b array<double>")
-    plan = df.select(dot_named("a", "b", 64).alias("d"))._jdf.queryExecution().executedPlan().toString()
-    assert "aggregate(" not in plan and "zip_with(" not in plan
