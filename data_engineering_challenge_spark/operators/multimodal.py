@@ -1128,20 +1128,11 @@ def _phash_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     multi-file 100-TB layout is already parallel)."""
     # spread keyed on the dup GROUP: a group's docs land in one
     # partition, so the per-worker base-grid lru_cache hits
-    d = spread_scan(
-        load_table(spark, sf_dir, "documents"), spark, f"doc_id div {PHASH_GROUP}"
+    return phash_of_payload_rows(
+        spread_scan(
+            load_table(spark, sf_dir, "documents"), spark, f"doc_id div {PHASH_GROUP}"
+        )
     )
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids = [int(x) for x in pdf["doc_id"]]
-            fps = []
-            for did in ids:
-                _, _, payload = _phash_doc_image(did)
-                fps.append(ahash60_of_bmp(payload))
-            yield pd.DataFrame({"doc_id": ids, "fp": fps})
-
-    return d.select("doc_id").mapInPandas(op, schema=PHASH_SCHEMA)
 
 
 @register(
@@ -1266,7 +1257,8 @@ def incremental_phash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 def phash_of_payload_rows(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """(doc_id, fp) of an arbitrary doc frame via the same synth ->
     REAL-BMP-decode -> aHash pass — streaming-safe (stateless
-    mapInPandas), shared by the landing filter below."""
+    mapInPandas), shared by the batch fingerprint pass and the landing
+    filter below."""
 
     def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -1301,16 +1293,11 @@ def landing_phash_transform(
 def incremental_phash_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """readStream wiring of the landing-zone image filter (file-drop
     source; production swaps in kafka options)."""
-    from ..streaming.pipelines import _stream_dir_for, apply_streaming_confs
+    from ..streaming.pipelines import _read_parquet_stream
 
-    apply_streaming_confs(spark)
-    schema = spark.read.parquet(f"{sf_dir}/documents.parquet").schema
-    raw = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(_stream_dir_for(f"{sf_dir}/documents.parquet", schema.simpleString()))
+    return landing_phash_transform(
+        spark, sf_dir, _read_parquet_stream(spark, f"{sf_dir}/documents.parquet")
     )
-    return landing_phash_transform(spark, sf_dir, raw)
 
 
 # ---------------------------------------------------------------------------
@@ -1403,20 +1390,11 @@ def _wavhash_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     (chunk walk, word alignment, int16 packing), not an arithmetic
     shortcut. One Arrow-batched pass, zero shuffle (group-keyed spread,
     as in _phash_fingerprints)."""
-    d = spread_scan(
-        load_table(spark, sf_dir, "documents"), spark, f"doc_id div {WAVHASH_GROUP}"
+    return wavhash_of_payload_rows(
+        spread_scan(
+            load_table(spark, sf_dir, "documents"), spark, f"doc_id div {WAVHASH_GROUP}"
+        )
     )
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids = [int(x) for x in pdf["doc_id"]]
-            fps = []
-            for did in ids:
-                _, payload = _wavhash_doc_audio(did)
-                fps.append(wavhash60_of_wav(payload))
-            yield pd.DataFrame({"doc_id": ids, "fp": fps})
-
-    return d.select("doc_id").mapInPandas(op, schema=PHASH_SCHEMA)
 
 
 def _wavhash_f_ctes(pfx: str = "") -> str:
@@ -1518,7 +1496,8 @@ def extend_wavhash_index(spark: SparkSession, sf_dir: str, table_dir: str) -> in
 def wavhash_of_payload_rows(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """(doc_id, fp) of an arbitrary doc frame via the same synth ->
     REAL-RIFF-decode -> energy-hash pass — streaming-safe (stateless
-    mapInPandas), shared by the landing filter below."""
+    mapInPandas), shared by the batch fingerprint pass and the landing
+    filter below."""
 
     def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -1578,16 +1557,11 @@ def landing_wavhash_transform(
 def incremental_wavhash_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """readStream wiring of the landing-zone audio filter (file-drop
     source; production swaps in kafka options)."""
-    from ..streaming.pipelines import _stream_dir_for, apply_streaming_confs
+    from ..streaming.pipelines import _read_parquet_stream
 
-    apply_streaming_confs(spark)
-    schema = spark.read.parquet(f"{sf_dir}/documents.parquet").schema
-    raw = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(_stream_dir_for(f"{sf_dir}/documents.parquet", schema.simpleString()))
+    return landing_wavhash_transform(
+        spark, sf_dir, _read_parquet_stream(spark, f"{sf_dir}/documents.parquet")
     )
-    return landing_wavhash_transform(spark, sf_dir, raw)
 
 
 # ---------------------------------------------------------------------------

@@ -15,6 +15,7 @@ from __future__ import annotations
 
 import hashlib
 import os
+import shutil
 import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
@@ -24,20 +25,11 @@ from ..session import apply_runtime_confs
 
 WATERMARK = "10 minutes"
 
-# --------------------------------------------------------------------------
-# State-store provider: RocksDB is the PRODUCTION DEFAULT for every
-# pipeline in this module (round 10, closing SCALING.md's own
-# conclusion). Measured at sf1 + sf10 (STREAM_BENCH_r09_*.json):
-# RocksDB holds dedup state at 28 B/key vs the executor-heap HDFS
-# store's 210 B/key — 7.4x smaller, off-heap, disk-spilling — at
-# wall-clock parity (16.2 vs 18.2 s at sf10). At billions of keys the
-# heap store simply cannot hold state; RocksDB is the only honest
-# 100-TB posture. Opt out per process with SPARK_GRAFT_STATE_STORE=hdfs
-# (e.g. for cold-start studies: the FIRST trigger pays RocksDB's
-# native-library load, a fixed cost the r9 bench documented).
-# --------------------------------------------------------------------------
-
-STATE_STORE_ENV = "SPARK_GRAFT_STATE_STORE"
+# State-store provider: RocksDB for every pipeline in this module.
+# Measured at sf1 + sf10 (STREAM_BENCH_r09_*.json): RocksDB holds dedup
+# state at 28 B/key vs the executor-heap HDFS store's 210 B/key — 7.4x
+# smaller, off-heap, disk-spilling — at wall-clock parity (16.2 vs
+# 18.2 s at sf10). At billions of keys the heap store cannot hold state.
 ROCKSDB_PROVIDER = (
     "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
 )
@@ -45,25 +37,12 @@ ROCKSDB_PROVIDER = (
 
 def apply_streaming_confs(spark: SparkSession) -> SparkSession:
     """Runtime confs for a session about to run streaming work: the
-    batch confs (UTC, AQE, …) plus the state-store provider choice.
+    batch confs (UTC, AQE, …) plus the RocksDB state-store provider.
     The provider conf is read at query START, so setting it here (the
-    head of every pipeline constructor) covers externally-created
-    sessions too."""
+    head of every file-drop source, `_read_parquet_stream`) covers
+    externally-created sessions too."""
     apply_runtime_confs(spark)
-    choice = os.environ.get(STATE_STORE_ENV, "rocksdb").lower()
-    if choice == "rocksdb":
-        spark.conf.set(
-            "spark.sql.streaming.stateStore.providerClass", ROCKSDB_PROVIDER
-        )
-    elif choice == "hdfs":
-        try:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        except Exception:
-            pass  # already at the built-in default
-    else:
-        raise ValueError(
-            f"{STATE_STORE_ENV} must be 'rocksdb' or 'hdfs', got {choice!r}"
-        )
+    spark.conf.set("spark.sql.streaming.stateStore.providerClass", ROCKSDB_PROVIDER)
     return spark
 
 
@@ -91,16 +70,25 @@ def _stream_dir_for(path: str, token: str = "") -> str:
     return d
 
 
-def _read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """readStream over the events parquet (file-source smoke config;
-    production swaps in kafka options without touching the pipeline)."""
-    apply_streaming_confs(spark)  # UTC tz + RocksDB state store
-    schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    raw = (
+def _read_parquet_stream(spark: SparkSession, path: str) -> DataFrame:
+    """The file-drop source of every pipeline: one parquet file per
+    trigger from the staged directory of `path` (file-source smoke
+    config; production swaps in kafka options without touching the
+    pipeline). Applies the streaming confs first (UTC tz + RocksDB
+    state store)."""
+    apply_streaming_confs(spark)
+    schema = spark.read.parquet(path).schema
+    return (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)
-        .parquet(_stream_dir_for(f"{sf_dir}/events.parquet", schema.simpleString()))
+        .parquet(_stream_dir_for(path, schema.simpleString()))
     )
+
+
+def _read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The events file-drop source with `ts` as a watermarkable
+    TIMESTAMP."""
+    raw = _read_parquet_stream(spark, f"{sf_dir}/events.parquet")
     # Watermarks require TIMESTAMP (not NTZ). The parquet `ts` column is
     # TIMESTAMP(NANOS) and arrives as EITHER a raw int64 (nanosAsLong
     # reading) or TIMESTAMP_NTZ depending on session conf state — handle
@@ -182,13 +170,9 @@ def corpus_clean_transform(d: DataFrame) -> DataFrame:
 def clean_corpus_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming corpus-ingest filter: documents stream through the
     stateless cleaning chain (PII scrub + quality gate + fingerprint)."""
-    schema = spark.read.parquet(f"{sf_dir}/documents.parquet").schema
-    raw = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(_stream_dir_for(f"{sf_dir}/documents.parquet", schema.simpleString()))
+    return corpus_clean_transform(
+        _read_parquet_stream(spark, f"{sf_dir}/documents.parquet")
     )
-    return corpus_clean_transform(raw)
 
 
 def run_stream_to_memory(df: DataFrame, name: str, mode: str = "append") -> None:
@@ -381,11 +365,6 @@ def user_totals_tws_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         StatefulProcessorHandle,
     )
 
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-
     class UserTotals(StatefulProcessor):
         def init(self, handle: StatefulProcessorHandle) -> None:
             self.totals = handle.getValueState("totals", "n bigint, tot double")
@@ -519,13 +498,63 @@ def incremental_dedup_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     incremental_dedup's job). Anchored in tests: the streamed pairs
     equal the batch incremental_dedup output restricted to
     corpus-delta pairs."""
-    schema = spark.read.parquet(f"{sf_dir}/documents.parquet").schema
-    raw = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(_stream_dir_for(f"{sf_dir}/documents.parquet", schema.simpleString()))
+    return landing_dedup_transform(
+        spark, sf_dir, _read_parquet_stream(spark, f"{sf_dir}/documents.parquet")
     )
-    return landing_dedup_transform(spark, sf_dir, raw)
+
+
+def _run_publishing_stream(
+    raw: DataFrame, out_path: str, checkpoint: str, build, mode: str = "append"
+) -> None:
+    """The crash-safe publishing sink shared by the upsert pipelines:
+    drive `raw` to completion through foreachBatch, replacing the
+    parquet table at `out_path` with `build(spark_b, batch_df,
+    batch_id, current)` per trigger, where `current` is the live table
+    (None before the first publish).
+
+    Rename-aside publish: write the new table to `.tmp`, rename the
+    live table ASIDE to `.old` (never delete-then-replace — that window
+    loses the table while the stream checkpoint already marks the batch
+    committed), promote `.tmp`, then drop `.old`. Every crash point
+    leaves either the old or the new table restorable, and the next
+    trigger restores `.old` when the live path is missing.
+
+    Publish-window caveat: between `os.replace(out_path, old_path)` and
+    `os.replace(tmp, out_path)` the live path briefly does not exist.
+    Crash recovery restores the WRITER's invariant (committed data is
+    never lost), but a concurrent READER hitting that window sees a
+    missing table rather than the previous version — readers must
+    retry, or fall back to the `.old` path. Acceptable for the
+    single-writer/single-reader harness; a multi-reader deployment
+    would publish via a versioned manifest (sinks/versioned.py)
+    instead."""
+    old_path, tmp = out_path + ".old", out_path + ".tmp"
+
+    def publish_batch(batch_df: DataFrame, batch_id: int) -> None:
+        spark_b = batch_df.sparkSession
+        # Crash recovery: a previous publish that renamed the live table
+        # aside but died before promoting the new one leaves only
+        # `.old` — restore it so committed data is never dropped.
+        if not os.path.isdir(out_path) and os.path.isdir(old_path):
+            os.replace(old_path, out_path)
+        current = spark_b.read.parquet(out_path) if os.path.isdir(out_path) else None
+        build(spark_b, batch_df, batch_id, current).write.mode("overwrite").parquet(tmp)
+        shutil.rmtree(old_path, ignore_errors=True)
+        if os.path.isdir(out_path):
+            os.replace(out_path, old_path)
+        os.replace(tmp, out_path)
+        shutil.rmtree(old_path, ignore_errors=True)
+
+    q = (
+        raw.writeStream.outputMode(mode)
+        .option("checkpointLocation", checkpoint)
+        .foreachBatch(publish_batch)
+        .start()
+    )
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
 
 
 def _run_landing_span_stream(
@@ -539,65 +568,24 @@ def _run_landing_span_stream(
     """Shared machinery of the landing-zone span pipelines: stream the
     delta docs, run `batch_op(spark_b, table_dir, delta)` per trigger
     (foreachBatch — span merging needs per-doc ordered windows, a
-    batch-only operator), keyed-upsert the result into `out_path` with
-    the rename-aside atomic publish + crash recovery."""
-    import os as _os
-    import shutil as _shutil
-
+    batch-only operator) and keyed-upsert the result into `out_path`
+    through the rename-aside publish."""
     from ..operators.dedup import INCR_DELTA_FROM, _incr_bucket
     from ..operators.merge import merge_upsert
     from ..operators.span_dedup import build_span_index, span_index_dir
 
-    apply_streaming_confs(spark)
-    table_dir = span_index_dir(sf_dir)
-    if not _os.path.exists(_os.path.join(table_dir, "manifest.json")):
-        build_span_index(spark, sf_dir, table_dir)
     if raw is None:
-        schema = spark.read.parquet(f"{sf_dir}/documents.parquet").schema
-        raw = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(
-                _stream_dir_for(f"{sf_dir}/documents.parquet", schema.simpleString())
-            )
-        )
+        raw = _read_parquet_stream(spark, f"{sf_dir}/documents.parquet")
+    table_dir = span_index_dir(sf_dir)
+    if not os.path.exists(os.path.join(table_dir, "manifest.json")):
+        build_span_index(spark, sf_dir, table_dir)
 
-    def probe_batch(batch_df: DataFrame, batch_id: int) -> None:
-        spark_b = batch_df.sparkSession
-        # Crash recovery: a previous publish that renamed the live table
-        # aside but died before promoting the new one leaves only
-        # `.old` — restore it so committed data is never dropped.
-        old_path = out_path + ".old"
-        if not _os.path.isdir(out_path) and _os.path.isdir(old_path):
-            _os.replace(old_path, out_path)
+    def build(spark_b, batch_df, batch_id, current):
         delta = batch_df.filter(_incr_bucket(F.col("doc_id")) >= INCR_DELTA_FROM)
         out = batch_op(spark_b, table_dir, delta)
-        if _os.path.isdir(out_path):
-            current = spark_b.read.parquet(out_path)
-            merged = merge_upsert(current, out, ["doc_id"])
-        else:
-            merged = out
-        tmp = out_path + ".tmp"
-        merged.write.mode("overwrite").parquet(tmp)
-        # Atomic-enough publish: rename the live table ASIDE (never
-        # delete-then-replace — that window loses the table while the
-        # stream checkpoint already marks the batch committed), promote
-        # the new table, then drop the old copy. Every crash point
-        # leaves either the old or the new table restorable.
-        _shutil.rmtree(old_path, ignore_errors=True)
-        if _os.path.isdir(out_path):
-            _os.replace(out_path, old_path)
-        _os.replace(tmp, out_path)
-        _shutil.rmtree(old_path, ignore_errors=True)
+        return out if current is None else merge_upsert(current, out, ["doc_id"])
 
-    q = (
-        raw.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .foreachBatch(probe_batch)
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
+    _run_publishing_stream(raw, out_path, checkpoint, build)
 
 
 def run_incremental_span_filter(
@@ -670,15 +658,8 @@ def quality_score_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     trigger's docs, which is what the test pins."""
     from ..operators.quality_probe import _load_weights
 
-    apply_streaming_confs(spark)
-    w = _load_weights(spark, sf_dir)
-    schema = spark.read.parquet(f"{sf_dir}/documents.parquet").schema
-    raw = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(_stream_dir_for(f"{sf_dir}/documents.parquet", schema.simpleString()))
-    )
-    return quality_score_transform(raw, w)
+    raw = _read_parquet_stream(spark, f"{sf_dir}/documents.parquet")
+    return quality_score_transform(raw, _load_weights(spark, sf_dir))
 
 
 def run_lm_score_stream(
@@ -696,67 +677,22 @@ def run_lm_score_stream(
     flagged). Per-doc scoring needs an aggregation over the bigram
     stream, so this runs under foreachBatch (per-trigger batch
     semantics) with the same idempotent doc_id upsert + rename-aside
-    atomic publish as the landing-zone span pipelines: per-trigger
-    output ≡ batch `lm_doc_scores` of that trigger's docs, and a
-    replayed batch after restart rewrites the same rows.
-
-    Publish-window caveat (all rename-aside sinks here): between
-    `os.replace(out_path, old_path)` and `os.replace(tmp, out_path)`
-    the live path briefly does not exist. Crash recovery restores the
-    WRITER's invariant (committed data is never lost), but a concurrent
-    READER hitting that window sees a missing table rather than the
-    previous version — readers must retry, or fall back to the `.old`
-    path. Acceptable for the single-writer/single-reader harness; a
-    multi-reader deployment would publish via a versioned manifest
-    (sinks/versioned.py) instead."""
-    import shutil as _shutil
-
+    publish (`_run_publishing_stream`) as the landing-zone span
+    pipelines: per-trigger output ≡ batch `lm_doc_scores` of that
+    trigger's docs, and a replayed batch after restart rewrites the
+    same rows."""
     from ..operators.lm import lm_doc_scores, load_lm_model
     from ..operators.merge import merge_upsert
 
-    apply_streaming_confs(spark)
-    c12, c1, vctx = load_lm_model(spark, sf_dir)
     if raw is None:
-        schema = spark.read.parquet(f"{sf_dir}/documents.parquet").schema
-        raw = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(
-                _stream_dir_for(f"{sf_dir}/documents.parquet", schema.simpleString())
-            )
-        )
+        raw = _read_parquet_stream(spark, f"{sf_dir}/documents.parquet")
+    c12, c1, vctx = load_lm_model(spark, sf_dir)
 
-    def score_batch(batch_df: DataFrame, batch_id: int) -> None:
-        spark_b = batch_df.sparkSession
-        old_path = out_path + ".old"
-        # Crash recovery: a publish that renamed the live table aside
-        # but died before promoting leaves only `.old` — restore it.
-        if not os.path.isdir(out_path) and os.path.isdir(old_path):
-            os.replace(old_path, out_path)
-        out = lm_doc_scores(
-            batch_df.select("doc_id", "source", "text"), c12, c1, vctx
-        )
-        if os.path.isdir(out_path):
-            current = spark_b.read.parquet(out_path)
-            merged = merge_upsert(current, out, ["doc_id"])
-        else:
-            merged = out
-        tmp = out_path + ".tmp"
-        merged.write.mode("overwrite").parquet(tmp)
-        _shutil.rmtree(old_path, ignore_errors=True)
-        if os.path.isdir(out_path):
-            os.replace(out_path, old_path)
-        os.replace(tmp, out_path)
-        _shutil.rmtree(old_path, ignore_errors=True)
+    def build(spark_b, batch_df, batch_id, current):
+        out = lm_doc_scores(batch_df.select("doc_id", "source", "text"), c12, c1, vctx)
+        return out if current is None else merge_upsert(current, out, ["doc_id"])
 
-    q = (
-        raw.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .foreachBatch(score_batch)
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
+    _run_publishing_stream(raw, out_path, checkpoint, build)
 
 
 def run_scd2_stream(
@@ -783,53 +719,25 @@ def run_scd2_stream(
     defensively on the keys (arbitrary survivor within a trigger; a
     CDC feed that needs last-writer-wins should order upstream).
     Publish uses the rename-aside protocol shared by the landing-zone
-    pipelines (see run_lm_score_stream for the reader-side
-    publish-window caveat). At 100 TB the per-trigger cost is two
-    delta-sized joins against the current slice — the history is only
-    ever unioned.
+    pipelines (`_run_publishing_stream`, which also documents the
+    reader-side publish-window caveat). At 100 TB the per-trigger cost
+    is two delta-sized joins against the current slice — the history
+    is only ever unioned.
     """
-    import shutil as _shutil
-
     from ..operators.merge import scd2_apply
 
-    apply_streaming_confs(spark)
     if raw is None:
-        schema = spark.read.parquet(source_path).schema
-        raw = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(_stream_dir_for(source_path, schema.simpleString()))
-        )
+        raw = _read_parquet_stream(spark, source_path)
 
-    def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        spark_b = batch_df.sparkSession
-        old_path = out_path + ".old"
-        if not os.path.isdir(out_path) and os.path.isdir(old_path):
-            os.replace(old_path, out_path)
+    def build(spark_b, batch_df, batch_id, current):
         delta = batch_df.select(*keys, *attrs).dropDuplicates(keys)
-        if os.path.isdir(out_path):
-            target = spark_b.read.parquet(out_path)
-        else:
-            target = (
+        if current is None:
+            current = (
                 delta.limit(0)
                 .withColumn("valid_from", F.lit(0).cast("int"))
                 .withColumn("valid_to", F.lit(None).cast("int"))
                 .withColumn("is_current", F.lit(True))
             )
-        merged = scd2_apply(target, delta, keys, attrs, batch_id=int(batch_id) + 1)
-        tmp = out_path + ".tmp"
-        merged.write.mode("overwrite").parquet(tmp)
-        _shutil.rmtree(old_path, ignore_errors=True)
-        if os.path.isdir(out_path):
-            os.replace(out_path, old_path)
-        os.replace(tmp, out_path)
-        _shutil.rmtree(old_path, ignore_errors=True)
+        return scd2_apply(current, delta, keys, attrs, batch_id=int(batch_id) + 1)
 
-    q = (
-        raw.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .foreachBatch(apply_batch)
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
+    _run_publishing_stream(raw, out_path, checkpoint, build)

@@ -18,40 +18,22 @@ Scale notes (100 TB posture):
 - Watermarked state bounds the streaming agg's memory; buckets stop
   receiving updates once the watermark passes, after which their
   rollup rows are final.
-- The swap is write-temp-then-replace: readers of the rollup path
-  never observe a half-written table.
+- The swap is the rename-aside publish of
+  `pipelines._run_publishing_stream`: the new table is written to
+  `.tmp`, the live table is renamed to `.old` before `.tmp` is
+  promoted, and a trigger that finds only `.old` restores it. Readers
+  never see a half-written table, but may briefly find the live path
+  missing mid-swap.
 """
 
 from __future__ import annotations
 
-import os
-import shutil
-
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql import SparkSession
 
 from ..operators.merge import merge_upsert
-from .pipelines import WATERMARK, _read_events_stream
+from .pipelines import _run_publishing_stream, hourly_event_counts_stream
 
 _KEYS = ["window_start", "event_type"]
-
-
-def _hourly_updates(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = _read_events_stream(spark, sf_dir)
-    return (
-        e.withWatermark("ts", WATERMARK)
-        .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.sum(F.col("value").cast("decimal(18,4)")).cast("double").alias("total_value"),
-        )
-        .select(
-            F.col("w.start").cast("timestamp_ntz").alias("window_start"),
-            "event_type",
-            "n_events",
-            "total_value",
-        )
-    )
 
 
 def run_incremental_rollup(
@@ -59,25 +41,10 @@ def run_incremental_rollup(
 ) -> None:
     """Drive the stream to completion, maintaining `rollup_path`."""
 
-    def upsert_batch(batch_df: DataFrame, batch_id: int) -> None:
-        spark_b = batch_df.sparkSession
-        if os.path.isdir(rollup_path):
-            current = spark_b.read.parquet(rollup_path)
-            merged = merge_upsert(current, batch_df, _KEYS)
-        else:
-            merged = batch_df
-        tmp = rollup_path + ".tmp"
-        merged.write.mode("overwrite").parquet(tmp)
-        if os.path.isdir(rollup_path):
-            shutil.rmtree(rollup_path)
-        os.replace(tmp, rollup_path)
+    def build(spark_b, batch_df, batch_id, current):
+        return batch_df if current is None else merge_upsert(current, batch_df, _KEYS)
 
-    q = (
-        _hourly_updates(spark, sf_dir)
-        .writeStream.outputMode("update")
-        .option("checkpointLocation", checkpoint)
-        .foreachBatch(upsert_batch)
-        .start()
+    _run_publishing_stream(
+        hourly_event_counts_stream(spark, sf_dir), rollup_path, checkpoint, build,
+        mode="update",
     )
-    q.processAllAvailable()
-    q.stop()

@@ -364,6 +364,75 @@ def test_incremental_rollup_restart_is_idempotent(spark, sf_dir, tmp_path):
     assert first == second and len(first) > 0
 
 
+def test_incremental_rollup_survives_crash_mid_publish(
+    spark, sf_dir, tmp_path, monkeypatch
+):
+    """A crash between renaming the live rollup aside and promoting the
+    new one must not lose committed buckets: the previous table
+    survives (live or `.old`), and a restart from the same checkpoint
+    restores it, replays the failed trigger and completes the rollup.
+    Covers the rename-aside publish shared by every upsert sink."""
+    import os
+    import shutil
+
+    import pyarrow.parquet as pq
+    import pytest
+    from pyspark.errors import StreamingQueryException
+
+    from data_engineering_challenge_spark.streaming.pipelines import _stream_dir_for
+    from data_engineering_challenge_spark.streaming.rollup import (
+        run_incremental_rollup,
+    )
+
+    # night one: the earlier half of the events; night two (later
+    # half, so no row is behind the watermark) lands as a second file
+    events = pq.read_table(os.path.join(sf_dir, "events.parquet")).sort_by("ts")
+    half = events.num_rows // 2
+    lz = tmp_path / "lz"
+    lz.mkdir()
+    src = str(lz / "events.parquet")
+    pq.write_table(events.slice(0, half), src)
+    rollup, ckpt = str(tmp_path / "rollup"), str(tmp_path / "ckpt")
+    run_incremental_rollup(spark, str(lz), rollup, ckpt)
+    first = sorted(map(tuple, spark.read.parquet(rollup).collect()))
+    assert first
+
+    sdir = _stream_dir_for(src, spark.read.parquet(src).schema.simpleString())
+    pq.write_table(events.slice(half), os.path.join(sdir, "night2.parquet"))
+
+    real_replace = os.replace
+    crashed = []
+
+    def crash_once(a, b):
+        if a == rollup + ".tmp" and not crashed:
+            crashed.append(a)
+            raise OSError("crash before promoting the new rollup")
+        return real_replace(a, b)
+
+    try:
+        monkeypatch.setattr(os, "replace", crash_once)
+        with pytest.raises(StreamingQueryException):
+            run_incremental_rollup(spark, str(lz), rollup, ckpt)
+        assert crashed
+        survivors = [p for p in (rollup, rollup + ".old") if os.path.isdir(p)]
+        assert survivors, "the committed rollup was deleted"
+        assert sorted(map(tuple, spark.read.parquet(survivors[0]).collect())) == first
+
+        run_incremental_rollup(spark, str(lz), rollup, ckpt)
+    finally:
+        shutil.rmtree(sdir)
+    assert not os.path.exists(rollup + ".old")
+    got = spark.read.parquet(rollup)
+    want = events_hourly(spark, sf_dir)
+    ok, detail = compare(
+        got.columns,
+        [tuple(r) for r in got.collect()],
+        want.columns,
+        [tuple(r) for r in want.collect()],
+    )
+    assert ok, detail
+
+
 def test_streaming_incremental_dedup_matches_batch(spark, sf_dir, tmp_path, monkeypatch):
     """The landing-zone near-dup filter: streamed delta docs joined
     against the frozen MinHash index emit exactly the corpus-delta
@@ -464,73 +533,49 @@ def test_row_minhash_signature_matches_batch_signatures(spark, sf_dir):
     assert rowwise == batch
 
 
-def test_rocksdb_state_store_is_default_for_started_pipelines(spark, sf_dir):
-    """Round-10 production default: every pipeline constructor routes
-    through apply_streaming_confs, which selects the RocksDB state
-    store (28 B/key vs heap's 210 B/key at wall parity — the
-    billions-of-keys posture, STREAM_BENCH_r09). Pinned on a STARTED
-    stateful query: the progress log's state operator must report
-    RocksDB custom metrics, not just the session conf."""
+def test_rocksdb_state_store_is_default_for_started_pipelines(
+    spark, sf_dir, tmp_path, monkeypatch
+):
+    """Every pipeline's file-drop source routes through
+    apply_streaming_confs, which selects the RocksDB state store
+    (28 B/key vs heap's 210 B/key at wall parity — the billions-of-keys
+    posture, STREAM_BENCH_r09). Pinned on STARTED stateful queries: the
+    progress log's state operator must report RocksDB custom metrics,
+    not just the session conf. The landing-zone near-dup stream starts
+    from an unset provider conf, so it must pin RocksDB itself."""
     import json
 
     from data_engineering_challenge_spark.streaming.pipelines import (
         ROCKSDB_PROVIDER,
         dedup_events_stream,
+        incremental_dedup_stream,
     )
+
+    def state_metrics(s, name):
+        q = s.writeStream.outputMode("append").format("memory").queryName(name).start()
+        try:
+            q.processAllAvailable()
+            metrics = set()
+            for prog in q.recentProgress:
+                if isinstance(prog, str):
+                    prog = json.loads(prog)
+                for so in prog.get("stateOperators", []):
+                    metrics |= set((so.get("customMetrics") or {}).keys())
+        finally:
+            q.stop()
+        return metrics
 
     s = dedup_events_stream(spark, sf_dir)  # stateful: dropDuplicates state
     assert (
         spark.conf.get("spark.sql.streaming.stateStore.providerClass")
         == ROCKSDB_PROVIDER
     )
-    q = (
-        s.writeStream.outputMode("append")
-        .format("memory")
-        .queryName("rocksdb_default_probe")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        metrics = set()
-        for prog in q.recentProgress:
-            if isinstance(prog, str):
-                prog = json.loads(prog)
-            for so in prog.get("stateOperators", []):
-                metrics |= set((so.get("customMetrics") or {}).keys())
-    finally:
-        q.stop()
+    metrics = state_metrics(s, "rocksdb_default_probe")
     assert any(m.startswith("rocksdb") for m in metrics), sorted(metrics)
 
-
-def test_state_store_env_opt_out_restores_heap_provider(spark, sf_dir, monkeypatch):
-    """SPARK_GRAFT_STATE_STORE=hdfs is the documented opt-out (e.g.
-    cold-start studies): the provider conf must revert to the built-in
-    heap default, and an invalid value must fail fast."""
-    import pytest as _pytest
-
-    from data_engineering_challenge_spark.streaming.pipelines import (
-        ROCKSDB_PROVIDER,
-        STATE_STORE_ENV,
-        apply_streaming_confs,
-    )
-
-    try:
-        monkeypatch.setenv(STATE_STORE_ENV, "hdfs")
-        apply_streaming_confs(spark)
-        default_provider = spark.conf.get(
-            "spark.sql.streaming.stateStore.providerClass",
-            "HDFSBackedStateStoreProvider",
-        )
-        assert "rocksdb" not in (default_provider or "").lower()
-
-        monkeypatch.setenv(STATE_STORE_ENV, "nonsense")
-        with _pytest.raises(ValueError, match="rocksdb"):
-            apply_streaming_confs(spark)
-    finally:
-        # restore the engine default for the rest of the session
-        monkeypatch.delenv(STATE_STORE_ENV, raising=False)
-        apply_streaming_confs(spark)
-    assert (
-        spark.conf.get("spark.sql.streaming.stateStore.providerClass")
-        == ROCKSDB_PROVIDER
-    )
+    # stateful: the same-batch pair dropDuplicates
+    monkeypatch.setenv("SPARK_GRAFT_INDEX_DIR", str(tmp_path / "idx"))
+    spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
+    s = incremental_dedup_stream(spark, sf_dir)
+    metrics = state_metrics(s, "rocksdb_landing_probe")
+    assert any(m.startswith("rocksdb") for m in metrics), sorted(metrics)

@@ -134,18 +134,12 @@ def drive_distributed_sink(df: DataFrame, mode: str) -> tuple[float, dict]:
     return sec, state
 
 
-ROCKSDB_PROVIDER = (
-    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-)
-
-
 def run_all(
     spark: SparkSession, sf_dir: str, chunks: int, drop: str, n_rows: int,
     only: set[str] | None = None,
 ) -> dict[str, dict]:
-    """One full pass over the pipelines with whatever state-store
-    provider the session currently configures. `only` restricts to a
-    named subset (focused big-SF probes — the bench ONLY pattern);
+    """One full pass over the pipelines on the engine's RocksDB state
+    store. `only` restricts to a named subset (focused big-SF probes — the bench ONLY pattern);
     every selected pipeline still reports, nothing is silently capped."""
     results: dict[str, dict] = {}
 
@@ -278,14 +272,6 @@ def main() -> None:
     ap.add_argument("--sf-dir", default=os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
     ap.add_argument("--chunks", type=int, default=16)
     ap.add_argument("--cpus", type=int, default=None)
-    ap.add_argument(
-        "--state-store",
-        choices=("hdfs", "rocksdb", "both"),
-        default="rocksdb",
-        help="state store provider: RocksDB (off-heap + native, the "
-        "engine's production default since round 10), executor-heap "
-        "HDFS-backed (the opt-out), or both back to back for comparison",
-    )
     ap.add_argument("--out", default=None, help="output json path (default STREAM_BENCH.json)")
     ap.add_argument(
         "--pipelines", default=None,
@@ -298,40 +284,27 @@ def main() -> None:
     spark = get_session("stream-bench", cpus=args.cpus)
     drop, n_rows = stage_chunks(spark, args.sf_dir, args.chunks)
 
-    stores = ("hdfs", "rocksdb") if args.state_store == "both" else (args.state_store,)
-    by_store: dict[str, dict] = {}
-    for store in stores:
-        # route through the engine's own provider switch: the pipeline
-        # constructors call apply_streaming_confs (which reads this env
-        # var), so setting the conf directly would be overridden by the
-        # first pipeline that starts
-        os.environ[P.STATE_STORE_ENV] = store
-        P.apply_streaming_confs(spark)
-        by_store[store] = run_all(spark, args.sf_dir, args.chunks, drop, n_rows, only=only)
+    P.apply_streaming_confs(spark)
+    results = run_all(spark, args.sf_dir, args.chunks, drop, n_rows, only=only)
 
-    first = by_store[stores[0]]
     # headline = hourly_agg when present (the historical metric), else
     # the first selected pipeline (focused --pipelines probes)
-    head_name = "hourly_agg" if "hourly_agg" in first else next(iter(first))
+    head_name = "hourly_agg" if "hourly_agg" in results else next(iter(results))
     line = {
         "metric": "stream_events_per_sec",
-        "value": first[head_name]["events_per_sec"],
+        "value": results[head_name]["events_per_sec"],
         "unit": "rows/sec",
         "sf_dir": args.sf_dir,
         "n_events": n_rows,
         "chunks": args.chunks,
-        "state_stores": list(stores),
-        "pipelines": first if len(stores) == 1 else None,
-        "by_store": by_store,
+        "pipelines": results,
     }
     out = args.out or os.path.join(
         os.path.dirname(os.path.abspath(__file__)), "..", "STREAM_BENCH.json"
     )
     with open(out, "w") as fh:
         json.dump(line, fh, indent=2)
-    print(json.dumps({k: v for k, v in line.items() if k != "by_store"}))
-    for store, res in by_store.items():
-        print(store, json.dumps({k: {"sec": v["sec"]} for k, v in res.items()}))
+    print(json.dumps(line))
 
 
 if __name__ == "__main__":
