@@ -634,10 +634,9 @@ def run_incremental_span_rewrite(
     a separate rewrite job."""
     from ..operators.span_dedup import apply_incremental_span_removal
 
-    def op(spark_b, table_dir, delta):
-        return apply_incremental_span_removal(spark_b, table_dir, delta)
-
-    _run_landing_span_stream(spark, sf_dir, out_path, checkpoint, raw, op)
+    _run_landing_span_stream(
+        spark, sf_dir, out_path, checkpoint, raw, apply_incremental_span_removal
+    )
 
 
 def quality_score_transform(d: DataFrame, w: list[float]) -> DataFrame:
