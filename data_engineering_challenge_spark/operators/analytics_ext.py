@@ -676,15 +676,16 @@ def build_bpe_artifacts(spark: SparkSession, sf_dir: str, table_dir: str) -> int
 
 def _bpe_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, n_base_tokens, n_bpe_tokens) from the stored artifacts,
-    building them on first use."""
+    building them on first use (`counts` is the table the build writes
+    last)."""
     import os as _os
 
-    from ..sinks.versioned import read_snapshot
+    from ..sinks.versioned import ensure_snapshot, read_snapshot
 
     table_dir = bpe_table_dir(sf_dir)
-    if not _os.path.exists(_os.path.join(table_dir, "counts", "manifest.json")):
-        build_bpe_artifacts(spark, sf_dir, table_dir)
-    return read_snapshot(spark, _os.path.join(table_dir, "counts"))
+    counts_dir = _os.path.join(table_dir, "counts")
+    ensure_snapshot(counts_dir, lambda: build_bpe_artifacts(spark, sf_dir, table_dir))
+    return read_snapshot(spark, counts_dir)
 
 
 def bpe_apply_merges(

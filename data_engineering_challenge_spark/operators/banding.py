@@ -23,8 +23,6 @@ their numbers, are in OPTIMIZATION_r11.md.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import Column, DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
@@ -205,27 +203,17 @@ def incremental_fp_pairs(
     spark: SparkSession, sf_dir: str, table_dir: str, build_fn, fp_fn, max_hamming: int
 ) -> DataFrame:
     """Incremental fingerprint probe: the NEW batch's payloads
-    (incremental buckets >= INCR_DELTA_FROM) are fingerprinted fresh by
-    `fp_fn` and probed against the FROZEN (doc_id, fp) index at
-    `table_dir` (built by `build_fn` when missing) — read back as a
-    16-byte-row snapshot scan, never a corpus re-decode."""
+    (`dedup.is_delta_doc`) are fingerprinted fresh by `fp_fn` and probed
+    against the FROZEN (doc_id, fp) index at `table_dir` (built by
+    `build_fn` when missing) — read back as a 16-byte-row snapshot
+    scan, never a corpus re-decode."""
     from ..registry import track_persist
-    from ..sinks.versioned import read_snapshot
-    from .dedup import INCR_DELTA_FROM, _incr_bucket
+    from ..sinks.versioned import ensure_snapshot, read_corpus_snapshot
+    from .dedup import is_delta_doc
 
-    if not os.path.exists(os.path.join(table_dir, "manifest.json")):
-        build_fn(spark, sf_dir, table_dir)
-    # corpus-bucket filter: a folded snapshot (v2+) also holds delta
-    # fingerprints — unioning them with the freshly computed delta
-    # would duplicate band rows (same guard as incremental_dedup)
-    corpus = read_snapshot(spark, table_dir).filter(
-        _incr_bucket(F.col("doc_id")) < INCR_DELTA_FROM
-    )
-    delta = track_persist(
-        fp_fn(spark, sf_dir).filter(
-            _incr_bucket(F.col("doc_id")) >= INCR_DELTA_FROM
-        )
-    )
+    ensure_snapshot(table_dir, lambda: build_fn(spark, sf_dir, table_dir))
+    corpus = read_corpus_snapshot(spark, table_dir)
+    delta = track_persist(fp_fn(spark, sf_dir).filter(is_delta_doc("doc_id")))
     delta_bands = hamming_bands(delta)
     union_bands = hamming_bands(corpus).unionByName(delta_bands)
     a, b = delta_bands.alias("a"), union_bands.alias("b")
@@ -260,14 +248,11 @@ def landing_fp_transform(
     by `row_fp_fn` (stateless Arrow pass) and probed against the FROZEN
     index at `table_dir` via a stream-static band join."""
     from ..registry import track_persist
-    from ..sinks.versioned import read_snapshot
-    from .dedup import INCR_DELTA_FROM, _incr_bucket
+    from ..sinks.versioned import ensure_snapshot, read_corpus_snapshot
+    from .dedup import is_delta_doc
 
-    if not os.path.exists(os.path.join(table_dir, "manifest.json")):
-        build_fn(spark, sf_dir, table_dir)
-    corpus = read_snapshot(spark, table_dir).filter(
-        _incr_bucket(F.col("doc_id")) < INCR_DELTA_FROM
-    )
+    ensure_snapshot(table_dir, lambda: build_fn(spark, sf_dir, table_dir))
+    corpus = read_corpus_snapshot(spark, table_dir)
     # static side persisted pre-partitioned on the join key so every
     # micro-batch's probe reuses the cached distribution (without it the
     # per-trigger re-exchange of the static side caps throughput)
@@ -276,7 +261,7 @@ def landing_fp_transform(
         .withColumnsRenamed({"doc_id": "doc_a", "fp": "fp_a"})
         .repartition("c", "chunk")
     )
-    delta = raw.filter(_incr_bucket(F.col("doc_id")) >= INCR_DELTA_FROM)
+    delta = raw.filter(is_delta_doc("doc_id"))
     delta_bands = hamming_bands(row_fp_fn(delta)).withColumnsRenamed(
         {"doc_id": "doc_b", "fp": "fp_b"}
     )

@@ -27,7 +27,7 @@ Scale design (100 TB posture):
 from __future__ import annotations
 
 
-from pyspark.sql import DataFrame, SparkSession, Window as W
+from pyspark.sql import Column, DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
@@ -505,13 +505,15 @@ def _incr_bucket_sql(col: str) -> str:
     )
 
 
+def is_delta_doc_sql(col: str) -> str:
+    """DuckDB twin of :func:`is_delta_doc` over the SQL column `col`."""
+    return f"{_incr_bucket_sql(col)} >= {INCR_DELTA_FROM}"
+
+
 # delta-involvement filter over a pair table's (doc_a, doc_b): the
 # oracle twin of the incremental probes' bucket split (it commutes with
 # the pair join, so it can apply after a full-corpus pairs CTE)
-_INCR_PAIR_FILTER_SQL = (
-    f"({_incr_bucket_sql('doc_a')} >= {INCR_DELTA_FROM}"
-    f" OR {_incr_bucket_sql('doc_b')} >= {INCR_DELTA_FROM})"
-)
+_INCR_PAIR_FILTER_SQL = f"({is_delta_doc_sql('doc_a')} OR {is_delta_doc_sql('doc_b')})"
 
 
 def _incr_bucket(col):
@@ -522,6 +524,12 @@ def _incr_bucket(col):
         F.conv(F.substring(F.md5(keyed.cast("binary")), 1, 8), 16, 10).cast("long")
         % INCR_DELTA_BUCKETS
     )
+
+
+def is_delta_doc(col: str) -> Column:
+    """True for the docs of the current delta batch: the one split
+    predicate of every incremental family (the corpus is its negation)."""
+    return _incr_bucket(F.col(col)) >= INCR_DELTA_FROM
 
 
 def _grams_of(docs: DataFrame) -> DataFrame:
@@ -538,7 +546,7 @@ def minhash_index_dir(sf_dir: str) -> str:
     fingerprint_dir)."""
     from ..sinks.versioned import fingerprint_dir
 
-    return fingerprint_dir(sf_dir, "documents")
+    return fingerprint_dir(sf_dir, "documents", prefix="minhash2_")
 
 
 def build_minhash_index(spark: SparkSession, sf_dir: str, table_dir: str) -> int:
@@ -546,14 +554,14 @@ def build_minhash_index(spark: SparkSession, sf_dir: str, table_dir: str) -> int
     INCR_DELTA_FROM) and publish them as a versioned snapshot. Returns
     the published version. One corpus scan; the snapshot is the only
     artifact the incremental path ever reads."""
-    from ..sinks.versioned import write_snapshot
+    from ..sinks.versioned import write_corpus_snapshot
 
     d = spread_scan(  # single-file scan at test SFs: see catalog.spread_scan
         load_table(spark, sf_dir, "documents"), spark, "doc_id"
     )
-    corpus = d.filter(_incr_bucket(F.col("doc_id")) < INCR_DELTA_FROM)
+    corpus = d.filter(~is_delta_doc("doc_id"))
     sig = _minhash_signatures(spark, sf_dir, grams=_grams_of(corpus))
-    return write_snapshot(sig, table_dir)
+    return write_corpus_snapshot(sig, table_dir)
 
 
 def row_minhash_digests(grams_col):
@@ -615,20 +623,14 @@ def extend_minhash_index(spark: SparkSession, sf_dir: str, table_dir: str) -> in
     the delta pays the signature pipeline. Readers mid-dedup keep v_n
     (snapshot isolation); rollback to any retained version is
     metadata-only (sinks/versioned.py)."""
-    from ..sinks.versioned import read_snapshot, write_snapshot
+    from ..sinks.versioned import fold_delta_snapshot
 
-    # Bucket-filter the snapshot read: a snapshot that already holds a
-    # folded delta (v2+) must not contribute those rows again, or a
-    # second fold would duplicate them. Makes the fold idempotent.
-    corpus_sig = read_snapshot(spark, table_dir).filter(
-        _incr_bucket(F.col("doc_id")) < INCR_DELTA_FROM
-    )
     d = spread_scan(  # single-file scan at test SFs: see catalog.spread_scan
         load_table(spark, sf_dir, "documents"), spark, "doc_id"
     )
-    delta = d.filter(_incr_bucket(F.col("doc_id")) >= INCR_DELTA_FROM)
+    delta = d.filter(is_delta_doc("doc_id"))
     delta_sig = _minhash_signatures(spark, sf_dir, grams=_grams_of(delta))
-    return write_snapshot(corpus_sig.unionByName(delta_sig), table_dir)
+    return fold_delta_snapshot(spark, table_dir, delta_sig)
 
 
 @register(
@@ -655,29 +657,17 @@ def extend_minhash_index(spark: SparkSession, sf_dir: str, table_dir: str) -> in
     tags=("dedup", "lsh", "incremental", "extension"),
 )
 def incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os as _os
-
-    from ..sinks.versioned import read_snapshot
+    from ..sinks.versioned import ensure_snapshot, read_corpus_snapshot
 
     table_dir = minhash_index_dir(sf_dir)
-    if not _os.path.exists(_os.path.join(table_dir, "manifest.json")):
-        build_minhash_index(spark, sf_dir, table_dir)
-    # Restrict the snapshot read to corpus buckets: after
-    # extend_minhash_index folds the delta into v+1, the latest
-    # snapshot ALSO holds delta signatures — unioning them with the
-    # freshly computed delta would double-count (inflated band-bucket
-    # sizes near MAX_BAND_BUCKET, duplicate sa/sb join rows). The
-    # filter is a hash predicate on doc_id — the corpus side is still
-    # never re-tokenized.
-    corpus_sig = (
-        read_snapshot(spark, table_dir)
-        .filter(_incr_bucket(F.col("doc_id")) < INCR_DELTA_FROM)
-        .withColumn("is_delta", F.lit(False))
+    ensure_snapshot(table_dir, lambda: build_minhash_index(spark, sf_dir, table_dir))
+    corpus_sig = read_corpus_snapshot(spark, table_dir).withColumn(
+        "is_delta", F.lit(False)
     )
     d = spread_scan(  # single-file scan at test SFs: see catalog.spread_scan
         load_table(spark, sf_dir, "documents"), spark, "doc_id"
     )
-    delta_docs = d.filter(_incr_bucket(F.col("doc_id")) >= INCR_DELTA_FROM)
+    delta_docs = d.filter(is_delta_doc("doc_id"))
     delta_sig = _minhash_signatures(
         spark, sf_dir, grams=_grams_of(delta_docs)
     ).withColumn("is_delta", F.lit(True))

@@ -260,13 +260,10 @@ def build_lm_model(spark: SparkSession, sf_dir: str, table_dir: str) -> int:
 def load_lm_model(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame, int]:
     """Latest stored model (trained+published on first use): (c12 frame
     keyed gh, c1 frame keyed ph, vctx scalar)."""
-    import os as _os
-
-    from ..sinks.versioned import read_snapshot
+    from ..sinks.versioned import ensure_snapshot, read_snapshot
 
     table_dir = lm_model_dir(sf_dir)
-    if not _os.path.exists(_os.path.join(table_dir, "manifest.json")):
-        build_lm_model(spark, sf_dir, table_dir)
+    ensure_snapshot(table_dir, lambda: build_lm_model(spark, sf_dir, table_dir))
     snap = read_snapshot(spark, table_dir)
     c12 = snap.filter(F.col("kind") == "g").select(
         F.col("key").alias("gh"), F.col("cnt").alias("c12")
@@ -414,32 +411,23 @@ def _train_counts(stream: DataFrame) -> DataFrame:
 
 
 def build_lm_corpus_counts(spark: SparkSession, sf_dir: str, table_dir: str) -> int:
-    """Count the CORPUS slice's (incremental bucket < INCR_DELTA_FROM)
-    train bigrams and publish (kind, key, cnt, is_delta=false) as v1."""
-    from ..sinks.versioned import write_snapshot
-    from .dedup import INCR_DELTA_FROM, _incr_bucket
+    """Count the CORPUS slice's train bigrams and publish (kind, key,
+    cnt) as v1."""
+    from ..sinks.versioned import write_corpus_snapshot
+    from .dedup import is_delta_doc
 
-    stream = _bigram_stream(spark, sf_dir).filter(
-        _incr_bucket(F.col("doc_id")) < INCR_DELTA_FROM
-    )
-    return write_snapshot(
-        _train_counts(stream).withColumn("is_delta", F.lit(False)), table_dir
-    )
+    stream = _bigram_stream(spark, sf_dir).filter(~is_delta_doc("doc_id"))
+    return write_corpus_snapshot(_train_counts(stream), table_dir)
 
 
 def extend_lm_counts(spark: SparkSession, sf_dir: str, table_dir: str) -> int:
-    """Fold the delta batch's train counts into snapshot v+1.
-    Idempotent: delta-tagged rows are replaced, never double-counted
-    (the extend_span_index protocol). Returns the new version."""
-    from ..sinks.versioned import read_snapshot, write_snapshot
-    from .dedup import INCR_DELTA_FROM, _incr_bucket
+    """Fold the delta batch's train counts into snapshot v+1. Returns
+    the new version."""
+    from ..sinks.versioned import fold_delta_snapshot
+    from .dedup import is_delta_doc
 
-    prev = read_snapshot(spark, table_dir).filter(~F.col("is_delta"))
-    stream = _bigram_stream(spark, sf_dir).filter(
-        _incr_bucket(F.col("doc_id")) >= INCR_DELTA_FROM
-    )
-    fresh = _train_counts(stream).withColumn("is_delta", F.lit(True))
-    return write_snapshot(prev.unionByName(fresh), table_dir)
+    stream = _bigram_stream(spark, sf_dir).filter(is_delta_doc("doc_id"))
+    return fold_delta_snapshot(spark, table_dir, _train_counts(stream))
 
 
 def _folded_model(counts: DataFrame) -> tuple[DataFrame, DataFrame]:
@@ -474,20 +462,15 @@ def _folded_model(counts: DataFrame) -> tuple[DataFrame, DataFrame]:
 def incremental_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     """bigram_lm_score's rollup, computed from frozen corpus counts +
     fresh delta counts (the refreshed model, pre-fold)."""
-    import os as _os
-
-    from ..sinks.versioned import read_snapshot
-    from .dedup import INCR_DELTA_FROM, _incr_bucket
+    from ..sinks.versioned import ensure_snapshot, read_corpus_snapshot
+    from .dedup import is_delta_doc
 
     table_dir = lm_counts_dir(sf_dir)
-    if not _os.path.exists(_os.path.join(table_dir, "manifest.json")):
-        build_lm_corpus_counts(spark, sf_dir, table_dir)
-    corpus_counts = read_snapshot(spark, table_dir).filter(~F.col("is_delta")).select(
-        "kind", "key", "cnt"
+    ensure_snapshot(
+        table_dir, lambda: build_lm_corpus_counts(spark, sf_dir, table_dir)
     )
-    delta_stream = _bigram_stream(spark, sf_dir).filter(
-        _incr_bucket(F.col("doc_id")) >= INCR_DELTA_FROM
-    )
+    corpus_counts = read_corpus_snapshot(spark, table_dir)
+    delta_stream = _bigram_stream(spark, sf_dir).filter(is_delta_doc("doc_id"))
     fresh = _train_counts(delta_stream)
     from ..registry import track_persist
 

@@ -38,7 +38,7 @@ from .banding import (
     incremental_fp_pairs,
     landing_fp_transform,
 )
-from .dedup import INCR_DELTA_FROM, _INCR_PAIR_FILTER_SQL, _incr_bucket
+from .dedup import _INCR_PAIR_FILTER_SQL, is_delta_doc
 
 META_SCHEMA = (
     "doc_id bigint, payload_bytes bigint, payload_md5 string, "
@@ -1188,35 +1188,26 @@ def _fp_index_dir(sf_dir: str, prefix: str) -> str:
 
 
 def _build_fp_index(spark, sf_dir: str, table_dir: str, fp_fn) -> int:
-    """Fingerprint the corpus slice (incremental buckets <
-    INCR_DELTA_FROM) and publish (doc_id, fp) as a versioned snapshot.
-    Generic over the modality's fingerprint pass (`fp_fn`: (spark,
-    sf_dir) -> (doc_id, fp) frame) — shared by phash and wavhash."""
-    from ..sinks.versioned import write_snapshot
+    """Fingerprint the corpus slice and publish (doc_id, fp) as a
+    versioned snapshot. Generic over the modality's fingerprint pass
+    (`fp_fn`: (spark, sf_dir) -> (doc_id, fp) frame) — shared by phash
+    and wavhash."""
+    from ..sinks.versioned import write_corpus_snapshot
 
-    fps = fp_fn(spark, sf_dir).filter(
-        _incr_bucket(F.col("doc_id")) < INCR_DELTA_FROM
-    )
-    return write_snapshot(fps, table_dir)
+    fps = fp_fn(spark, sf_dir).filter(~is_delta_doc("doc_id"))
+    return write_corpus_snapshot(fps, table_dir)
 
 
 def _extend_fp_index(spark, sf_dir: str, table_dir: str, fp_fn) -> int:
-    """Fold the delta batch's fingerprints into snapshot v+1 —
-    idempotent (corpus-bucket filter on the read side, the
-    extend_minhash_index protocol)."""
-    from ..sinks.versioned import read_snapshot, write_snapshot
+    """Fold the delta batch's fingerprints into snapshot v+1."""
+    from ..sinks.versioned import fold_delta_snapshot
 
-    corpus = read_snapshot(spark, table_dir).filter(
-        _incr_bucket(F.col("doc_id")) < INCR_DELTA_FROM
-    )
-    delta = fp_fn(spark, sf_dir).filter(
-        _incr_bucket(F.col("doc_id")) >= INCR_DELTA_FROM
-    )
-    return write_snapshot(corpus.unionByName(delta), table_dir)
+    delta = fp_fn(spark, sf_dir).filter(is_delta_doc("doc_id"))
+    return fold_delta_snapshot(spark, table_dir, delta)
 
 
 def phash_index_dir(sf_dir: str) -> str:
-    return _fp_index_dir(sf_dir, "phash1_")
+    return _fp_index_dir(sf_dir, "phash2_")
 
 
 def build_phash_index(spark: SparkSession, sf_dir: str, table_dir: str) -> int:
@@ -1482,7 +1473,7 @@ def wavhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def wavhash_index_dir(sf_dir: str) -> str:
-    return _fp_index_dir(sf_dir, "wavhash1_")
+    return _fp_index_dir(sf_dir, "wavhash2_")
 
 
 def build_wavhash_index(spark: SparkSession, sf_dir: str, table_dir: str) -> int:

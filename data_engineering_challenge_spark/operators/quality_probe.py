@@ -275,15 +275,17 @@ def build_quality_model(spark: SparkSession, sf_dir: str, table_dir: str) -> int
 
 def _load_weights(spark: SparkSession, sf_dir: str) -> list[float]:
     """Latest stored model for sf_dir (trained+published on first use)."""
-    import os as _os
+    rows = _stored_model(spark, sf_dir).orderBy("idx").collect()
+    return [r["weight"] for r in rows]
 
-    from ..sinks.versioned import read_snapshot
+
+def _stored_model(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The (idx, feature, weight) model snapshot, built on first use."""
+    from ..sinks.versioned import ensure_snapshot, read_snapshot
 
     table_dir = quality_model_dir(sf_dir)
-    if not _os.path.exists(_os.path.join(table_dir, "manifest.json")):
-        build_quality_model(spark, sf_dir, table_dir)
-    rows = read_snapshot(spark, table_dir).orderBy("idx").collect()
-    return [r["weight"] for r in rows]
+    ensure_snapshot(table_dir, lambda: build_quality_model(spark, sf_dir, table_dir))
+    return read_snapshot(spark, table_dir)
 
 
 def _spark_score(feats: DataFrame, w: list[float]) -> DataFrame:
@@ -316,14 +318,7 @@ def _spark_score(feats: DataFrame, w: list[float]) -> DataFrame:
 )
 def quality_probe_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(idx, feature, weight) of the stored model, one row per feature."""
-    import os as _os
-
-    from ..sinks.versioned import read_snapshot
-
-    table_dir = quality_model_dir(sf_dir)
-    if not _os.path.exists(_os.path.join(table_dir, "manifest.json")):
-        build_quality_model(spark, sf_dir, table_dir)
-    return read_snapshot(spark, table_dir).orderBy("idx")
+    return _stored_model(spark, sf_dir).orderBy("idx")
 
 
 @register(
@@ -430,46 +425,38 @@ def quality_moments_dir(sf_dir: str) -> str:
     return fingerprint_dir(sf_dir, "documents", prefix=f"qualitym{_FEATV}_")
 
 
-def _corpus_delta_split(spark: SparkSession, sf_dir: str):
-    from .dedup import INCR_DELTA_FROM, _incr_bucket
+def _split_moments(spark: SparkSession, sf_dir: str, delta: bool):
+    """The exact moment row of sf_dir's delta docs (or corpus docs)."""
+    from .dedup import is_delta_doc
 
     d = spread_scan(load_table(spark, sf_dir, "documents"), spark, "doc_id")
-    corpus = d.filter(_incr_bucket(F.col("doc_id")) < INCR_DELTA_FROM)
-    delta = d.filter(_incr_bucket(F.col("doc_id")) >= INCR_DELTA_FROM)
-    return corpus, delta
+    split = is_delta_doc("doc_id")
+    return _moment_row(_spark_features(d.filter(split if delta else ~split)))
 
 
-def _moments_df(spark: SparkSession, row, is_delta: bool) -> DataFrame:
+def _moments_df(spark: SparkSession, row) -> DataFrame:
     from decimal import Decimal
 
-    rows = [(n, Decimal(row[n]), is_delta) for n in _MOMENT_NAMES]
-    return spark.createDataFrame(
-        rows, "name string, val decimal(38,0), is_delta boolean"
-    )
+    rows = [(n, Decimal(row[n])) for n in _MOMENT_NAMES]
+    return spark.createDataFrame(rows, "name string, val decimal(38,0)").coalesce(1)
 
 
 def build_quality_moments(spark: SparkSession, sf_dir: str, table_dir: str) -> int:
-    """Publish the frozen-corpus moment table (35 decimal rows,
-    is_delta=false) as a versioned snapshot."""
-    from ..sinks.versioned import write_snapshot
+    """Publish the frozen-corpus moment table (35 decimal rows) as a
+    versioned snapshot."""
+    from ..sinks.versioned import write_corpus_snapshot
 
-    corpus, _ = _corpus_delta_split(spark, sf_dir)
-    row = _moment_row(_spark_features(corpus))
-    return write_snapshot(_moments_df(spark, row, False).coalesce(1), table_dir)
+    row = _split_moments(spark, sf_dir, delta=False)
+    return write_corpus_snapshot(_moments_df(spark, row), table_dir)
 
 
 def extend_quality_moments(spark: SparkSession, sf_dir: str, table_dir: str) -> int:
-    """Fold the delta batch's moments into snapshot v+1. Corpus rows
-    come from the existing snapshot (never re-featurized); delta rows
-    are recomputed and REPLACED, so the fold is idempotent."""
-    from ..sinks.versioned import read_snapshot, write_snapshot
+    """Fold the delta batch's moments into snapshot v+1 (corpus rows are
+    never re-featurized)."""
+    from ..sinks.versioned import fold_delta_snapshot
 
-    corpus_rows = read_snapshot(spark, table_dir).filter(~F.col("is_delta"))
-    _, delta = _corpus_delta_split(spark, sf_dir)
-    row = _moment_row(_spark_features(delta))
-    return write_snapshot(
-        corpus_rows.unionByName(_moments_df(spark, row, True)).coalesce(1), table_dir
-    )
+    row = _split_moments(spark, sf_dir, delta=True)
+    return fold_delta_snapshot(spark, table_dir, _moments_df(spark, row))
 
 
 def _solve_from_moment_sums(total: dict) -> list[float]:
@@ -511,20 +498,16 @@ def _solve_from_moment_sums(total: dict) -> list[float]:
 def incremental_quality_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(idx, feature, weight) — corpus moments (stored) + delta moments
     (fresh), solved together."""
-    import os as _os
     from decimal import Decimal
 
-    from ..sinks.versioned import read_snapshot
+    from ..sinks.versioned import ensure_snapshot, read_corpus_snapshot
 
     table_dir = quality_moments_dir(sf_dir)
-    if not _os.path.exists(_os.path.join(table_dir, "manifest.json")):
-        build_quality_moments(spark, sf_dir, table_dir)
-    corpus = {
-        r["name"]: r["val"]
-        for r in read_snapshot(spark, table_dir).filter(~F.col("is_delta")).collect()
-    }
-    _, delta = _corpus_delta_split(spark, sf_dir)
-    drow = _moment_row(_spark_features(delta))
+    ensure_snapshot(
+        table_dir, lambda: build_quality_moments(spark, sf_dir, table_dir)
+    )
+    corpus = {r["name"]: r["val"] for r in read_corpus_snapshot(spark, table_dir).collect()}
+    drow = _split_moments(spark, sf_dir, delta=True)
     total = {n: corpus[n] + Decimal(drow[n]) for n in _MOMENT_NAMES}
     w = _solve_from_moment_sums(total)
     rows = [(i, FEATURES[i][0], w[i]) for i in range(K)]

@@ -1322,7 +1322,7 @@ def _ivfpq_stride_centroids(e: DataFrame) -> DataFrame:
 def ann_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os as _os
 
-    from ..sinks.versioned import read_snapshot
+    from ..sinks.versioned import ensure_snapshot, read_snapshot
 
     # the stored index: (vec_id, cell, codes) — assignment + PQ encode
     # paid ONCE per corpus version (build_pq_index), published as a
@@ -1331,9 +1331,9 @@ def ann_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # never touches raw corpus vectors (only the |Q| query vectors for
     # probes/LUTs) — the memory-traffic property that makes PQ PQ.
     table_dir = pq_index_dir(sf_dir)
-    if not _os.path.exists(_os.path.join(table_dir, "codes", "manifest.json")):
-        build_pq_index(spark, sf_dir, table_dir)
-    coded = read_snapshot(spark, _os.path.join(table_dir, "codes"))
+    codes_dir = _os.path.join(table_dir, "codes")  # the build writes it last
+    ensure_snapshot(codes_dir, lambda: build_pq_index(spark, sf_dir, table_dir))
+    coded = read_snapshot(spark, codes_dir)
     cents = read_snapshot(spark, _os.path.join(table_dir, "cents"))
     codebook = read_snapshot(spark, _os.path.join(table_dir, "codebook"))
     # only the |Q| query vectors are read from the raw table

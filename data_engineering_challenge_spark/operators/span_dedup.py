@@ -46,6 +46,7 @@ from pyspark.sql import functions as F
 from ..catalog import load_table, spread_scan
 from ..functions.text import tokens, word_ngrams
 from ..registry import register
+from .dedup import is_delta_doc, is_delta_doc_sql
 from .pipeline_ops import _TOK_SQL
 
 SPAN_K = 8  # span granularity: a duplicated run must contain a full K-gram
@@ -363,54 +364,36 @@ def span_index_dir(sf_dir: str) -> str:
     return fingerprint_dir(sf_dir, "documents", prefix="spangrams_")
 
 
+def _gram_postings(docs: DataFrame) -> DataFrame:
+    """(gh, postings) of a doc frame's positional grams."""
+    return _positional_grams(docs).groupBy("gh").agg(F.count(F.lit(1)).alias("postings"))
+
+
 def build_span_index(spark: SparkSession, sf_dir: str, table_dir: str) -> int:
-    """Publish the frozen-corpus gram-postings table — (gh, postings,
-    is_delta=false), one row per DISTINCT gram hash of the corpus
-    buckets (< INCR_DELTA_FROM) — as a versioned snapshot. Positions
-    are NOT stored: the delta probe only needs corpus membership and
-    the postings count for the hot-gram cap, so the index is
-    distinct-gram-sized (~16 B/row). Returns the published version."""
-    from ..sinks.versioned import write_snapshot
-    from .dedup import INCR_DELTA_FROM, _incr_bucket
+    """Publish the frozen-corpus gram-postings table — (gh, postings),
+    one row per DISTINCT gram hash of the corpus docs — as a versioned
+    snapshot. Positions are NOT stored: the delta probe only needs
+    corpus membership and the postings count for the hot-gram cap, so
+    the index is distinct-gram-sized (~16 B/row). Returns the
+    published version."""
+    from ..sinks.versioned import write_corpus_snapshot
 
     d = spread_scan(load_table(spark, sf_dir, "documents"), spark, "doc_id")
-    corpus = d.filter(_incr_bucket(F.col("doc_id")) < INCR_DELTA_FROM)
-    idx = (
-        _positional_grams(corpus)
-        .groupBy("gh")
-        .agg(F.count(F.lit(1)).alias("postings"))
-        .withColumn("is_delta", F.lit(False))
+    return write_corpus_snapshot(
+        _gram_postings(d.filter(~is_delta_doc("doc_id"))), table_dir
     )
-    return write_snapshot(idx, table_dir)
 
 
 def extend_span_index(spark: SparkSession, sf_dir: str, table_dir: str) -> int:
-    """Fold the CURRENT delta batch's gram postings into snapshot v+1.
-    The corpus side is read from the existing snapshot (never
-    re-tokenized) and filtered to its is_delta=false rows, so the fold
-    is idempotent: re-running on an unchanged documents file replaces
-    the delta rows instead of double-counting them (the same hazard
-    the minhash fold guards with its bucket filter). Delta rows are
-    marked is_delta=true; a FULL-corpus consumer aggregates postings
-    over both, while the incremental probe keeps reading the pure
-    corpus rows of any version (snapshot isolation)."""
-    from ..sinks.versioned import read_snapshot, write_snapshot
-    from .dedup import INCR_DELTA_FROM, _incr_bucket
+    """Fold the CURRENT delta batch's gram postings into snapshot v+1
+    (the corpus side is never re-tokenized). A FULL-corpus consumer
+    aggregates postings over all rows of a folded version."""
+    from ..sinks.versioned import fold_delta_snapshot
 
-    corpus_idx = read_snapshot(spark, table_dir).filter(~F.col("is_delta"))
     d = spread_scan(load_table(spark, sf_dir, "documents"), spark, "doc_id")
-    delta = d.filter(_incr_bucket(F.col("doc_id")) >= INCR_DELTA_FROM)
-    delta_idx = (
-        _positional_grams(delta)
-        .groupBy("gh")
-        .agg(F.count(F.lit(1)).alias("postings"))
-        .withColumn("is_delta", F.lit(True))
+    return fold_delta_snapshot(
+        spark, table_dir, _gram_postings(d.filter(is_delta_doc("doc_id")))
     )
-    return write_snapshot(corpus_idx.unionByName(delta_idx), table_dir)
-
-
-from .dedup import INCR_DELTA_FROM as _INCR_FROM  # noqa: E402 — shared split
-from .dedup import _incr_bucket_sql  # noqa: E402 — oracle twin of _incr_bucket
 
 
 @register(
@@ -422,7 +405,7 @@ from .dedup import _incr_bucket_sql  # noqa: E402 — oracle twin of _incr_bucke
                SUM(span_len)::BIGINT AS dup_tokens,
                MAX(span_len)::BIGINT AS longest_span
         FROM spans
-        WHERE {_incr_bucket_sql("doc_id")} >= {_INCR_FROM}
+        WHERE {is_delta_doc_sql("doc_id")}
         GROUP BY doc_id ORDER BY doc_id
         """
     ),
@@ -441,16 +424,18 @@ from .dedup import _incr_bucket_sql  # noqa: E402 — oracle twin of _incr_bucke
     tags=("text", "dedup", "incremental", "extension"),
 )
 def incremental_duplicate_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os as _os
+    table_dir, delta = _span_index_and_delta(spark, sf_dir)
+    return incremental_span_probe(spark, table_dir, delta)
 
-    from .dedup import INCR_DELTA_FROM, _incr_bucket
+
+def _span_index_and_delta(spark: SparkSession, sf_dir: str):
+    """(span index dir, built if missing; the delta docs frame)."""
+    from ..sinks.versioned import ensure_snapshot
 
     table_dir = span_index_dir(sf_dir)
-    if not _os.path.exists(_os.path.join(table_dir, "manifest.json")):
-        build_span_index(spark, sf_dir, table_dir)
+    ensure_snapshot(table_dir, lambda: build_span_index(spark, sf_dir, table_dir))
     d = spread_scan(load_table(spark, sf_dir, "documents"), spark, "doc_id")
-    delta = d.filter(_incr_bucket(F.col("doc_id")) >= INCR_DELTA_FROM)
-    return incremental_span_probe(spark, table_dir, delta)
+    return table_dir, d.filter(is_delta_doc("doc_id"))
 
 
 def _incremental_span_islands(
@@ -468,12 +453,9 @@ def _incremental_span_islands(
     occurrence is removable), and among delta-only dups the lowest
     delta doc_id owns — the natural extension of the full-run
     keep-lowest-doc_id policy to a frozen/delta split."""
-    from ..sinks.versioned import read_snapshot
+    from ..sinks.versioned import read_corpus_snapshot
 
-    # is_delta filter: after extend_span_index folds the delta into
-    # v+1, the latest snapshot also holds delta postings — adding them
-    # to the freshly computed delta counts would double-count.
-    corpus_idx = read_snapshot(spark, table_dir).filter(~F.col("is_delta")).select(
+    corpus_idx = read_corpus_snapshot(spark, table_dir).select(
         "gh", F.col("postings").alias("cpost")
     )
     grams = _positional_grams(delta_docs)
@@ -809,7 +791,7 @@ def apply_incremental_span_removal(
     oracle=f"""
         WITH t AS (
             SELECT doc_id, {_TOK_SQL} AS toks,
-                   ({_incr_bucket_sql("doc_id")} >= {_INCR_FROM}) AS isd
+                   ({is_delta_doc_sql("doc_id")}) AS isd
             FROM documents
             WHERE len({_TOK_SQL}) >= {SPAN_K}
         ), g AS (
@@ -870,15 +852,7 @@ def apply_incremental_span_removal(
 def incremental_span_rewrite(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, n_tokens, tokens_removed, n_tokens_after, cleaned_text)
     for every CUT delta document."""
-    import os as _os
-
-    from .dedup import INCR_DELTA_FROM, _incr_bucket
-
-    table_dir = span_index_dir(sf_dir)
-    if not _os.path.exists(_os.path.join(table_dir, "manifest.json")):
-        build_span_index(spark, sf_dir, table_dir)
-    d = spread_scan(load_table(spark, sf_dir, "documents"), spark, "doc_id")
-    delta = d.filter(_incr_bucket(F.col("doc_id")) >= INCR_DELTA_FROM)
+    table_dir, delta = _span_index_and_delta(spark, sf_dir)
     return (
         apply_incremental_span_removal(spark, table_dir, delta)
         .filter(F.col("tokens_removed") > 0)

@@ -112,97 +112,45 @@ def _run_incremental(spark: SparkSession, cfg: dict[str, Any]) -> dict[str, Any]
     """
     import os
 
+    from .operators import dedup, lm, multimodal as mm, quality_probe as qp
     from .operators import span_dedup as sd
-    from .operators.dedup import (
-        INCR_DELTA_FROM,
-        _incr_bucket,
-        build_minhash_index,
-        extend_minhash_index,
-        incremental_dedup,
-        minhash_index_dir,
-    )
     from .sinks.versioned import history, vacuum_snapshots
 
+    # kind -> (index dir, probe query, fold); every probe builds its own
+    # index on first use
+    kinds = {
+        "span": (
+            sd.span_index_dir, sd.incremental_duplicate_spans, sd.extend_span_index
+        ),
+        "minhash": (
+            dedup.minhash_index_dir, dedup.incremental_dedup, dedup.extend_minhash_index
+        ),
+        # quality / lm probes: the refreshed model (frozen corpus
+        # moments/counts + fresh delta ones — bit-identical to a retrain)
+        "quality": (
+            qp.quality_moments_dir, qp.incremental_quality_weights, qp.extend_quality_moments
+        ),
+        "lm": (lm.lm_counts_dir, lm.incremental_lm_score, lm.extend_lm_counts),
+        "phash": (
+            mm.phash_index_dir, mm.incremental_phash_pairs, mm.extend_phash_index
+        ),
+        "wavhash": (
+            mm.wavhash_index_dir, mm.incremental_wavhash_pairs, mm.extend_wavhash_index
+        ),
+    }
     sf_dir = cfg["sf_dir"]
     keep = cfg.get("vacuum_keep", 2)
     stats: dict[str, Any] = {}
     for kind in cfg.get("indexes", ("span", "minhash")):
-        if kind == "span":
-            table_dir = sd.span_index_dir(sf_dir)
-            if not os.path.exists(os.path.join(table_dir, "manifest.json")):
-                sd.build_span_index(spark, sf_dir, table_dir)
-            d = spread_scan_docs(spark, sf_dir)
-            delta = d.filter(_incr_bucket(F.col("doc_id")) >= INCR_DELTA_FROM)
-            probe = sd.incremental_span_probe(spark, table_dir, delta)
-            fold = lambda: sd.extend_span_index(spark, sf_dir, table_dir)  # noqa: E731
-        elif kind == "minhash":
-            table_dir = minhash_index_dir(sf_dir)
-            if not os.path.exists(os.path.join(table_dir, "manifest.json")):
-                build_minhash_index(spark, sf_dir, table_dir)
-            probe = incremental_dedup(spark, sf_dir)
-            fold = lambda: extend_minhash_index(spark, sf_dir, table_dir)  # noqa: E731
-        elif kind == "quality":
-            from .operators.quality_probe import (
-                build_quality_moments,
-                extend_quality_moments,
-                incremental_quality_weights,
-                quality_moments_dir,
-            )
-
-            table_dir = quality_moments_dir(sf_dir)
-            if not os.path.exists(os.path.join(table_dir, "manifest.json")):
-                build_quality_moments(spark, sf_dir, table_dir)
-            # probe = the refreshed model (frozen corpus moments + fresh
-            # delta moments — bit-identical to a full retrain)
-            probe = incremental_quality_weights(spark, sf_dir)
-            fold = lambda: extend_quality_moments(spark, sf_dir, table_dir)  # noqa: E731
-        elif kind == "lm":
-            from .operators.lm import (
-                build_lm_corpus_counts,
-                extend_lm_counts,
-                incremental_lm_score,
-                lm_counts_dir,
-            )
-
-            table_dir = lm_counts_dir(sf_dir)
-            if not os.path.exists(os.path.join(table_dir, "manifest.json")):
-                build_lm_corpus_counts(spark, sf_dir, table_dir)
-            # probe = the refreshed LM rollup (frozen corpus counts +
-            # fresh delta counts — bit-identical to a full retrain)
-            probe = incremental_lm_score(spark, sf_dir)
-            fold = lambda: extend_lm_counts(spark, sf_dir, table_dir)  # noqa: E731
-        elif kind == "phash":
-            from .operators.multimodal import (
-                build_phash_index,
-                extend_phash_index,
-                incremental_phash_pairs,
-                phash_index_dir,
-            )
-
-            table_dir = phash_index_dir(sf_dir)
-            if not os.path.exists(os.path.join(table_dir, "manifest.json")):
-                build_phash_index(spark, sf_dir, table_dir)
-            probe = incremental_phash_pairs(spark, sf_dir)
-            fold = lambda: extend_phash_index(spark, sf_dir, table_dir)  # noqa: E731
-        elif kind == "wavhash":
-            from .operators.multimodal import (
-                build_wavhash_index,
-                extend_wavhash_index,
-                incremental_wavhash_pairs,
-                wavhash_index_dir,
-            )
-
-            table_dir = wavhash_index_dir(sf_dir)
-            if not os.path.exists(os.path.join(table_dir, "manifest.json")):
-                build_wavhash_index(spark, sf_dir, table_dir)
-            probe = incremental_wavhash_pairs(spark, sf_dir)
-            fold = lambda: extend_wavhash_index(spark, sf_dir, table_dir)  # noqa: E731
-        else:
+        if kind not in kinds:
             raise ValueError(f"unknown incremental index kind: {kind}")
+        index_dir, probe_fn, extend_fn = kinds[kind]
+        table_dir = index_dir(sf_dir)
+        probe = probe_fn(spark, sf_dir)
         out_path = os.path.join(cfg["probe_out"], kind)
         probe.write.mode("overwrite").parquet(out_path)
         probe_rows = spark.read.parquet(out_path).count()
-        version = fold()
+        version = extend_fn(spark, sf_dir, table_dir)
         vacuumed = vacuum_snapshots(table_dir, keep_last=keep)
         stats[kind] = {
             "probe_rows": probe_rows,
@@ -212,12 +160,6 @@ def _run_incremental(spark: SparkSession, cfg: dict[str, Any]) -> dict[str, Any]
             "versions_retained": history(table_dir)["versions"],
         }
     return stats
-
-
-def spread_scan_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .catalog import load_table, spread_scan
-
-    return spread_scan(load_table(spark, sf_dir, "documents"), spark, "doc_id")
 
 
 def run_pipeline(spark: SparkSession, config: dict[str, Any]) -> dict[str, Any]:

@@ -15,7 +15,10 @@ from __future__ import annotations
 
 import os
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import SparkSession
+
+from .runlog import get_logger
 
 # Configs that are safe (and desirable) to apply to a session we did
 # not create — all runtime-settable.
@@ -58,16 +61,14 @@ def apply_runtime_confs(spark: SparkSession) -> SparkSession:
     # size shuffles to the machine instead of the 200-partition default
     # (AQE coalesces down, but the initial task count still costs) —
     # only when the session is running on the generic default.
-    try:
-        if spark.conf.get("spark.sql.shuffle.partitions", "200") == "200":
-            confs["spark.sql.shuffle.partitions"] = str(default_parallelism())
-    except Exception:
-        pass
+    if spark.conf.get("spark.sql.shuffle.partitions", "200") == "200":
+        confs["spark.sql.shuffle.partitions"] = str(default_parallelism())
     for k, v in confs.items():
         try:
             spark.conf.set(k, v)
-        except Exception:
-            pass  # non-runtime-settable on this build — keep going
+        except AnalysisException:
+            # not settable at runtime on this build — keep going
+            get_logger(__name__).debug("apply_runtime_confs: %s not set", k, exc_info=True)
     return spark
 
 

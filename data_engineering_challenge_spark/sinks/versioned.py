@@ -17,16 +17,30 @@ is replaced atomically (write-temp + os.replace). Consequences:
 At 100 TB the same protocol holds with the manifest on object storage
 (conditional-put replaces os.replace); data files are immutable either
 way, which is the property that makes all of this cheap.
+
+Incremental indexes (MinHash, pHash, wavhash, span grams, LM counts,
+quality moments) share one corpus/delta lifecycle on top of this.
+Every row carries an `is_delta` marker: `write_corpus_snapshot`
+publishes the frozen corpus with `is_delta=false`, and
+`fold_delta_snapshot` publishes v+1 as the latest version's corpus rows
+plus the current delta batch marked `is_delta=true`. Because the fold
+rebuilds from the corpus rows alone, folding the same delta twice
+replaces the delta rows instead of counting them again, and a probe
+that reads `read_corpus_snapshot` never sees a folded delta next to
+the fresh one it computes itself.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import shutil
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 _MANIFEST = "manifest.json"
+_DELTA = "is_delta"
 
 
 def _read_manifest(table_dir: str) -> dict:
@@ -50,7 +64,11 @@ def write_snapshot(df: DataFrame, table_dir: str) -> int:
     os.makedirs(table_dir, exist_ok=True)
     m = _read_manifest(table_dir)
     n = max(m["versions"], default=0) + 1
-    df.write.mode("errorifexists").parquet(os.path.join(table_dir, f"v={n}"))
+    path = os.path.join(table_dir, f"v={n}")
+    # an unlisted v=n is the leftover of a write that died before its
+    # publish: no reader can reach it, so it is safe to replace
+    shutil.rmtree(path, ignore_errors=True)
+    df.write.mode("errorifexists").parquet(path)
     m["versions"].append(n)
     m["latest"] = n
     _publish_manifest(table_dir, m)
@@ -66,6 +84,35 @@ def read_snapshot(
     if n not in m["versions"]:
         raise ValueError(f"version {n} not in table history {m['versions']}")
     return spark.read.parquet(os.path.join(table_dir, f"v={n}"))
+
+
+def ensure_snapshot(table_dir: str, build) -> None:
+    """Run `build()` unless `table_dir` already has a published version
+    (the build-on-first-use step of every lazily built artifact)."""
+    if not _read_manifest(table_dir)["versions"]:
+        build()
+
+
+def write_corpus_snapshot(rows: DataFrame, table_dir: str) -> int:
+    """Publish the frozen corpus `rows` (marked `is_delta=false`) as the
+    next version. Returns the version."""
+    return write_snapshot(rows.withColumn(_DELTA, F.lit(False)), table_dir)
+
+
+def fold_delta_snapshot(
+    spark: SparkSession, table_dir: str, delta_rows: DataFrame
+) -> int:
+    """Publish v+1 = the latest version's corpus rows + `delta_rows`
+    (marked `is_delta=true`); idempotent, see the module docstring.
+    Returns the new version."""
+    corpus = read_snapshot(spark, table_dir).filter(~F.col(_DELTA))
+    delta = delta_rows.withColumn(_DELTA, F.lit(True))
+    return write_snapshot(corpus.unionByName(delta), table_dir)
+
+
+def read_corpus_snapshot(spark: SparkSession, table_dir: str) -> DataFrame:
+    """The latest version's corpus rows, without the marker column."""
+    return read_snapshot(spark, table_dir).filter(~F.col(_DELTA)).drop(_DELTA)
 
 
 def rollback(table_dir: str, version: int) -> None:
@@ -119,8 +166,6 @@ def vacuum_snapshots(table_dir: str, keep_last: int = 2) -> list[int]:
     garbage, never a manifest pointing at missing data. At 100 TB this
     is the nightly snapshot-GC job — manifest update is one
     conditional put, deletes are embarrassingly parallel."""
-    import shutil
-
     m = _read_manifest(table_dir)
     keep_last = max(1, keep_last)
     keep = set(sorted(m["versions"])[-keep_last:]) | {m["latest"]}

@@ -406,25 +406,18 @@ def landing_dedup_transform(
     incremental_dedup_stream for semantics."""
     from ..operators.banding import cap_hot_buckets, minhash_bands, sig_est
     from ..operators.dedup import (
-        INCR_DELTA_FROM,
-        _incr_bucket,
         build_minhash_index,
+        is_delta_doc,
         minhash_index_dir,
         row_minhash_digests,
         row_minhash_from_digests,
     )
     from ..functions.text import tokens, word_ngrams
-    from ..sinks.versioned import read_snapshot
+    from ..sinks.versioned import ensure_snapshot, read_corpus_snapshot
 
     table_dir = minhash_index_dir(sf_dir)
-    if not os.path.exists(os.path.join(table_dir, "manifest.json")):
-        build_minhash_index(spark, sf_dir, table_dir)
-    # corpus buckets only: a folded snapshot (v2+) also holds delta
-    # signatures, which would make the stream match docs against
-    # themselves (same guard as batch incremental_dedup)
-    corpus_sig = read_snapshot(spark, table_dir).filter(
-        _incr_bucket(F.col("doc_id")) < INCR_DELTA_FROM
-    )
+    ensure_snapshot(table_dir, lambda: build_minhash_index(spark, sf_dir, table_dir))
+    corpus_sig = read_corpus_snapshot(spark, table_dir)
     corpus_bands = cap_hot_buckets(
         minhash_bands(corpus_sig, F.col("doc_id").alias("doc_a"), F.col("s").alias("s_a"))
     )
@@ -442,7 +435,7 @@ def landing_dedup_transform(
 
     corpus_bands = track_persist(corpus_bands.repartition("b", "bh"))
 
-    delta = raw.filter(_incr_bucket(F.col("doc_id")) >= INCR_DELTA_FROM)
+    delta = raw.filter(is_delta_doc("doc_id"))
     grams = F.array_distinct(word_ngrams(tokens(F.col("text")), 3))
     # digests staged as a REAL column between projections — inlined as
     # a subexpression, the 16 min-expressions would each recompute the
@@ -570,18 +563,18 @@ def _run_landing_span_stream(
     (foreachBatch — span merging needs per-doc ordered windows, a
     batch-only operator) and keyed-upsert the result into `out_path`
     through the rename-aside publish."""
-    from ..operators.dedup import INCR_DELTA_FROM, _incr_bucket
+    from ..operators.dedup import is_delta_doc
     from ..operators.merge import merge_upsert
     from ..operators.span_dedup import build_span_index, span_index_dir
+    from ..sinks.versioned import ensure_snapshot
 
     if raw is None:
         raw = _read_parquet_stream(spark, f"{sf_dir}/documents.parquet")
     table_dir = span_index_dir(sf_dir)
-    if not os.path.exists(os.path.join(table_dir, "manifest.json")):
-        build_span_index(spark, sf_dir, table_dir)
+    ensure_snapshot(table_dir, lambda: build_span_index(spark, sf_dir, table_dir))
 
     def build(spark_b, batch_df, batch_id, current):
-        delta = batch_df.filter(_incr_bucket(F.col("doc_id")) >= INCR_DELTA_FROM)
+        delta = batch_df.filter(is_delta_doc("doc_id"))
         out = batch_op(spark_b, table_dir, delta)
         return out if current is None else merge_upsert(current, out, ["doc_id"])
 

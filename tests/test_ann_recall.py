@@ -80,17 +80,17 @@ def test_pq_index_built_once_and_reused(spark, planted_sf_dir, tmp_path, monkeyp
     """ann_ivfpq_topk's stored index is built on first use and REUSED:
     the second invocation must not publish a new snapshot version (the
     per-query-batch cost is the code-table scan, not a re-encode)."""
-    import json
     import os
 
     from data_engineering_challenge_spark.operators.similarity import pq_index_dir
+    from data_engineering_challenge_spark.sinks.versioned import history
 
     monkeypatch.setenv("SPARK_GRAFT_INDEX_DIR", str(tmp_path / "idx"))
     first = _pairs(spark, planted_sf_dir, "ann_ivfpq_topk")
-    manifest = os.path.join(pq_index_dir(planted_sf_dir), "codes", "manifest.json")
-    m1 = json.load(open(manifest))
+    codes = os.path.join(pq_index_dir(planted_sf_dir), "codes")
+    m1 = history(codes)
     second = _pairs(spark, planted_sf_dir, "ann_ivfpq_topk")
-    m2 = json.load(open(manifest))
+    m2 = history(codes)
     assert first == second
     assert m1 == m2 == {"latest": 1, "versions": [1]}
 
@@ -102,7 +102,6 @@ def test_extend_pq_index_folds_delta_with_frozen_quantizers(
     against the FROZEN centroid/codebook snapshots (quantizer versions
     unchanged); v1 stays readable; a delta vector planted on top of an
     existing cluster member gets that member's cell and codes."""
-    import json
     import os
 
     from pyspark.sql import functions as F
@@ -112,7 +111,7 @@ def test_extend_pq_index_folds_delta_with_frozen_quantizers(
         extend_pq_index,
         pq_index_dir,
     )
-    from data_engineering_challenge_spark.sinks.versioned import read_snapshot
+    from data_engineering_challenge_spark.sinks.versioned import history, read_snapshot
 
     monkeypatch.setenv("SPARK_GRAFT_INDEX_DIR", str(tmp_path / "idx"))
     table_dir = pq_index_dir(planted_sf_dir)
@@ -137,5 +136,5 @@ def test_extend_pq_index_folds_delta_with_frozen_quantizers(
     assert new[10_003] == old[3] and new[10_057] == old[57]
     # quantizers untouched: cents/codebook manifests still at v1
     for part in ("cents", "codebook"):
-        m = json.load(open(os.path.join(table_dir, part, "manifest.json")))
+        m = history(os.path.join(table_dir, part))
         assert m == {"latest": 1, "versions": [1]}

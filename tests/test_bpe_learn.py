@@ -147,7 +147,6 @@ def test_bpe_artifacts_built_once_and_shared(spark, tmp_path, monkeypatch):
     """bpe_apply and bpe_fertility_by_source share ONE stored
     tokenizer-freeze artifact: the first call publishes merges+counts
     v1, later calls (either query) reuse it without a new version."""
-    import json
     import os
 
     from data_engineering_challenge_spark.operators.analytics_ext import (
@@ -156,7 +155,7 @@ def test_bpe_artifacts_built_once_and_shared(spark, tmp_path, monkeypatch):
         bpe_learn,
         bpe_table_dir,
     )
-    from data_engineering_challenge_spark.sinks.versioned import read_snapshot
+    from data_engineering_challenge_spark.sinks.versioned import history, read_snapshot
 
     corpus = tmp_path / "corpus"
     corpus.mkdir()
@@ -169,15 +168,15 @@ def test_bpe_artifacts_built_once_and_shared(spark, tmp_path, monkeypatch):
     sf = str(corpus)
     monkeypatch.setenv("SPARK_GRAFT_INDEX_DIR", str(tmp_path / "idx"))
     first = [tuple(r) for r in bpe_apply(spark, sf).collect()]
-    manifest = os.path.join(bpe_table_dir(sf), "counts", "manifest.json")
-    m1 = json.load(open(manifest))
+    counts = os.path.join(bpe_table_dir(sf), "counts")
+    m1 = history(counts)["versions"]
     fert = {r.source: (r.base_tokens, r.bpe_tokens)
             for r in bpe_fertility_by_source(spark, sf).collect()}
     second = [tuple(r) for r in bpe_apply(spark, sf).collect()]
-    m2 = json.load(open(manifest))
+    m2 = history(counts)["versions"]
     assert first == second == [(1, 5, 1, 5.0), (2, 4, 1, 4.0)]
     assert fert == {"web": (5, 1), "code": (4, 1)}
-    assert m1 == m2 == {"latest": 1, "versions": [1]}
+    assert m1 == m2 == [1]
     # the merge table snapshot matches a live bpe_learn run
     stored = sorted(
         tuple(r) for r in read_snapshot(

@@ -116,11 +116,11 @@ def test_index_reused_not_rebuilt(spark, straddle_corpus_dir, tmp_path, monkeypa
     monkeypatch.setenv("SPARK_GRAFT_INDEX_DIR", str(tmp_path / "idx3"))
     incremental_dedup(spark, straddle_corpus_dir).collect()
     table_dir = minhash_index_dir(straddle_corpus_dir)
-    import json
+    from data_engineering_challenge_spark.sinks.versioned import history
 
-    m1 = json.load(open(os.path.join(table_dir, "manifest.json")))
+    m1 = history(table_dir)
     incremental_dedup(spark, straddle_corpus_dir).collect()
-    m2 = json.load(open(os.path.join(table_dir, "manifest.json")))
+    m2 = history(table_dir)
     assert m1 == m2 == {"latest": 1, "versions": [1]}
 
 

@@ -13,7 +13,6 @@ snapshot aggregates to the true full-corpus postings.
 from __future__ import annotations
 
 import hashlib
-import json
 import os
 
 import pandas as pd
@@ -31,6 +30,7 @@ from data_engineering_challenge_spark.operators.span_dedup import (
     span_index_dir,
 )
 from data_engineering_challenge_spark.plans import physical_plan
+from data_engineering_challenge_spark.sinks.versioned import history
 
 
 def _bucket(doc_id: int) -> int:
@@ -149,7 +149,7 @@ def test_extend_is_idempotent_and_sums_to_full(
     }
     assert inc == {d for d in full if _bucket(d) >= INCR_DELTA_FROM}
     # manifest history retained all versions
-    m = json.load(open(os.path.join(table_dir, "manifest.json")))
+    m = history(table_dir)
     assert m == {"latest": 3, "versions": [1, 2, 3]}
 
 

@@ -70,3 +70,47 @@ def test_vacuum_never_drops_a_rolled_back_latest(spark, tmp_path):
     assert vacuum_snapshots(d, keep_last=1) == [2]
     assert read_snapshot(spark, d).count() == 10  # v1 survives as latest
     assert history(d) == {"latest": 1, "versions": [1, 3]}
+
+
+def test_write_replaces_an_unpublished_leftover_version(spark, tmp_path):
+    """A write that died after creating `v=1/` but before publishing the
+    manifest must not block the next write of v1."""
+    d = tmp_path / "tbl"
+    spark.range(3).write.parquet(str(d / "v=1"))  # crash leftover
+    assert history(str(d))["versions"] == []
+    assert write_snapshot(spark.range(7), str(d)) == 1
+    assert sorted(r.id for r in read_snapshot(spark, str(d)).collect()) == list(range(7))
+
+
+def test_corpus_delta_lifecycle_helpers(spark, tmp_path):
+    from pyspark.sql import functions as F
+
+    from data_engineering_challenge_spark.sinks.versioned import (
+        ensure_snapshot,
+        fold_delta_snapshot,
+        read_corpus_snapshot,
+        write_corpus_snapshot,
+    )
+
+    d = str(tmp_path / "tbl")
+    builds = []
+
+    def build():
+        builds.append(write_corpus_snapshot(spark.range(5), d))
+
+    ensure_snapshot(d, build)
+    ensure_snapshot(d, build)
+    assert builds == [1]
+
+    delta = spark.range(100, 103)
+    assert fold_delta_snapshot(spark, d, delta) == 2
+    assert fold_delta_snapshot(spark, d, delta) == 3
+    v2, v3 = (
+        sorted(map(tuple, read_snapshot(spark, d, v).collect())) for v in (2, 3)
+    )
+    assert v2 == v3 == [(i, False) for i in range(5)] + [(i, True) for i in range(100, 103)]
+
+    corpus = read_corpus_snapshot(spark, d)
+    assert corpus.columns == ["id"]
+    assert sorted(r.id for r in corpus.collect()) == list(range(5))
+    assert read_snapshot(spark, d).filter(F.col("is_delta")).count() == 3

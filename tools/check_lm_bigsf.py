@@ -216,24 +216,19 @@ def main() -> int:
         )
 
     # -- Part C: incremental fold == full retrain ----------------------
-    from data_engineering_challenge_spark.operators.dedup import (
-        INCR_DELTA_FROM,
-        _incr_bucket,
+    from data_engineering_challenge_spark.operators.dedup import is_delta_doc
+    from data_engineering_challenge_spark.sinks.versioned import (
+        ensure_snapshot,
+        read_corpus_snapshot,
     )
-    from data_engineering_challenge_spark.sinks.versioned import read_snapshot
 
     t0 = time.time()
     counts_dir = lm_counts_dir(sf_dir)
-    if not os.path.exists(os.path.join(counts_dir, "manifest.json")):
-        build_lm_corpus_counts(spark, sf_dir, counts_dir)
-    corpus_counts = (
-        read_snapshot(spark, counts_dir)
-        .filter(~F.col("is_delta"))
-        .select("kind", "key", "cnt")
+    ensure_snapshot(
+        counts_dir, lambda: build_lm_corpus_counts(spark, sf_dir, counts_dir)
     )
-    delta_stream = _bigram_stream(spark, sf_dir).filter(
-        _incr_bucket(F.col("doc_id")) >= INCR_DELTA_FROM
-    )
+    corpus_counts = read_corpus_snapshot(spark, counts_dir)
+    delta_stream = _bigram_stream(spark, sf_dir).filter(is_delta_doc("doc_id"))
     folded = (
         corpus_counts.unionByName(_train_counts(delta_stream))
         .groupBy("kind", "key")

@@ -40,6 +40,7 @@ from pyspark.sql import functions as F
 
 from data_engineering_challenge_spark.session import get_session
 from data_engineering_challenge_spark.catalog import load_table
+from data_engineering_challenge_spark.sinks.versioned import ensure_snapshot
 from data_engineering_challenge_spark.streaming import pipelines as P
 
 
@@ -185,8 +186,7 @@ def run_all(
 
     if want("landing_dedup"):
         idx = minhash_index_dir(sf_dir)
-        if not os.path.exists(os.path.join(idx, "manifest.json")):
-            build_minhash_index(spark, sf_dir, idx)
+        ensure_snapshot(idx, lambda: build_minhash_index(spark, sf_dir, idx))
         ld = P.landing_dedup_transform(spark, sf_dir, read_drop_stream(spark, ddrop))
         sec, state = drive_distributed_sink(ld, "append")
         results["landing_dedup"] = {"sec": sec, "events_per_sec": round(n_docs / sec), "state": state}
@@ -214,8 +214,7 @@ def run_all(
         if not want(nm):
             continue
         fidx = dir_fn(sf_dir)
-        if not os.path.exists(os.path.join(fidx, "manifest.json")):
-            build_fn(spark, sf_dir, fidx)
+        ensure_snapshot(fidx, lambda: build_fn(spark, sf_dir, fidx))
         fp = transform(spark, sf_dir, read_drop_stream(spark, ddrop))
         sec, state = drive_distributed_sink(fp, "append")
         results[nm] = {"sec": sec, "events_per_sec": round(n_docs / sec), "state": state}
@@ -231,8 +230,7 @@ def run_all(
     no_state = {"commit_ms": 0, "update_ms": 0, "peak_state_bytes": 0, "state_rows": 0}
     if want("landing_span"):
         sidx = span_index_dir(sf_dir)
-        if not os.path.exists(os.path.join(sidx, "manifest.json")):
-            build_span_index(spark, sf_dir, sidx)
+        ensure_snapshot(sidx, lambda: build_span_index(spark, sf_dir, sidx))
         sout = os.path.join(tempfile.gettempdir(), f"stream_bench_spans_{dkey}")
         sckpt = sout + "_ckpt"
         shutil.rmtree(sout, ignore_errors=True)
