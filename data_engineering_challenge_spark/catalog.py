@@ -12,8 +12,10 @@ from __future__ import annotations
 
 import os
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 
+from .runlog import get_logger
 from .session import apply_runtime_confs
 
 TABLES = (
@@ -82,11 +84,13 @@ def scan_partitions(df: DataFrame) -> int:
     tables hundreds of times per bench run; the split count is a pure
     function of the scan's files (+ session split confs), so one probe
     per file list amortizes the rest (guide §1.2: driver work counts).
-    Frames with no resolvable input files (in-memory test frames) fall
-    through to the direct probe."""
+    Frames with no input files (in-memory frames) fall through to the
+    direct probe, and so do frames whose file listing fails analysis
+    (a streaming frame raises AnalysisException)."""
     try:
         files = tuple(df.inputFiles())
-    except Exception:
+    except AnalysisException:
+        get_logger(__name__).debug("scan_partitions: no input files", exc_info=True)
         files = ()
     if not files:
         return df.rdd.getNumPartitions()
@@ -137,8 +141,6 @@ def spread_scan(df: DataFrame, spark: SparkSession, key: str) -> DataFrame:
         if scan_partitions(df) >= target:
             return df
     except Exception:
-        from .runlog import get_logger
-
         get_logger(__name__).warning(
             "spread_scan: partition probe failed, scan left unspread", exc_info=True
         )

@@ -5,6 +5,9 @@ API parity with the reference's validation layer:
 - :func:`col_invalid_expr`        ↔ `_col_invalid_expr` (src/utils/data_validation.py:38-61)
 - :func:`invalid_row_mask`        ↔ `invalid_row_mask` (:64-89)
 - :func:`per_column_invalid_counts` ↔ (:92-120)
+- :func:`validation_pass`         — row count, invalid-row count and
+  per-column counts in one aggregate, plus the row mask (the stats the
+  reference's loader gates on, src/db/pipeline.py:197-309)
 - :func:`invalid_values_by_column`  ↔ (:212-284)
 - :func:`value_format_profile`    ↔ `entry_error_proportions`
   (src/utils/dataset_profiling.py:773-960) — redesigned: the reference
@@ -60,6 +63,33 @@ def per_column_invalid_counts(df: DataFrame, patterns: dict[str, str], **policy)
             for c, p in patterns.items()
         ]
     )
+
+
+def validation_pass(
+    df: DataFrame, patterns: dict[str, str], **policy
+) -> tuple[dict, Column]:
+    """Every gate statistic from ONE aggregate over `df`:
+    ({"rows_in", "invalid_rows", "invalid_counts"}, bad_row).
+
+    Each column flag is built once and shared by its per-column sum and
+    the row mask, so the counts are `per_column_invalid_counts`' and
+    `invalid_row_mask`'s exactly (a column count is null on an empty
+    frame). The returned `bad_row` is the same mask, for dropping the
+    invalid rows without rebuilding it. Deequ's point (VLDB 2018):
+    compute every constraint metric from one scan."""
+    flags = {c: col_invalid_expr(c, p, **policy) for c, p in patterns.items()}
+    bad_row = reduce(or_, flags.values())
+    row = df.agg(
+        F.count(F.lit(1)).alias("rows_in"),
+        F.count_if(bad_row).alias("invalid_rows"),
+        *[F.sum(f.cast("int")).alias(f"{c}__invalid_count") for c, f in flags.items()],
+    ).first()
+    stats = {
+        "rows_in": row["rows_in"],
+        "invalid_rows": row["invalid_rows"],
+        "invalid_counts": {c: row[f"{c}__invalid_count"] for c in flags},
+    }
+    return stats, bad_row
 
 
 def invalid_values_by_column(

@@ -29,10 +29,18 @@ index lifecycle (delta-probe → fold → vacuum) — see _run_incremental.
 Every stage reports into the returned stats dict (rows in/out, invalid
 counts, output files) — the reference's load-stats surface, widened.
 
-Scale notes: stages compose lazily; the only materializations are the
-stats counts the caller asked for. Exact dedup is a hash shuffle on
-the key columns; the split is a content-hash expression (no shuffle);
-sinks inherit the partitioned/Z-order write paths' properties.
+Scale notes: stages compose lazily. A validated source is cached once
+(memory and disk, released when the run ends, a failed gate included):
+the one stats aggregate (rows in, invalid rows, per-column counts) and
+the write both read it, so the source is parsed and cleaned once, and
+the cleaning projection is compiled once, instead of once per action.
+Re-parsing a CSV batch and re-running every regex contract costs more
+than one cache write and read, at any scale. A source without
+`validate` is read by one count and the write, uncached. Exact dedup is
+a hash shuffle on the key columns; the split is a content-hash
+expression (no shuffle); sinks inherit the partitioned/Z-order write
+paths' properties; the sink is read back once for `rows_out` (and the
+split counts).
 """
 
 from __future__ import annotations
@@ -43,7 +51,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from . import schemas
-from .operators.validation import invalid_row_mask, per_column_invalid_counts
+from .operators.validation import validation_pass
 from .sinks.maintenance import write_zordered
 from .sinks.writers import write_partitioned_parquet
 from .sources.csv import ingest_csv_files
@@ -166,30 +174,36 @@ def run_pipeline(spark: SparkSession, config: dict[str, Any]) -> dict[str, Any]:
     """Execute the configured pipeline; returns per-stage stats."""
     if "incremental" in config:
         return _run_incremental(spark, config["incremental"])
-    stats: dict[str, Any] = {}
-    df = _read(spark, config["source"])
-    stats["rows_in"] = df.count()
-
+    src = _read(spark, config["source"])
     v = config.get("validate")
-    if v:
+    if not v:
+        return _run_stages(spark, src, config, {"rows_in": src.count()})
+    # the stats pass and the write both read the source: cache it so the
+    # parse and the cleaning projection run (and compile) once, and
+    # release it on every exit, a failed gate included
+    src.persist()
+    try:
         _, patterns = _TABLES[v["table"]]
-        row = per_column_invalid_counts(df, patterns).collect()[0]
-        stats["invalid_counts"] = {
-            c.removesuffix("__invalid_count"): row[c] for c in row.asDict()
-        }
-        bad = df.filter(invalid_row_mask(patterns)).count()
-        stats["invalid_rows"] = bad
+        stats, bad_row = validation_pass(src, patterns)
         gate = v.get("max_invalid_fraction")
         if gate is not None and stats["rows_in"] > 0:
-            frac = bad / stats["rows_in"]
+            frac = stats["invalid_rows"] / stats["rows_in"]
             stats["invalid_fraction"] = frac
             if frac > gate:
                 raise ValueError(
                     f"validation gate failed: {frac:.4f} invalid > {gate}"
                 )
-        if v.get("drop_invalid"):
-            df = df.filter(~invalid_row_mask(patterns))
+        df = src.filter(~bad_row) if v.get("drop_invalid") else src
+        return _run_stages(spark, df, config, stats)
+    finally:
+        src.unpersist()
 
+
+def _run_stages(
+    spark: SparkSession, df: DataFrame, config: dict[str, Any], stats: dict[str, Any]
+) -> dict[str, Any]:
+    """The stages after validation: dedup → span dedup → quality filter
+    → split → sink, then the sink read back for `rows_out`."""
     d = config.get("dedup")
     if d:
         df = df.dropDuplicates(d["keys"])
@@ -253,10 +267,13 @@ def run_pipeline(spark: SparkSession, config: dict[str, Any]) -> dict[str, Any]:
         raise ValueError(f"unknown sink mode: {mode}")
 
     out = spark.read.parquet(sink["path"])
-    stats["rows_out"] = out.count()
-    if s:
-        stats["split_counts"] = {
-            r[s.get("column", "split")]: r["count"]
-            for r in out.groupBy(s.get("column", "split")).count().collect()
-        }
+    if not s:
+        stats["rows_out"] = out.count()
+        return stats
+    # one read-back job: groupBy keeps a null group, so the group
+    # counts sum to the row count
+    col = s.get("column", "split")
+    counts = {r[col]: r["count"] for r in out.groupBy(col).count().collect()}
+    stats["rows_out"] = sum(counts.values())
+    stats["split_counts"] = counts
     return stats

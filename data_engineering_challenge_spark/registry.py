@@ -19,6 +19,8 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 
+from .runlog import get_logger
+
 SparkQuery = Callable[[SparkSession, str], DataFrame]
 
 
@@ -271,13 +273,16 @@ def track_cached(df: DataFrame) -> DataFrame:
 
 
 def drain_cache_ledger() -> None:
-    """Unpersist every ledgered frame (non-blocking)."""
+    """Unpersist every ledgered frame (non-blocking). A frame that
+    fails to unpersist is logged and the drain goes on to the rest."""
     while _CACHE_LEDGER:
         df = _CACHE_LEDGER.pop()
         try:
             df.unpersist()
         except Exception:
-            pass
+            get_logger(__name__).warning(
+                "drain_cache_ledger: unpersist failed, frame left cached", exc_info=True
+            )
 
 
 def _self_cleaning(fn: SparkQuery) -> SparkQuery:

@@ -200,3 +200,86 @@ def test_clean_to_schema_garbage_never_throws_under_ansi(spark):
         12, 3.5, datetime.date(2024, 1, 2), Decimal("7.250000"), True,
     )
     assert tuple(rows[1]) == (None, None, None, None, None)
+
+
+
+@pytest.fixture
+def validated_paths(csv_paths, tmp_path):
+    """The fixture CSVs plus a file of three contract-violating rows."""
+    bad = tmp_path / "data3.csv"
+    bad.write_text(
+        HEADER_FULL + "\n"
+        + _row(100).replace("PDV-id-0001", "PDV-x") + "\n"
+        + _row(101).replace("TID000000000101", "TIDx") + "\n"
+        + _row(102).replace("12:00:00", "noon") + "\n"
+    )
+    return [*csv_paths, str(bad)]
+
+
+def _validated_config(paths, out: str, **validate) -> dict:
+    return {
+        "source": {"format": "csv", "table": "transactions", "paths": paths, "sep": "|"},
+        "validate": {"table": "transactions", "drop_invalid": True, **validate},
+        "dedup": {"keys": ["numero_transaction"]},
+        "sink": {"mode": "plain", "path": out},
+    }
+
+
+def test_validated_pipeline_stats_match_independent_counts(spark, validated_paths, tmp_path):
+    """The single validation pass reports exactly what the separate
+    per-column, row-mask and row counts say over the same source, and
+    the sink holds the distinct keys of the valid rows."""
+    from data_engineering_challenge_spark.operators.validation import (
+        invalid_row_mask,
+        per_column_invalid_counts,
+    )
+    from data_engineering_challenge_spark.pipeline import run_pipeline
+
+    stats = run_pipeline(spark, _validated_config(validated_paths, str(tmp_path / "out")))
+
+    df = ingest_csv_files(spark, validated_paths, TRANSACTIONS_SCHEMA)
+    per_col = per_column_invalid_counts(df, TRANSACTIONS_PATTERNS).first().asDict()
+    mask = invalid_row_mask(TRANSACTIONS_PATTERNS)
+    assert stats["rows_in"] == df.count() == 39
+    assert stats["invalid_rows"] == df.filter(mask).count() == 3
+    assert stats["invalid_counts"] == {
+        c.removesuffix("__invalid_count"): n for c, n in per_col.items()
+    }
+    assert stats["rows_out"] == (
+        df.filter(~mask).select("numero_transaction").distinct().count()
+    )
+
+
+def test_validated_pipeline_reads_its_source_in_few_jobs(spark, validated_paths, tmp_path):
+    """Stats pass and write share one cached parse of the source. With
+    a separate row count, per-column count and invalid-row count over
+    the uncached source this pipeline ran 14 jobs; one aggregate over
+    the cache runs 11 (one header job per CSV file, three for the
+    cache and the aggregate, two for the deduplicating write, three
+    for the sink read-back)."""
+    from data_engineering_challenge_spark.pipeline import run_pipeline
+
+    sc = spark.sparkContext
+    group = "test:validated_pipeline_jobs"
+    sc.setJobGroup(group, group)
+    try:
+        run_pipeline(spark, _validated_config(validated_paths, str(tmp_path / "out")))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 11
+
+
+def test_failed_gate_releases_the_source_cache(spark, validated_paths, tmp_path):
+    """The gate raises before anything is written, and the cached
+    source is released on the way out."""
+    from data_engineering_challenge_spark.pipeline import run_pipeline
+
+    out = tmp_path / "out"
+    before = spark.sparkContext._jsc.getPersistentRDDs().size()
+    with pytest.raises(ValueError, match="validation gate"):
+        run_pipeline(
+            spark, _validated_config(validated_paths, str(out), max_invalid_fraction=0.0)
+        )
+    assert spark.sparkContext._jsc.getPersistentRDDs().size() == before
+    assert not out.exists()

@@ -133,6 +133,45 @@ def test_persist_ledger_drains_exactly_tracked_frames(spark):
     assert not registry._CACHE_LEDGER
 
 
+def _capture_runlog(caplog, monkeypatch, name: str, level: int) -> None:
+    """Route a runlog logger (configured not to propagate) to caplog."""
+    from data_engineering_challenge_spark.runlog import get_logger
+
+    monkeypatch.setattr(get_logger(name), "propagate", True)
+    caplog.set_level(level, logger=name)
+
+
+def test_drain_cache_ledger_logs_a_failed_unpersist_and_drains_the_rest(
+    caplog, monkeypatch
+):
+    """One frame failing to unpersist is logged with its traceback and
+    does not stop the drain."""
+    import logging
+
+    from data_engineering_challenge_spark import registry
+
+    released = []
+
+    class Frame:
+        def __init__(self, fail: bool) -> None:
+            self.fail = fail
+
+        def unpersist(self):
+            if self.fail:
+                raise RuntimeError("unpersist failed")
+            released.append(self)
+
+    _capture_runlog(caplog, monkeypatch, registry.__name__, logging.WARNING)
+    frames = [Frame(False), Frame(True), Frame(False)]
+    for f in frames:
+        registry.track_cached(f)
+    registry.drain_cache_ledger()
+    assert not registry._CACHE_LEDGER
+    assert sorted(map(id, released)) == sorted([id(frames[0]), id(frames[2])])
+    [rec] = [r for r in caplog.records if r.name == registry.__name__]
+    assert rec.levelno == logging.WARNING and rec.exc_info is not None
+
+
 def test_salted_count_distinct_spreads_zipf_hot_key(spark):
     """Skew realism (VERDICT r3 stretch): the salted rewrite is only
     worth shipping if a Zipf-skewed hot key actually SPREADS. Build a
@@ -242,6 +281,35 @@ def test_spread_scan_logs_a_failed_partition_probe(spark, monkeypatch):
     finally:
         log.removeHandler(keep)
     assert [r.levelno for r in records] == [logging.WARNING]
+
+
+def test_scan_partitions_falls_back_when_the_file_listing_fails_analysis(
+    caplog, monkeypatch
+):
+    """A frame whose inputFiles() fails analysis (as a streaming frame
+    does) gets the direct partition probe and a debug record; any
+    other probe error propagates."""
+    import logging
+
+    import pytest
+    from pyspark.errors import AnalysisException
+
+    from data_engineering_challenge_spark import catalog
+
+    class Frame:
+        def __init__(self, error: Exception) -> None:
+            self.error = error
+            self.rdd = type("Rdd", (), {"getNumPartitions": lambda _: 3})()
+
+        def inputFiles(self):
+            raise self.error
+
+    _capture_runlog(caplog, monkeypatch, catalog.__name__, logging.DEBUG)
+    assert catalog.scan_partitions(Frame(AnalysisException("streaming source"))) == 3
+    [rec] = [r for r in caplog.records if r.name == catalog.__name__]
+    assert rec.levelno == logging.DEBUG and rec.exc_info is not None
+    with pytest.raises(RuntimeError):
+        catalog.scan_partitions(Frame(RuntimeError("not an analysis error")))
 
 
 def test_sessionize_hybrid_hot_path_matches_lag_semantics(spark):

@@ -21,9 +21,7 @@ import sys
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from data_engineering_challenge_spark import schemas
-from data_engineering_challenge_spark.operators.validation import (
-    per_column_invalid_counts,
-)
+from data_engineering_challenge_spark.operators.validation import validation_pass
 from data_engineering_challenge_spark.session import get_session
 from data_engineering_challenge_spark.sinks.writers import (
     verify_rowcount,
@@ -54,8 +52,8 @@ def main(argv: list[str] | None = None) -> int:
     )
     stats: dict[str, object] = {"table": args.table, "files": args.files}
     if args.validate:
-        counts = per_column_invalid_counts(df, patterns).first().asDict()
-        stats["invalid_counts"] = {k: v for k, v in counts.items() if v}
+        counts = validation_pass(df, patterns)[0]["invalid_counts"]
+        stats["invalid_counts"] = {f"{c}__invalid_count": n for c, n in counts.items() if n}
     write_partitioned_parquet(df, args.out, date_col=date_col)
     src, written, match = verify_rowcount(spark, df, args.out)
     stats.update({"rows_read": src, "rows_written": written, "reconciled": match})
