@@ -1,7 +1,7 @@
 """LSH banding primitives shared by every near-dup family.
 
-Two families, each with its Spark builders and the DuckDB CTE twin the
-oracles use, so engine and oracle cannot drift apart:
+Three families, each with its Spark builders and the DuckDB CTE twin
+the oracles use, so engine and oracle cannot drift apart:
 
 - MinHash (minhash_lsh_pairs, minhash_precision_audit,
   incremental_dedup, dedup_source_matrix, fuzzy_decontaminate and the
@@ -14,6 +14,11 @@ oracles use, so engine and oracle cannot drift apart:
   bits (pigeonhole-complete for Hamming <= FP_CHUNKS - 1); docs that
   share a (c, chunk) bucket pair up with the popcount verify inside the
   join condition, so candidates are never materialized.
+- Sign-LSH (ann_lsh_topk, embedding_cosine_pairs): each embedding `v`
+  gets LSH_BANDS bucket ids of PLANES_PER_BAND sign bits against
+  deterministic md5 hyperplanes; vectors that share a (band, bucket)
+  are cosine candidates, and embedding_cosine_pairs drops buckets
+  denser than _cosine_bucket_cap(n).
 
 The MinHash family materializes candidates and joins the signatures
 back, while the Hamming family carries the fingerprint on the band
@@ -25,6 +30,9 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
+from pyspark.storagelevel import StorageLevel
+
+from ..functions.vectors import hyperplanes
 
 NUM_MINHASH = 16
 MINHASH_BANDS = 4  # 4 bands x 4 rows
@@ -298,4 +306,90 @@ def fp_pairs_cte(pfx: str, max_hamming: int) -> str:
             JOIN {pfx}bands b
               ON a.c = b.c AND a.chunk = b.chunk AND a.doc_id < b.doc_id
             WHERE bit_count(xor(a.fp, b.fp)) <= {max_hamming}
+        )"""
+
+
+# -- Sign-LSH ---------------------------------------------------------------
+
+LSH_BANDS = 4  # 4 independent 8-bit sign-LSH bucketings; candidates = union
+PLANES_PER_BAND = 8
+DIM = 64  # embedding width the hyperplanes span
+# Hot-bucket cap for embedding_cosine_pairs (SCALING.md "Threshold
+# provenance"): a sign-LSH band has only 2^PLANES_PER_BAND = 256
+# buckets, so on a clustered corpus one (band, bucket) can hold a whole
+# cluster → k² candidates in the self-join regardless of AQE (the sf10
+# gen_sf corpus put ~3200 vectors in each cluster bucket → 35.9M output
+# pairs). Unlike MinHash's md5 band-hash (unbounded key space, absolute
+# cap works), fixed-resolution sign buckets densify LINEARLY with
+# corpus size, so the cap is RELATIVE: drop buckets more than
+# COSINE_BUCKET_CAP_FACTOR× denser than the uniform expectation
+# n/256, floored at COSINE_BUCKET_CAP_MIN so small corpora keep every
+# bucket. Both engines derive the cap from the same integer COUNT →
+# bit-replayable. Dropped buckets are dense near-duplicate cores whose
+# pairs carry no ranking information (same rationale as
+# MAX_BAND_BUCKET); recall degrades per-band, gracefully. At
+# cluster scale the structural fix is PLANES_PER_BAND ≈ log2(n) so
+# bucket count tracks corpus size; the cap is the skew escape hatch
+# that holds either way.
+COSINE_BUCKET_CAP_MIN = 64
+COSINE_BUCKET_CAP_FACTOR = 8
+
+
+def _cosine_bucket_cap(n: int) -> int:
+    """max(64, 8·⌈n/256⌉) — mirrored literally in the oracle CTE."""
+    n_buckets = 1 << PLANES_PER_BAND
+    return max(
+        COSINE_BUCKET_CAP_MIN,
+        COSINE_BUCKET_CAP_FACTOR * ((n + n_buckets - 1) // n_buckets),
+    )
+
+
+def _band_bucket_sql(vec: str, band: int) -> str:
+    """8-bit sign-LSH bucket id for one band in DuckDB SQL."""
+    planes = hyperplanes(LSH_BANDS * PLANES_PER_BAND, DIM)
+    terms = []
+    for j in range(PLANES_PER_BAND):
+        w_ = planes[band * PLANES_PER_BAND + j]
+        arr = "[" + ", ".join(f"{x}.0" for x in w_) + "]"
+        proj = f"list_sum(list_transform(range(1, {DIM + 1}), i -> {vec}[i] * ({arr})[i]))"
+        terms.append(f"(CASE WHEN {proj} >= 0 THEN {1 << j} ELSE 0 END)")
+    return "(" + " + ".join(terms) + ")"
+
+
+def _band_bucket_col(vec_name: str, band: int) -> F.Column:
+    """8-bit sign-LSH bucket id for one band, built as ONE SQL string
+    parsed JVM-side: the same tree built from Column operators costs
+    ~2,000 py4j round trips per query (8 planes x 64 F.lit calls x 4
+    bands), ~2 s of driver-side DataFrame build time at any SF. Same
+    aggregate/zip_with fold, literals and fold order, so scores stay
+    bit-identical — pinned by the oracle hash match."""
+    planes = hyperplanes(LSH_BANDS * PLANES_PER_BAND, DIM)
+    terms = []
+    for j in range(PLANES_PER_BAND):
+        w_ = planes[band * PLANES_PER_BAND + j]
+        arr = "array(" + ", ".join(f"{float(x)}D" for x in w_) + ")"
+        proj = (
+            f"aggregate(zip_with({vec_name}, {arr}, (x, y) -> x * y), "
+            "0.0D, (acc, x) -> acc + x)"
+        )
+        terms.append(f"(CASE WHEN {proj} >= 0 THEN {1 << j} ELSE 0 END)")
+    return F.expr("(" + " + ".join(terms) + ")")
+
+
+def sign_lsh_buckets(e: DataFrame) -> DataFrame:
+    """(vec_id, band, bucket): one row per band of each vector `v` in
+    `e`, persisted — every consumer reads it twice (probe and corpus
+    side, or both sides of the bucket self-join)."""
+    from ..registry import track_persist
+
+    band_arr = F.array(*[_band_bucket_col("v", b) for b in range(LSH_BANDS)])
+    return track_persist(
+        e.select("vec_id", F.posexplode(band_arr).alias("band", "bucket")),
+        StorageLevel.MEMORY_AND_DISK,
+    )
+
+
+# DuckDB twin of sign_lsh_buckets over an `e(vec_id, v)` CTE.
+SIGN_LSH_BUCKETS_SQL = f"""buckets AS (
+            {" UNION ALL ".join(f"SELECT vec_id, {b} AS band, {_band_bucket_sql('v', b)} AS bucket FROM e" for b in range(LSH_BANDS))}
         )"""

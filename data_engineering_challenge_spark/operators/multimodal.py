@@ -21,7 +21,8 @@ from __future__ import annotations
 
 import hashlib
 import os
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
+from dataclasses import dataclass
 from functools import lru_cache
 
 import pandas as pd
@@ -33,6 +34,8 @@ from ..catalog import load_table, spread_scan
 from ..functions.text import NORM_SQL as _NORM_SQL
 from ..registry import register
 from .banding import (
+    FP_CHUNK_BITS,
+    FP_CHUNKS,
     banded_self_pairs,
     fp_pairs_cte,
     incremental_fp_pairs,
@@ -603,18 +606,17 @@ def _png_audit_columns(doc_ids) -> dict[str, list]:
     tags=("multimodal", "udf", "extension"),
 )
 def png_roundtrip_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # RecordBatch-native (mapInArrow) since r9. Measured against the
-    # pandas bridge (tools/codec_bench.py, CODEC_BENCH_r09.json): the
-    # difference is noise-level (arrow/pandas best-of-3 ratio 1.03× at
-    # sf0.1, 0.96× at sf1) because the zlib codec dominates the batch
-    # adapter entirely. Arrow kept as the registered path: one fewer
-    # conversion layer, no pandas requirement in the hot loop.
+    # RecordBatch-native (mapInArrow). Against a mapInPandas bridge the
+    # difference is noise-level (CODEC_BENCH_r09.json: best-of-3 ratio
+    # 1.03x at sf0.1, 0.96x at sf1) because the zlib codec dominates
+    # the batch adapter; Arrow keeps one fewer conversion layer and no
+    # pandas in the hot loop.
     import pyarrow as pa
 
     from ..catalog import spread_scan
 
-    # r10: zlib encode/decode per doc is compute-dense Python; the
-    # single-file test scan ran it on ONE task (see spread_scan)
+    # zlib encode/decode per doc is compute-dense Python; a single-file
+    # scan would run it on ONE task (see spread_scan)
     d = spread_scan(load_table(spark, sf_dir, "documents"), spark, "doc_id")
     out_schema = pa.schema(
         [
@@ -634,23 +636,6 @@ def png_roundtrip_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     return (
         d.select("doc_id").mapInArrow(op, schema=PNG_AUDIT_SCHEMA).orderBy("doc_id")
-    )
-
-
-def png_roundtrip_audit_pandas(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The r8 pandas-bridge variant, kept for the bench comparison
-    (tools/codec_bench.py) — same rows, same plan shape, two extra
-    pandas conversions per batch."""
-    from ..catalog import spread_scan
-
-    d = spread_scan(load_table(spark, sf_dir, "documents"), spark, "doc_id")
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(_png_audit_columns(pdf["doc_id"]))
-
-    return (
-        d.select("doc_id").mapInPandas(op, schema=PNG_AUDIT_SCHEMA).orderBy("doc_id")
     )
 
 
@@ -916,30 +901,62 @@ def wav_roundtrip_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Perceptual-hash image near-dup detection (round 10): the stage that
-# CONNECTS the real stdlib codecs above to the banded-Hamming dedup
-# machinery (operators/banding.py) — the image-content
-# near-duplicate detector every production multimodal corpus pipeline
+# Media near-dup detection: the stage that CONNECTS the real stdlib
+# codecs above to the banded-Hamming dedup machinery
+# (operators/banding.py) — the image (pHash) and audio (wavhash)
+# near-duplicate detectors every production multimodal corpus pipeline
 # runs before training. No reference analogue (the reference is
 # text/tabular only); north-star extension per SURVEY.md §7.4.
 #
-# Hash: average-hash (aHash) over a 60-cell luma grid. 60 bits, not
-# 64, so the fingerprint fits a signed BIGINT exactly in both engines
-# (same reasoning as SIMHASH_BITS); 4x15-bit chunk banding is
-# pigeonhole-complete for Hamming <= 3.
+# Both kinds share one corpus model and one hash shape; an FpKind
+# (below) holds only what differs — the codec and the oracle's replay
+# of it. Docs come in groups of FP_GROUP sharing a base content: v0 the
+# original, v1 a resized/resampled copy (the planted Hamming-0 pin),
+# v2 a 2-value-perturbed copy (small-but-nonzero Hamming), v3 unrelated
+# content (the precision foil). The hash is an average threshold over
+# FP_BITS per-cell features: bit i iff FP_BITS * x_i > sum(x). 60 bits,
+# not 64, so the fingerprint fits a signed BIGINT exactly in both
+# engines (same reasoning as SIMHASH_BITS); 4x15-bit chunk banding is
+# pigeonhole-complete for Hamming <= FP_MAX_HAMMING.
 #
-# Scale posture (100 TB): the per-doc decode→resize→hash runs in one
+# Scale posture (100 TB): the per-doc synth→decode→hash runs in one
 # Arrow-batched mapInPandas pass (payloads never leave executors); the
 # only shuffle is the 4-rows-per-doc band table keyed on (c, chunk),
 # with the Hamming verify inside the band join (banding.banded_self_pairs).
+# The nightly lifecycle keeps a frozen versioned index (sinks/versioned.py)
+# of ONE 16-byte (doc_id, fp) row per corpus doc: the corpus side of the
+# nightly dedup is a fingerprint-table scan, never a decode; only the
+# delta pays the synth/decode/hash pass.
 
-PHASH_GROUP = 4          # docs per synthetic dup group (bounds pairs linearly)
+FP_GROUP = 4  # docs per synthetic dup group (bounds pairs linearly)
+FP_BITS = FP_CHUNKS * FP_CHUNK_BITS  # 60
+FP_MAX_HAMMING = 3
+_FOIL_CID = 1_000_000_007  # v3's content id offset (unrelated content)
+FP_SCHEMA = "doc_id bigint, fp bigint"
+
+
+def _doc_content(doc_id: int) -> tuple[int, int]:
+    """(content id, variant) of a doc under the FP_GROUP corpus model."""
+    g, v = divmod(doc_id, FP_GROUP)
+    return (g + _FOIL_CID if v == 3 else g), v
+
+
+def _average_bits(xs: list[int]) -> int:
+    """Bit i set iff FP_BITS * xs[i] > sum(xs) — integer arithmetic,
+    bit-identical to the oracle's threshold CTE."""
+    total = sum(xs)
+    fp = 0
+    for i, x in enumerate(xs):
+        if FP_BITS * x > total:
+            fp |= 1 << i
+    return fp
+
+
+# -- image: average-hash over a 60-cell luma grid of a real 24-bit BMP
+
 PHASH_BASE = 16          # base image is 16x16 — a multiple of 8, so every
 #                          integer upscale samples back to the SAME 8x8 grid
 PHASH_SCALES = (1, 2, 1, 1)  # per-variant upscale: v1 is a 2x resized copy
-PHASH_BITS = 60
-PHASH_MAX_HAMMING = 3
-_PHASH_DISTINCT_CID = 1_000_000_007  # v3 gets unrelated content (precision foil)
 
 
 def _phash_base_pixel(cid: int, i: int, j: int) -> tuple[int, int, int]:
@@ -966,10 +983,9 @@ def _phash_base_grid(cid: int) -> tuple:
 @lru_cache(maxsize=4096)
 def _phash_grid_rows(cid: int) -> tuple[bytes, ...]:
     """Per-row BGR byte strings of the 16x16 base image — the encode
-    path's unit of work. r10 (guide §4.2): the original per-pixel
-    encode called pix() 256-1024x per doc; building rows as bytes once
-    per cid and splicing them is ~10x less Python per doc while
-    producing byte-identical BMPs (pinned by the roundtrip test)."""
+    path's unit of work. Building rows as bytes once per cid and
+    splicing them is ~10x less Python per doc than a per-pixel encode
+    while producing byte-identical BMPs (pinned by the roundtrip test)."""
     return tuple(
         b"".join(bytes((b_, g_, r_)) for (r_, g_, b_) in row)
         for row in _phash_base_grid(cid)
@@ -977,14 +993,10 @@ def _phash_grid_rows(cid: int) -> tuple[bytes, ...]:
 
 
 def _phash_doc_image(doc_id: int) -> tuple[int, int, bytes]:
-    """Synthesize the doc's image as REAL 24-bit BMP bytes.
-
-    Corpus model: docs come in groups of PHASH_GROUP sharing a base
-    image — v0 the original, v1 a 2x nearest-neighbor resized copy
-    (the planted near-dup: same 8x8 grid, Hamming 0), v2 the original
-    with two sampled pixels blown to white/black (small-but-nonzero
-    Hamming — pairs only if the mean shift flips <= 3 grid bits), v3
-    unrelated content (the precision foil). Returns (W, H, bmp).
+    """Synthesize the doc's image as REAL 24-bit BMP bytes: v1 is a 2x
+    nearest-neighbor resized copy (same 8x8 grid, Hamming 0), v2 has
+    two sampled pixels blown to white/black (pairs only if the mean
+    shift flips <= 3 grid bits). Returns (W, H, bmp).
 
     Byte-identical to encode_bmp over the per-pixel grid (pinned by
     test_phash), but assembled from cached per-row BGR byte strings:
@@ -992,8 +1004,7 @@ def _phash_doc_image(doc_id: int) -> tuple[int, int, bytes]:
     plus row repetition, both bytes-level splices."""
     import struct
 
-    g, v = doc_id // PHASH_GROUP, doc_id % PHASH_GROUP
-    cid = g + _PHASH_DISTINCT_CID if v == 3 else g
+    cid, v = _doc_content(doc_id)
     s = PHASH_SCALES[v]
     rows = list(_phash_grid_rows(cid))
     if v == 2:
@@ -1026,13 +1037,13 @@ def ahash60_of_bmp(payload: bytes) -> int:
     the 60 cells). Integer arithmetic end to end — bit-identical in
     the SQL oracle.
 
-    r10 (guide §4.2): samples the 60 needed pixels DIRECTLY at their
-    payload offsets instead of materializing the full pixel grid
-    through decode_bmp + resize_nearest — the old path built up to
-    1024 tuples per doc to read 60 of them. Header validation and the
-    sample-coordinate arithmetic (int(y/scale) float division) are
-    copied verbatim from decode_bmp/resize_nearest; equality with the
-    generic-codec path is pinned by test_phash."""
+    Samples the 60 needed pixels DIRECTLY at their payload offsets
+    instead of materializing the full pixel grid through decode_bmp +
+    resize_nearest, which built up to 1024 tuples per doc to read 60 of
+    them. Header validation and the sample-coordinate arithmetic
+    (int(y/scale) float division) are copied verbatim from
+    decode_bmp/resize_nearest; equality with the generic-codec path is
+    pinned by test_phash."""
     import struct
 
     if payload[:2] != b"BM":
@@ -1044,10 +1055,10 @@ def ahash60_of_bmp(payload: bytes) -> int:
     compression = struct.unpack_from("<I", payload, 30)[0]
     if bpp != 24 or compression != 0:
         raise ValueError(f"unsupported BMP: bpp={bpp} compression={compression}")
-    # r11 (ADVICE): the direct-offset sampler applies scale=8/w to BOTH
-    # axes, which is only the decode_bmp+resize_nearest equivalent for
-    # square grids >= 8px; keep malformed inputs loud instead of
-    # returning a clamped, silently wrong hash (codec-path strictness).
+    # the direct-offset sampler applies scale=8/w to BOTH axes, which is
+    # only the decode_bmp+resize_nearest equivalent for square grids
+    # >= 8px; keep malformed inputs loud instead of returning a clamped,
+    # silently wrong hash (codec-path strictness)
     if w != h or w < 8:
         raise ValueError(f"ahash60_of_bmp expects a square BMP >= 8px, got {w}x{h}")
     row_size = (3 * w + 3) // 4 * 4
@@ -1057,264 +1068,51 @@ def ahash60_of_bmp(payload: bytes) -> int:
         sy = min(h - 1, int(y / scale))
         base = off + (h - 1 - sy) * row_size
         for x in range(8):
-            if 8 * y + x >= PHASH_BITS:
+            if 8 * y + x >= FP_BITS:
                 continue
             p = base + 3 * min(w - 1, int(x / scale))
             lumas.append(
                 (77 * payload[p + 2] + 150 * payload[p + 1] + 29 * payload[p]) >> 8
             )
-    total = sum(lumas)
-    fp = 0
-    for idx, l in enumerate(lumas):
-        if PHASH_BITS * l > total:
-            fp |= 1 << idx
-    return fp
+    return _average_bits(lumas)
 
 
-PHASH_SCHEMA = "doc_id bigint, fp bigint"
-
-
-def _phash_f_ctes(pfx: str = "") -> str:
-    """CTE chain computing the image fingerprint table ``{pfx}f(doc_id,
-    fp)`` relationally (pixel synthesis → luma → threshold). Prefixed
-    so two modalities' chains can coexist in one oracle."""
+def _phash_feat_ctes(pfx: str) -> str:
+    """Oracle replay of the image pixels: {pfx}p -> {pfx}feat(doc_id,
+    idx, val = luma of grid cell idx)."""
     return f"""
-        {pfx}p AS (
-            SELECT doc_id,
-                   CASE WHEN doc_id % {PHASH_GROUP} = 3
-                        THEN doc_id // {PHASH_GROUP} + {_PHASH_DISTINCT_CID}
-                        ELSE doc_id // {PHASH_GROUP} END AS cid,
-                   doc_id % {PHASH_GROUP} AS v
-            FROM documents
-        ),
         {pfx}cells AS (
             SELECT doc_id, cid, v, 8 * y + x AS idx, 2 * x AS i, 2 * y AS j
             FROM {pfx}p, range(0, 8) rx(x), range(0, 8) ry(y)
-            WHERE 8 * y + x < {PHASH_BITS}
+            WHERE 8 * y + x < {FP_BITS}
         ),
-        {pfx}px AS (
+        {pfx}feat AS (
             SELECT doc_id, idx,
                    CASE WHEN v = 2 AND i = 0 AND j = 0 THEN 255
                         WHEN v = 2 AND i = 14 AND j = 0 THEN 0
                         ELSE (77 * ('0x' || substr(m, 1, 2))::INT
                             + 150 * ('0x' || substr(m, 3, 2))::INT
                             + 29 * ('0x' || substr(m, 5, 2))::INT) // 256
-                   END AS luma
+                   END AS val
             FROM (
                 SELECT doc_id, v, idx, i, j,
                        md5('px:' || CAST(cid AS VARCHAR) || ':'
                            || CAST(i AS VARCHAR) || ':' || CAST(j AS VARCHAR)) AS m
                 FROM {pfx}cells
             )
-        ),
-        {pfx}tot AS (
-            SELECT doc_id, SUM(luma) AS total FROM {pfx}px GROUP BY doc_id
-        ),
-        {pfx}f AS (
-            SELECT {pfx}px.doc_id,
-                   CAST(SUM(CASE WHEN {PHASH_BITS} * luma > total
-                                 THEN (1::BIGINT << idx) ELSE 0 END) AS BIGINT) AS fp
-            FROM {pfx}px JOIN {pfx}tot USING (doc_id)
-            GROUP BY {pfx}px.doc_id
         )"""
 
 
-def _phash_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(doc_id, fp): synthesize the doc's BMP, then hash it THROUGH the
-    codec — every fingerprint has passed through actual BMP bytes
-    (header offsets, bottom-up rows, padding), not an arithmetic
-    shortcut. One Arrow-batched pass, zero shuffle (the group-keyed
-    spread only redistributes the single-file scan at test SFs — a
-    multi-file 100-TB layout is already parallel)."""
-    # spread keyed on the dup GROUP: a group's docs land in one
-    # partition, so the per-worker base-grid lru_cache hits
-    return phash_of_payload_rows(
-        spread_scan(
-            load_table(spark, sf_dir, "documents"), spark, f"doc_id div {PHASH_GROUP}"
-        )
-    )
+# -- audio: average-energy hash over 60 frames of a real mono PCM WAV.
+# The production scenario is "the same clip ingested twice at different
+# sample rates": a nearest-neighbor-resampled copy has every frame
+# energy scaled by the resample ratio, so the average-energy threshold
+# is exactly invariant under integer nearest resampling — the 1-D twin
+# of the aHash upscale invariance.
 
-
-@register(
-    "phash_pairs",
-    oracle=f"""
-        WITH {_phash_f_ctes()}, {fp_pairs_cte("", PHASH_MAX_HAMMING)}
-        SELECT doc_a, doc_b, hamming FROM pairs
-        ORDER BY doc_a, doc_b
-    """,
-    doc="Perceptual-hash image near-dup pairs: per doc, synthesize a "
-    "REAL 24-bit BMP (md5-derived pixels; docs come in groups of 4 "
-    "sharing a base image — original, 2x nearest-neighbor resized "
-    "copy, 2-pixel-perturbed copy, unrelated foil), DECODE the bytes, "
-    "nearest-neighbor resize to 8x8, 60-bit luma average-hash "
-    "(integer (77r+150g+29b)>>8, bit set iff 60*luma > grid total), "
-    "then 4x15-bit chunk banding (pigeonhole-complete for Hamming<=3) "
-    "with the popcount verify evaluated inside the band join. The "
-    "resized copy reproduces the original's 8x8 grid exactly (base "
-    "dims are a multiple of 8), so every (v0,v1) group pair is a "
-    "planted Hamming-0 recall pin; the oracle replays pixel "
-    "generation, luma, thresholding, banding and popcount "
-    "relationally from the same md5 slices — the engine's values have "
-    "additionally passed through actual BMP bytes (header offsets, "
-    "bottom-up rows, row padding).",
-    tags=("multimodal", "dedup", "lsh", "udf", "extension"),
-)
-def phash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..registry import track_persist
-
-    # persist: the band SELF-join consumes the fingerprint frame twice,
-    # and Spark does not CSE across self-join sides — unpersisted, the
-    # decode/hash Arrow pass would run once per side (the simhash
-    # _reused rule; at cluster scale this is the stored-fingerprint
-    # stage a production run would write to parquet anyway)
-    f_ = track_persist(_phash_fingerprints(spark, sf_dir))
-    return banded_self_pairs(f_, PHASH_MAX_HAMMING)
-
-
-# ---------------------------------------------------------------------------
-# Frozen phash index + incremental probe (round 10): the image family
-# gets the same nightly lifecycle every other dedup family has
-# (build -> probe delta against frozen index -> fold -> stream twin).
-# The index is a versioned snapshot (sinks/versioned.py) holding ONE
-# 16-byte row per corpus image: (doc_id, fp) — at 100 TB the corpus
-# side of the nightly image dedup is a fingerprint-table scan, never
-# an image decode; only the delta pays the synth/decode/hash pipeline.
-
-
-def _fp_index_dir(sf_dir: str, prefix: str) -> str:
-    from ..sinks.versioned import fingerprint_dir
-
-    return fingerprint_dir(sf_dir, "documents", prefix=prefix)
-
-
-def _build_fp_index(spark, sf_dir: str, table_dir: str, fp_fn) -> int:
-    """Fingerprint the corpus slice and publish (doc_id, fp) as a
-    versioned snapshot. Generic over the modality's fingerprint pass
-    (`fp_fn`: (spark, sf_dir) -> (doc_id, fp) frame) — shared by phash
-    and wavhash."""
-    from ..sinks.versioned import write_corpus_snapshot
-
-    fps = fp_fn(spark, sf_dir).filter(~is_delta_doc("doc_id"))
-    return write_corpus_snapshot(fps, table_dir)
-
-
-def _extend_fp_index(spark, sf_dir: str, table_dir: str, fp_fn) -> int:
-    """Fold the delta batch's fingerprints into snapshot v+1."""
-    from ..sinks.versioned import fold_delta_snapshot
-
-    delta = fp_fn(spark, sf_dir).filter(is_delta_doc("doc_id"))
-    return fold_delta_snapshot(spark, table_dir, delta)
-
-
-def phash_index_dir(sf_dir: str) -> str:
-    return _fp_index_dir(sf_dir, "phash2_")
-
-
-def build_phash_index(spark: SparkSession, sf_dir: str, table_dir: str) -> int:
-    return _build_fp_index(spark, sf_dir, table_dir, _phash_fingerprints)
-
-
-def extend_phash_index(spark: SparkSession, sf_dir: str, table_dir: str) -> int:
-    return _extend_fp_index(spark, sf_dir, table_dir, _phash_fingerprints)
-
-
-@register(
-    "incremental_phash_pairs",
-    oracle=f"""
-        WITH {_phash_f_ctes()}, {fp_pairs_cte("", PHASH_MAX_HAMMING)}
-        SELECT doc_a, doc_b, hamming FROM pairs
-        WHERE {_INCR_PAIR_FILTER_SQL}
-        ORDER BY doc_a, doc_b
-    """,
-    doc="Incremental image dedup: the NEW batch's images (incremental "
-    "buckets >= 90, the standard salted split) are fingerprinted fresh "
-    "(synth -> BMP decode -> 8x8 luma aHash) and probed against the "
-    "FROZEN phash index of the other 90% — read back as a 16-byte-row "
-    "snapshot scan, never a corpus re-decode. Candidates come from "
-    "joining the delta's band rows against the union of index and "
-    "delta bands with the Hamming verify inside the join condition; "
-    "results are pair-identical to a full-corpus phash_pairs run "
-    "restricted to delta-involved pairs, which is what the oracle "
-    "replays. Nightly cost is O(delta) decode plus a fingerprint scan.",
-    tags=("multimodal", "dedup", "lsh", "incremental", "udf", "extension"),
-)
-def incremental_phash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return incremental_fp_pairs(
-        spark, sf_dir, phash_index_dir(sf_dir), build_phash_index,
-        _phash_fingerprints, PHASH_MAX_HAMMING,
-    )
-
-
-def phash_of_payload_rows(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """(doc_id, fp) of an arbitrary doc frame via the same synth ->
-    REAL-BMP-decode -> aHash pass — streaming-safe (stateless
-    mapInPandas), shared by the batch fingerprint pass and the landing
-    filter below."""
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids = [int(x) for x in pdf[id_col]]
-            fps = []
-            for did in ids:
-                _, _, payload = _phash_doc_image(did)
-                fps.append(ahash60_of_bmp(payload))
-            yield pd.DataFrame({"doc_id": ids, "fp": fps})
-
-    return df.select(id_col).mapInPandas(op, schema=PHASH_SCHEMA)
-
-
-def landing_phash_transform(
-    spark: SparkSession, sf_dir: str, raw: DataFrame
-) -> DataFrame:
-    """Landing-zone image near-dup filter as a transform over an
-    arbitrary documents stream: arriving delta docs are fingerprinted
-    per row (stateless Arrow pass) and probed against the FROZEN phash
-    index via a stream-static band join — 'is this incoming image a
-    near-dup of anything we already hold?'. Stream scope is
-    corpus-delta pairs only (delta-delta pairs within the stream are
-    the batch incremental_phash_pairs' job — the same stream/batch
-    split landing_dedup_transform documents); pinned in tests against
-    the batch query restricted to corpus partners."""
-    return landing_fp_transform(
-        spark, sf_dir, raw, phash_index_dir(sf_dir), build_phash_index,
-        phash_of_payload_rows, PHASH_MAX_HAMMING,
-    )
-
-
-def incremental_phash_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """readStream wiring of the landing-zone image filter (file-drop
-    source; production swaps in kafka options)."""
-    from ..streaming.pipelines import _read_parquet_stream
-
-    return landing_phash_transform(
-        spark, sf_dir, _read_parquet_stream(spark, f"{sf_dir}/documents.parquet")
-    )
-
-
-# ---------------------------------------------------------------------------
-# Audio-fingerprint near-dup detection (round 10): the audio twin of
-# the phash family — the stage that connects the stdlib WAV codec above
-# (encode_wav/decode_wav, wav_roundtrip_audit) to the banded-Hamming
-# dedup machinery. The production scenario is "the same clip ingested
-# twice at different sample rates": a nearest-neighbor-resampled copy
-# of a clip has per-frame energies scaled by the resample ratio, so an
-# average-energy hash (bit f set iff FRAMES * E_f > total energy) is
-# exactly invariant under integer nearest resampling — the 1-D twin of
-# the aHash upscale invariance. No reference analogue (the reference is
-# text/tabular only); north-star extension per SURVEY.md §7.4.
-#
-# Scale posture is the phash section's verbatim: one Arrow-batched
-# mapInPandas synth→REAL-RIFF-decode→hash pass (payloads never leave
-# executors), then the shared 4×15-bit band self-join with the popcount
-# verify inside the join condition (banding.banded_self_pairs).
-
-WAVHASH_GROUP = 4        # docs per synthetic dup group (bounds pairs linearly)
-WAVHASH_FRAMES = 60      # one bit per frame — fits a signed BIGINT exactly
 WAVHASH_FRAME = 4        # base samples per frame -> 240-sample base clip
 WAVHASH_RATES = (8000, 16000, 8000, 8000)  # v1 is the same clip at 2x rate
-WAVHASH_MAX_HAMMING = 3
-_WAVHASH_DISTINCT_CID = 1_000_000_007  # v3 gets unrelated content (foil)
-_WAVHASH_BASE_N = WAVHASH_FRAMES * WAVHASH_FRAME
+_WAVHASH_BASE_N = FP_BITS * WAVHASH_FRAME
 
 
 def _wavhash_base_sample(cid: int, k: int) -> int:
@@ -1334,17 +1132,12 @@ def _wavhash_base_clip(cid: int) -> tuple:
 
 
 def _wavhash_doc_audio(doc_id: int) -> tuple[int, bytes]:
-    """Synthesize the doc's clip as REAL mono 16-bit PCM WAV bytes.
-
-    Corpus model (the phash group structure, transposed): docs come in
-    groups of WAVHASH_GROUP sharing a base clip — v0 the original at
-    8 kHz, v1 the SAME clip nearest-resampled 2x and stored at 16 kHz
-    (the planted near-dup: every frame's energy doubles, Hamming 0),
-    v2 the original with two samples blown to full-scale/silence
-    (small-but-nonzero Hamming), v3 unrelated content (the precision
-    foil). Returns (sample_rate, wav_bytes)."""
-    g, v = doc_id // WAVHASH_GROUP, doc_id % WAVHASH_GROUP
-    cid = g + _WAVHASH_DISTINCT_CID if v == 3 else g
+    """Synthesize the doc's clip as REAL mono 16-bit PCM WAV bytes: v0
+    at 8 kHz, v1 the SAME clip nearest-resampled 2x and stored at
+    16 kHz (every frame's energy doubles, Hamming 0), v2 with two
+    samples blown to full-scale/silence. Returns (sample_rate,
+    wav_bytes)."""
+    cid, v = _doc_content(doc_id)
     base = list(_wavhash_base_clip(cid))
     if v == 2:
         base[0] = 32767   # frame 0 energy up
@@ -1356,51 +1149,25 @@ def _wavhash_doc_audio(doc_id: int) -> tuple[int, bytes]:
 
 def wavhash60_of_wav(payload: bytes) -> int:
     """60-bit average-energy hash of a WAV payload: DECODE the real
-    RIFF bytes, split into WAVHASH_FRAMES equal frames, take the
-    integer energy E_f = sum(|sample|) per frame, and set bit f iff
-    FRAMES * E_f > total energy. Integer arithmetic end to end —
-    bit-identical in the SQL oracle — and exactly invariant under
-    integer nearest-neighbor resampling (E_f scales uniformly)."""
+    RIFF bytes, split into FP_BITS equal frames, take the integer
+    energy E_f = sum(|sample|) per frame, and set bit f iff FP_BITS *
+    E_f > total energy. Integer arithmetic end to end — bit-identical
+    in the SQL oracle — and exactly invariant under integer
+    nearest-neighbor resampling (E_f scales uniformly)."""
     _, samples = decode_wav(payload)
-    flen = len(samples) // WAVHASH_FRAMES
-    energies = [
-        sum(abs(s) for s in samples[f * flen : (f + 1) * flen])
-        for f in range(WAVHASH_FRAMES)
-    ]
-    total = sum(energies)
-    fp = 0
-    for f, e in enumerate(energies):
-        if WAVHASH_FRAMES * e > total:
-            fp |= 1 << f
-    return fp
-
-
-def _wavhash_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(doc_id, fp): synthesize the doc's WAV, then hash it THROUGH the
-    codec — every fingerprint has passed through actual RIFF bytes
-    (chunk walk, word alignment, int16 packing), not an arithmetic
-    shortcut. One Arrow-batched pass, zero shuffle (group-keyed spread,
-    as in _phash_fingerprints)."""
-    return wavhash_of_payload_rows(
-        spread_scan(
-            load_table(spark, sf_dir, "documents"), spark, f"doc_id div {WAVHASH_GROUP}"
-        )
+    flen = len(samples) // FP_BITS
+    return _average_bits(
+        [
+            sum(abs(s) for s in samples[f * flen : (f + 1) * flen])
+            for f in range(FP_BITS)
+        ]
     )
 
 
-def _wavhash_f_ctes(pfx: str = "") -> str:
-    """CTE chain computing the audio fingerprint table ``{pfx}f(doc_id,
-    fp)`` relationally (clip synthesis → frame energies → threshold).
-    Prefixed so two modalities' chains can coexist in one oracle."""
+def _wavhash_feat_ctes(pfx: str) -> str:
+    """Oracle replay of the audio clip: {pfx}p -> {pfx}feat(doc_id,
+    idx, val = energy of frame idx)."""
     return f"""
-        {pfx}p AS (
-            SELECT doc_id,
-                   CASE WHEN doc_id % {WAVHASH_GROUP} = 3
-                        THEN doc_id // {WAVHASH_GROUP} + {_WAVHASH_DISTINCT_CID}
-                        ELSE doc_id // {WAVHASH_GROUP} END AS cid,
-                   doc_id % {WAVHASH_GROUP} AS v
-            FROM documents
-        ),
         {pfx}s AS (
             SELECT doc_id, v, k, k // {WAVHASH_FRAME} AS f,
                    md5('au:' || CAST(cid AS VARCHAR) || ':'
@@ -1415,29 +1182,201 @@ def _wavhash_f_ctes(pfx: str = "") -> str:
                    END AS sv
             FROM {pfx}s
         ),
-        {pfx}fe AS (
-            SELECT doc_id, f, SUM(ABS(sv)) AS e
+        {pfx}feat AS (
+            SELECT doc_id, f AS idx, SUM(ABS(sv)) AS val
             FROM {pfx}vals GROUP BY doc_id, f
-        ),
+        )"""
+
+
+@dataclass(frozen=True)
+class FpKind:
+    """One media near-dup family. The fields are what pHash and wavhash
+    do differently; each lifecycle step is one method shared by both."""
+
+    name: str
+    # index snapshot dir prefix: renaming it orphans every built index
+    index_prefix: str
+    # doc_id -> fingerprint, synthesized and hashed through real codec bytes
+    doc_fp: Callable[[int], int]
+    # oracle CTEs from {pfx}p(doc_id, cid, v) to {pfx}feat(doc_id, idx, val)
+    feat_ctes: Callable[[str], str]
+
+    def pairs_ctes(self, pfx: str = "") -> str:
+        """DuckDB replay of the fingerprint table ``{pfx}f(doc_id, fp)``
+        and its pair table ``{pfx}pairs(doc_a, doc_b, hamming)``.
+        Prefixed so two kinds' chains can coexist in one oracle."""
+        return f"""
+        {pfx}p AS (
+            SELECT doc_id,
+                   CASE WHEN doc_id % {FP_GROUP} = 3
+                        THEN doc_id // {FP_GROUP} + {_FOIL_CID}
+                        ELSE doc_id // {FP_GROUP} END AS cid,
+                   doc_id % {FP_GROUP} AS v
+            FROM documents
+        ),{self.feat_ctes(pfx)},
         {pfx}tot AS (
-            SELECT doc_id, SUM(e) AS total FROM {pfx}fe GROUP BY doc_id
+            SELECT doc_id, SUM(val) AS total FROM {pfx}feat GROUP BY doc_id
         ),
         {pfx}f AS (
-            SELECT {pfx}fe.doc_id,
-                   CAST(SUM(CASE WHEN {WAVHASH_FRAMES} * e > total
-                                 THEN (1::BIGINT << f) ELSE 0 END) AS BIGINT) AS fp
-            FROM {pfx}fe JOIN {pfx}tot USING (doc_id)
-            GROUP BY {pfx}fe.doc_id
-        )"""
+            SELECT {pfx}feat.doc_id,
+                   CAST(SUM(CASE WHEN {FP_BITS} * val > total
+                                 THEN (1::BIGINT << idx) ELSE 0 END) AS BIGINT) AS fp
+            FROM {pfx}feat JOIN {pfx}tot USING (doc_id)
+            GROUP BY {pfx}feat.doc_id
+        ),{fp_pairs_cte(pfx, FP_MAX_HAMMING)}"""
+
+    def fp_of_rows(self, df: DataFrame, id_col: str = "doc_id") -> DataFrame:
+        """(doc_id, fp) of an arbitrary doc frame via the synth -> REAL
+        decode -> hash pass — streaming-safe (stateless mapInPandas),
+        shared by the batch fingerprint pass and the landing filter."""
+        doc_fp = self.doc_fp
+
+        def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+            for pdf in batches:
+                ids = [int(x) for x in pdf[id_col]]
+                yield pd.DataFrame({"doc_id": ids, "fp": [doc_fp(d) for d in ids]})
+
+        return df.select(id_col).mapInPandas(op, schema=FP_SCHEMA)
+
+    def fingerprints(self, spark: SparkSession, sf_dir: str) -> DataFrame:
+        """(doc_id, fp) of the documents table: one Arrow-batched pass,
+        zero shuffle (the spread only redistributes the single-file scan
+        at test SFs — a multi-file 100-TB layout is already parallel)."""
+        # spread keyed on the dup GROUP: a group's docs land in one
+        # partition, so the per-worker base-content lru_cache hits
+        return self.fp_of_rows(
+            spread_scan(
+                load_table(spark, sf_dir, "documents"), spark, f"doc_id div {FP_GROUP}"
+            )
+        )
+
+    def pairs(self, spark: SparkSession, sf_dir: str) -> DataFrame:
+        from ..registry import track_persist
+
+        # persist: the band SELF-join consumes the fingerprint frame
+        # twice, and Spark does not CSE across self-join sides —
+        # unpersisted, the decode/hash Arrow pass would run once per side
+        # (at cluster scale this is the stored-fingerprint stage a
+        # production run would write to parquet anyway)
+        f_ = track_persist(self.fingerprints(spark, sf_dir))
+        return banded_self_pairs(f_, FP_MAX_HAMMING)
+
+    def index_dir(self, sf_dir: str) -> str:
+        from ..sinks.versioned import fingerprint_dir
+
+        return fingerprint_dir(sf_dir, "documents", prefix=self.index_prefix)
+
+    def build_index(self, spark: SparkSession, sf_dir: str, table_dir: str) -> int:
+        """Fingerprint the corpus slice and publish (doc_id, fp) as a
+        versioned snapshot."""
+        from ..sinks.versioned import write_corpus_snapshot
+
+        fps = self.fingerprints(spark, sf_dir).filter(~is_delta_doc("doc_id"))
+        return write_corpus_snapshot(fps, table_dir)
+
+    def extend_index(self, spark: SparkSession, sf_dir: str, table_dir: str) -> int:
+        """Fold the delta batch's fingerprints into snapshot v+1."""
+        from ..sinks.versioned import fold_delta_snapshot
+
+        delta = self.fingerprints(spark, sf_dir).filter(is_delta_doc("doc_id"))
+        return fold_delta_snapshot(spark, table_dir, delta)
+
+    def incremental_pairs(self, spark: SparkSession, sf_dir: str) -> DataFrame:
+        return incremental_fp_pairs(
+            spark, sf_dir, self.index_dir(sf_dir), self.build_index,
+            self.fingerprints, FP_MAX_HAMMING,
+        )
+
+    def landing_transform(
+        self, spark: SparkSession, sf_dir: str, raw: DataFrame
+    ) -> DataFrame:
+        """Landing-zone near-dup filter over an arbitrary documents
+        stream: arriving delta docs are fingerprinted per row (stateless
+        Arrow pass) and probed against the FROZEN index via a
+        stream-static band join — 'is this incoming doc a near-dup of
+        anything we already hold?'. Stream scope is corpus-delta pairs
+        only (delta-delta pairs within the stream are the batch
+        incremental_pairs' job — the same stream/batch split
+        landing_dedup_transform documents)."""
+        return landing_fp_transform(
+            spark, sf_dir, raw, self.index_dir(sf_dir), self.build_index,
+            self.fp_of_rows, FP_MAX_HAMMING,
+        )
+
+    def stream(self, spark: SparkSession, sf_dir: str) -> DataFrame:
+        """readStream wiring of the landing-zone filter (file-drop
+        source; production swaps in kafka options)."""
+        from ..streaming.pipelines import _read_parquet_stream
+
+        return self.landing_transform(
+            spark, sf_dir, _read_parquet_stream(spark, f"{sf_dir}/documents.parquet")
+        )
+
+
+PHASH = FpKind(
+    "phash", "phash2_", lambda d: ahash60_of_bmp(_phash_doc_image(d)[2]), _phash_feat_ctes
+)
+WAVHASH = FpKind(
+    "wavhash", "wavhash2_", lambda d: wavhash60_of_wav(_wavhash_doc_audio(d)[1]),
+    _wavhash_feat_ctes,
+)
+FP_KINDS = (PHASH, WAVHASH)
+
+
+def _pairs_oracle(kind: FpKind, where: str = "TRUE") -> str:
+    return f"""
+        WITH {kind.pairs_ctes()}
+        SELECT doc_a, doc_b, hamming FROM pairs
+        WHERE {where}
+        ORDER BY doc_a, doc_b
+    """
+
+@register(
+    "phash_pairs",
+    oracle=_pairs_oracle(PHASH),
+    doc="Perceptual-hash image near-dup pairs: per doc, synthesize a "
+    "REAL 24-bit BMP (md5-derived pixels; docs come in groups of 4 "
+    "sharing a base image — original, 2x nearest-neighbor resized "
+    "copy, 2-pixel-perturbed copy, unrelated foil), DECODE the bytes, "
+    "nearest-neighbor resize to 8x8, 60-bit luma average-hash "
+    "(integer (77r+150g+29b)>>8, bit set iff 60*luma > grid total), "
+    "then 4x15-bit chunk banding (pigeonhole-complete for Hamming<=3) "
+    "with the popcount verify evaluated inside the band join. The "
+    "resized copy reproduces the original's 8x8 grid exactly (base "
+    "dims are a multiple of 8), so every (v0,v1) group pair is a "
+    "planted Hamming-0 recall pin; the oracle replays pixel "
+    "generation, luma, thresholding, banding and popcount "
+    "relationally from the same md5 slices — the engine's values have "
+    "additionally passed through actual BMP bytes (header offsets, "
+    "bottom-up rows, row padding).",
+    tags=("multimodal", "dedup", "lsh", "udf", "extension"),
+)
+def phash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return PHASH.pairs(spark, sf_dir)
+
+
+@register(
+    "incremental_phash_pairs",
+    oracle=_pairs_oracle(PHASH, _INCR_PAIR_FILTER_SQL),
+    doc="Incremental image dedup: the NEW batch's images (incremental "
+    "buckets >= 90, the standard salted split) are fingerprinted fresh "
+    "(synth -> BMP decode -> 8x8 luma aHash) and probed against the "
+    "FROZEN phash index of the other 90% — read back as a 16-byte-row "
+    "snapshot scan, never a corpus re-decode. Candidates come from "
+    "joining the delta's band rows against the union of index and "
+    "delta bands with the Hamming verify inside the join condition; "
+    "results are pair-identical to a full-corpus phash_pairs run "
+    "restricted to delta-involved pairs, which is what the oracle "
+    "replays. Nightly cost is O(delta) decode plus a fingerprint scan.",
+    tags=("multimodal", "dedup", "lsh", "incremental", "udf", "extension"),
+)
+def incremental_phash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return PHASH.incremental_pairs(spark, sf_dir)
 
 
 @register(
     "wavhash_pairs",
-    oracle=f"""
-        WITH {_wavhash_f_ctes()}, {fp_pairs_cte("", WAVHASH_MAX_HAMMING)}
-        SELECT doc_a, doc_b, hamming FROM pairs
-        ORDER BY doc_a, doc_b
-    """,
+    oracle=_pairs_oracle(WAVHASH),
     doc="Audio-fingerprint near-dup pairs: per doc, synthesize a REAL "
     "mono 16-bit PCM WAV (md5-derived int16 clip; docs come in groups "
     "of 4 sharing a base clip — original at 8 kHz, the SAME clip "
@@ -1457,59 +1396,12 @@ def _wavhash_f_ctes(pfx: str = "") -> str:
     tags=("multimodal", "dedup", "lsh", "udf", "extension"),
 )
 def wavhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..registry import track_persist
-
-    # persist: the band self-join consumes the fingerprint frame twice
-    # (the phash_pairs rule — at cluster scale this is the stored-
-    # fingerprint stage a production run writes to parquet anyway)
-    f_ = track_persist(_wavhash_fingerprints(spark, sf_dir))
-    return banded_self_pairs(f_, WAVHASH_MAX_HAMMING)
-
-
-# -- wavhash nightly lifecycle: the audio family gets the same frozen
-# index + incremental probe + stream twin the image family has, via
-# the generic _fp_index helpers (the index is the same 16-byte
-# (doc_id, fp) snapshot shape).
-
-
-def wavhash_index_dir(sf_dir: str) -> str:
-    return _fp_index_dir(sf_dir, "wavhash2_")
-
-
-def build_wavhash_index(spark: SparkSession, sf_dir: str, table_dir: str) -> int:
-    return _build_fp_index(spark, sf_dir, table_dir, _wavhash_fingerprints)
-
-
-def extend_wavhash_index(spark: SparkSession, sf_dir: str, table_dir: str) -> int:
-    return _extend_fp_index(spark, sf_dir, table_dir, _wavhash_fingerprints)
-
-
-def wavhash_of_payload_rows(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """(doc_id, fp) of an arbitrary doc frame via the same synth ->
-    REAL-RIFF-decode -> energy-hash pass — streaming-safe (stateless
-    mapInPandas), shared by the batch fingerprint pass and the landing
-    filter below."""
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids = [int(x) for x in pdf[id_col]]
-            fps = []
-            for did in ids:
-                _, payload = _wavhash_doc_audio(did)
-                fps.append(wavhash60_of_wav(payload))
-            yield pd.DataFrame({"doc_id": ids, "fp": fps})
-
-    return df.select(id_col).mapInPandas(op, schema=PHASH_SCHEMA)
+    return WAVHASH.pairs(spark, sf_dir)
 
 
 @register(
     "incremental_wavhash_pairs",
-    oracle=f"""
-        WITH {_wavhash_f_ctes()}, {fp_pairs_cte("", WAVHASH_MAX_HAMMING)}
-        SELECT doc_a, doc_b, hamming FROM pairs
-        WHERE {_INCR_PAIR_FILTER_SQL}
-        ORDER BY doc_a, doc_b
-    """,
+    oracle=_pairs_oracle(WAVHASH, _INCR_PAIR_FILTER_SQL),
     doc="Incremental audio dedup: the NEW batch's clips (incremental "
     "buckets >= 90, the standard salted split) are fingerprinted fresh "
     "(synth -> RIFF decode -> 60-frame energy hash) and probed against "
@@ -1525,38 +1417,11 @@ def wavhash_of_payload_rows(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     tags=("multimodal", "dedup", "lsh", "incremental", "udf", "extension"),
 )
 def incremental_wavhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return incremental_fp_pairs(
-        spark, sf_dir, wavhash_index_dir(sf_dir), build_wavhash_index,
-        _wavhash_fingerprints, WAVHASH_MAX_HAMMING,
-    )
-
-
-def landing_wavhash_transform(
-    spark: SparkSession, sf_dir: str, raw: DataFrame
-) -> DataFrame:
-    """Landing-zone audio near-dup filter over an arbitrary documents
-    stream: 'is this incoming clip a near-dup of anything we already
-    hold?' — stream scope is corpus-delta pairs only (delta-delta
-    pairs are the batch incremental_wavhash_pairs' job; the same
-    stream/batch split the image twin documents)."""
-    return landing_fp_transform(
-        spark, sf_dir, raw, wavhash_index_dir(sf_dir), build_wavhash_index,
-        wavhash_of_payload_rows, WAVHASH_MAX_HAMMING,
-    )
-
-
-def incremental_wavhash_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """readStream wiring of the landing-zone audio filter (file-drop
-    source; production swaps in kafka options)."""
-    from ..streaming.pipelines import _read_parquet_stream
-
-    return landing_wavhash_transform(
-        spark, sf_dir, _read_parquet_stream(spark, f"{sf_dir}/documents.parquet")
-    )
+    return WAVHASH.incremental_pairs(spark, sf_dir)
 
 
 # ---------------------------------------------------------------------------
-# Cross-modal retention (round 10): the decision layer above the
+# Cross-modal retention: the decision layer above the
 # per-modality near-dup detectors. A production corpus pipeline runs
 # text, image, and audio dedup side by side and then has to answer ONE
 # question per document: does any modality give a reason to drop it?
@@ -1574,8 +1439,8 @@ def incremental_wavhash_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "multimodal_retention_plan",
     oracle=f"""
-        WITH {_phash_f_ctes("i")}, {fp_pairs_cte("i", PHASH_MAX_HAMMING)},
-        {_wavhash_f_ctes("au")}, {fp_pairs_cte("au", WAVHASH_MAX_HAMMING)},
+        WITH {PHASH.pairs_ctes("i")},
+        {WAVHASH.pairs_ctes("au")},
         tn AS (
             SELECT doc_id, md5({_NORM_SQL}) AS cfp FROM documents
         ),
@@ -1695,8 +1560,8 @@ def apply_multimodal_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "multimodal_retention_apply",
     oracle=f"""
-        WITH {_phash_f_ctes("i")}, {fp_pairs_cte("i", PHASH_MAX_HAMMING)},
-        {_wavhash_f_ctes("au")}, {fp_pairs_cte("au", WAVHASH_MAX_HAMMING)},
+        WITH {PHASH.pairs_ctes("i")},
+        {WAVHASH.pairs_ctes("au")},
         tn AS (
             SELECT doc_id, md5({_NORM_SQL}) AS cfp FROM documents
         ),

@@ -27,44 +27,22 @@ from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
 from ..catalog import load_table, spread_scan
-from ..functions.vectors import as_double, cosine, dot, hyperplanes, norm
+from ..functions.vectors import as_double, cosine, dot, norm
 from ..registry import register, track_persist
+from .banding import (
+    COSINE_BUCKET_CAP_FACTOR,
+    COSINE_BUCKET_CAP_MIN,
+    DIM,
+    PLANES_PER_BAND,
+    SIGN_LSH_BUCKETS_SQL,
+    _cosine_bucket_cap,
+    sign_lsh_buckets,
+)
 
 QUERY_MOD = 50  # vec_id % 50 == 0 → the query subset
 TOP_K = 5
-LSH_BANDS = 4  # 4 independent 8-bit sign-LSH bucketings; candidates = union
-PLANES_PER_BAND = 8
-DIM = 64
 COSINE_DUP_THRESHOLD = 0.4  # synthetic embeddings are near-orthogonal;
 # a production near-dup run sets ~0.95+, where sign-LSH recall is high
-# Hot-bucket cap for embedding_cosine_pairs (SCALING.md "Threshold
-# provenance"): a sign-LSH band has only 2^PLANES_PER_BAND = 256
-# buckets, so on a clustered corpus one (band, bucket) can hold a whole
-# cluster → k² candidates in the self-join regardless of AQE (the sf10
-# gen_sf corpus put ~3200 vectors in each cluster bucket → 35.9M output
-# pairs). Unlike MinHash's md5 band-hash (unbounded key space, absolute
-# cap works), fixed-resolution sign buckets densify LINEARLY with
-# corpus size, so the cap is RELATIVE: drop buckets more than
-# COSINE_BUCKET_CAP_FACTOR× denser than the uniform expectation
-# n/256, floored at COSINE_BUCKET_CAP_MIN so small corpora keep every
-# bucket. Both engines derive the cap from the same integer COUNT →
-# bit-replayable. Dropped buckets are dense near-duplicate cores whose
-# pairs carry no ranking information (same rationale as
-# banding.MAX_BAND_BUCKET); recall degrades per-band, gracefully. At
-# cluster scale the structural fix is PLANES_PER_BAND ≈ log2(n) so
-# bucket count tracks corpus size; the cap is the skew escape hatch
-# that holds either way.
-COSINE_BUCKET_CAP_MIN = 64
-COSINE_BUCKET_CAP_FACTOR = 8
-
-
-def _cosine_bucket_cap(n: int) -> int:
-    """max(64, 8·⌈n/256⌉) — mirrored literally in the oracle CTE."""
-    n_buckets = 1 << PLANES_PER_BAND
-    return max(
-        COSINE_BUCKET_CAP_MIN,
-        COSINE_BUCKET_CAP_FACTOR * ((n + n_buckets - 1) // n_buckets),
-    )
 
 # IVF coarse cells: every stride-th vector is a centroid seed — a
 # deterministic stand-in for trained KMeans that the oracle can replay.
@@ -173,48 +151,12 @@ def ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _band_bucket_sql(vec: str, band: int) -> str:
-    """8-bit sign-LSH bucket id for one band in DuckDB SQL."""
-    planes = hyperplanes(LSH_BANDS * PLANES_PER_BAND, DIM)
-    terms = []
-    for j in range(PLANES_PER_BAND):
-        w_ = planes[band * PLANES_PER_BAND + j]
-        arr = "[" + ", ".join(f"{x}.0" for x in w_) + "]"
-        proj = f"list_sum(list_transform(range(1, {DIM + 1}), i -> {vec}[i] * ({arr})[i]))"
-        terms.append(f"(CASE WHEN {proj} >= 0 THEN {1 << j} ELSE 0 END)")
-    return "(" + " + ".join(terms) + ")"
-
-
-def _band_bucket_col(vec_name: str, band: int) -> F.Column:
-    """8-bit sign-LSH bucket id for one band, built as ONE SQL string
-    parsed JVM-side. The previous Column-operator construction issued
-    ~2,000 py4j round trips per query (8 planes x 64 F.lit calls x 4
-    bands) — measured ~2 s of pure driver-side DataFrame build time at
-    any SF (guide §1.2: per-task work includes the driver). The parsed
-    expression tree is IDENTICAL (same aggregate/zip_with fold, same
-    literals, same fold order), so scores stay bit-identical — pinned
-    by the oracle hash match."""
-    planes = hyperplanes(LSH_BANDS * PLANES_PER_BAND, DIM)
-    terms = []
-    for j in range(PLANES_PER_BAND):
-        w_ = planes[band * PLANES_PER_BAND + j]
-        arr = "array(" + ", ".join(f"{float(x)}D" for x in w_) + ")"
-        proj = (
-            f"aggregate(zip_with({vec_name}, {arr}, (x, y) -> x * y), "
-            "0.0D, (acc, x) -> acc + x)"
-        )
-        terms.append(f"(CASE WHEN {proj} >= 0 THEN {1 << j} ELSE 0 END)")
-    return F.expr("(" + " + ".join(terms) + ")")
-
-
 @register(
     "ann_lsh_topk",
     oracle=f"""
         WITH e AS ({_CORPUS_SQL}),
         q_ids AS (SELECT vec_id FROM e WHERE vec_id % {QUERY_MOD} = 0),
-        buckets AS (
-            {" UNION ALL ".join(f"SELECT vec_id, {b} AS band, {_band_bucket_sql('v', b)} AS bucket FROM e" for b in range(LSH_BANDS))}
-        ),
+        {SIGN_LSH_BUCKETS_SQL},
         cand AS (
             SELECT DISTINCT qb.vec_id AS query_id, eb.vec_id AS neighbor_id
             FROM buckets qb
@@ -249,11 +191,7 @@ def _band_bucket_col(vec_name: str, band: int) -> F.Column:
 )
 def ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = _emb_with_norm(spark, sf_dir)
-    band_arr = F.array(*[_band_bucket_col("v", b) for b in range(LSH_BANDS)])
-    buckets = track_persist(
-        e.select("vec_id", F.posexplode(band_arr).alias("band", "bucket")),
-        StorageLevel.MEMORY_AND_DISK,  # consumed by the probe and corpus sides
-    )
+    buckets = sign_lsh_buckets(e)
     qb = buckets.filter(F.col("vec_id") % QUERY_MOD == 0).select(
         F.col("vec_id").alias("query_id"), "band", "bucket"
     )
@@ -289,9 +227,7 @@ def ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     "embedding_cosine_pairs",
     oracle=f"""
         WITH e AS ({_CORPUS_SQL}),
-        buckets AS (
-            {" UNION ALL ".join(f"SELECT vec_id, {b} AS band, {_band_bucket_sql('v', b)} AS bucket FROM e" for b in range(LSH_BANDS))}
-        ),
+        {SIGN_LSH_BUCKETS_SQL},
         nc AS (SELECT COUNT(*) AS n FROM e),
         capped AS (
             SELECT vec_id, band, bucket FROM (
@@ -334,11 +270,7 @@ def ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def embedding_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = _emb_with_norm(spark, sf_dir)
-    band_arr = F.array(*[_band_bucket_col("v", b) for b in range(LSH_BANDS)])
-    buckets = track_persist(
-        e.select("vec_id", F.posexplode(band_arr).alias("band", "bucket")),
-        StorageLevel.MEMORY_AND_DISK,  # both sides of the bucket self-join
-    )
+    buckets = sign_lsh_buckets(e)
     # hot-bucket cap: the (band, bucket) key space is BOUNDED at
     # LSH_BANDS × 2^PLANES_PER_BAND = 1024 keys, so the size table is a
     # partial-aggregated groupBy (map-side combine → ≤1024 rows shuffle)

@@ -132,36 +132,6 @@ def clicks_asof_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("click_id")
 
 
-def bucketed_range_join(
-    probe: DataFrame,
-    build: DataFrame,
-    on: str,
-    probe_time: str,
-    build_time: str,
-    window_minutes: int,
-) -> DataFrame:
-    """Pairs (probe, build) with build_time in
-    (probe_time - window, probe_time], via interval bucketing.
-
-    The probe row explodes to the two bucket ids its window can span;
-    the join is a plain hash equi-join on (key, bucket); the exact
-    half-open range predicate prunes residuals. Shuffle volume is
-    O(|probe| * 2 + |build|) rows of narrow keys.
-    """
-    wsec = window_minutes * 60
-    b_bucket = F.floor(F.unix_timestamp(build_time) / wsec)
-    p_bucket = F.floor(F.unix_timestamp(probe_time) / wsec)
-    bld = build.withColumn("__bucket", b_bucket)
-    prb = probe.withColumn("__bucket", F.explode(F.array(p_bucket - 1, p_bucket)))
-    cond = (
-        (prb[on] == bld[on])
-        & (prb["__bucket"] == bld["__bucket"])
-        & (bld[build_time] > prb[probe_time] - F.expr(f"INTERVAL {wsec} SECONDS"))
-        & (bld[build_time] <= prb[probe_time])
-    )
-    return prb.join(bld, cond)
-
-
 @register(
     "purchase_click_context",
     oracle=f"""

@@ -139,12 +139,7 @@ def _run_incremental(spark: SparkSession, cfg: dict[str, Any]) -> dict[str, Any]
             qp.quality_moments_dir, qp.incremental_quality_weights, qp.extend_quality_moments
         ),
         "lm": (lm.lm_counts_dir, lm.incremental_lm_score, lm.extend_lm_counts),
-        "phash": (
-            mm.phash_index_dir, mm.incremental_phash_pairs, mm.extend_phash_index
-        ),
-        "wavhash": (
-            mm.wavhash_index_dir, mm.incremental_wavhash_pairs, mm.extend_wavhash_index
-        ),
+        **{k.name: (k.index_dir, k.incremental_pairs, k.extend_index) for k in mm.FP_KINDS},
     }
     sf_dir = cfg["sf_dir"]
     keep = cfg.get("vacuum_keep", 2)

@@ -1,4 +1,4 @@
-"""Sign-LSH hot-bucket cap (operators/similarity.py _cosine_bucket_cap).
+"""Sign-LSH hot-bucket cap (operators/banding.py _cosine_bucket_cap).
 
 A sign-LSH band has only 2^8 = 256 buckets, so one (band, bucket) can
 hold an entire embedding cluster → k² candidates in the self-join. The
@@ -17,11 +17,11 @@ import pandas as pd
 import pytest
 
 from data_engineering_challenge_spark import testing
-from data_engineering_challenge_spark.operators.similarity import (
+from data_engineering_challenge_spark.operators.banding import (
     COSINE_BUCKET_CAP_MIN,
     _cosine_bucket_cap,
-    embedding_cosine_pairs,
 )
+from data_engineering_challenge_spark.operators.similarity import embedding_cosine_pairs
 from data_engineering_challenge_spark.registry import all_queries
 
 N_HOT = COSINE_BUCKET_CAP_MIN + 6  # one bucket per band, above the cap

@@ -38,8 +38,7 @@ def test_documented_query_names_exist():
         "build_quality_moments", "extend_quality_moments",
         "quality_score_stream", "apply_dedup_retention",
         "apply_multimodal_retention",
-        "extend_phash_index", "incremental_phash_stream",
-        "extend_wavhash_index", "incremental_wavhash_stream",
+        "extend_index", "landing_transform",
         "write_orc", "read_orc", "write_jsonl", "read_jsonl",
         "read_csv_raw", "clean_to_schema", "ingest_csv_files",
         "union_with_drift", "read_csv_audited", "detect_delimiter",

@@ -7,8 +7,7 @@ from __future__ import annotations
 import os
 
 from data_engineering_challenge_spark.operators.multimodal import (
-    PHASH_MAX_HAMMING,
-    WAVHASH_MAX_HAMMING,
+    FP_MAX_HAMMING,
     _phash_doc_image,
     _wavhash_doc_audio,
     ahash60_of_bmp,
@@ -62,7 +61,7 @@ def test_multimodal_retention_matches_bruteforce(spark, tmp_path_factory):
                 expect.setdefault(d, [None, 0, 0, 0])
                 expect[d][1] = rank
                 expect[d][0] = g[0] if expect[d][0] is None else min(expect[d][0], g[0])
-    for fps, slot, maxh in ((ifps, 2, PHASH_MAX_HAMMING), (afps, 3, WAVHASH_MAX_HAMMING)):
+    for fps, slot, maxh in ((ifps, 2, FP_MAX_HAMMING), (afps, 3, FP_MAX_HAMMING)):
         for b in range(n):
             partners = [
                 a for a in range(b)

@@ -7,8 +7,8 @@ from __future__ import annotations
 import os
 
 from data_engineering_challenge_spark.operators.multimodal import (
-    PHASH_BITS,
-    PHASH_MAX_HAMMING,
+    FP_BITS,
+    FP_MAX_HAMMING,
     _phash_doc_image,
     ahash60_of_bmp,
     encode_bmp,
@@ -43,7 +43,7 @@ def test_ahash_is_invariant_to_integer_nearest_upscale():
     h1 = ahash60_of_bmp(enc(1))
     assert h1 == ahash60_of_bmp(enc(2))
     assert h1 == ahash60_of_bmp(enc(3))
-    assert 0 < h1 < (1 << PHASH_BITS)  # mixed bits, not degenerate
+    assert 0 < h1 < (1 << FP_BITS)  # mixed bits, not degenerate
 
 
 def test_phash_planted_resized_copies_pair(spark, tmp_path_factory):
@@ -63,7 +63,7 @@ def test_phash_planted_resized_copies_pair(spark, tmp_path_factory):
         (a, b): bin(fps[a] ^ fps[b]).count("1")
         for a in range(n)
         for b in range(a + 1, n)
-        if bin(fps[a] ^ fps[b]).count("1") <= PHASH_MAX_HAMMING
+        if bin(fps[a] ^ fps[b]).count("1") <= FP_MAX_HAMMING
     }
     assert got == expect
     for g in range(n // 4):
@@ -80,102 +80,6 @@ def test_phash_perturbed_variant_hamming_is_small_but_not_all_zero():
         f0 = ahash60_of_bmp(_phash_doc_image(4 * g)[2])
         f2 = ahash60_of_bmp(_phash_doc_image(4 * g + 2)[2])
         h = bin(f0 ^ f2).count("1")
-        if 1 <= h <= PHASH_MAX_HAMMING:
+        if 1 <= h <= FP_MAX_HAMMING:
             nonzero += 1
     assert nonzero > 0
-
-
-def test_streaming_phash_landing_matches_batch(spark, tmp_path, monkeypatch):
-    """The landing-zone image filter: streamed delta docs probed
-    against the frozen phash index emit exactly the corpus-delta pairs
-    the batch incremental_phash_pairs finds (delta-delta pairs are the
-    batch path's job), with canonical (least, greatest) ordering."""
-    import hashlib as _hl
-
-    import pandas as pd
-
-    from data_engineering_challenge_spark.operators.dedup import (
-        INCR_DELTA_BUCKETS,
-        INCR_DELTA_FROM,
-    )
-    from data_engineering_challenge_spark.operators.multimodal import (
-        incremental_phash_pairs,
-        incremental_phash_stream,
-    )
-    from data_engineering_challenge_spark.streaming.pipelines import (
-        run_stream_to_memory,
-    )
-
-    def bucket(doc_id: int) -> int:
-        return int(_hl.md5(f"inc:{doc_id}".encode()).hexdigest()[:8], 16) % INCR_DELTA_BUCKETS
-
-    n = 400
-    delta_set = {i for i in range(n) if bucket(i) >= INCR_DELTA_FROM}
-    # the fixture must contain a group whose planted Hamming-0 pair
-    # (v0, v1) straddles the corpus/delta split — guaranteed by n=400
-    # (100 groups, ~10% delta rate per member)
-    straddle = [
-        g for g in range(n // 4)
-        if (4 * g in delta_set) != (4 * g + 1 in delta_set)
-    ]
-    assert straddle, "fixture must exercise a cross corpus/delta planted pair"
-
-    root = tmp_path / "lz"
-    root.mkdir()
-    pd.DataFrame(
-        {"doc_id": range(n), "text": ["img"] * n, "source": ["s"] * n}
-    ).to_parquet(root / "documents.parquet", index=False)
-    monkeypatch.setenv("SPARK_GRAFT_INDEX_DIR", str(tmp_path / "idx"))
-
-    batch = {
-        (r.doc_a, r.doc_b): r.hamming
-        for r in incremental_phash_pairs(spark, str(root)).collect()
-    }
-    batch_cross = {
-        k: v for k, v in batch.items() if not (k[0] in delta_set and k[1] in delta_set)
-    }
-    assert batch_cross, batch
-    g = straddle[0]
-    pin = (min(4 * g, 4 * g + 1), max(4 * g, 4 * g + 1))
-    assert batch_cross[pin] == 0, "straddling planted pair must be found"
-
-    s = incremental_phash_stream(spark, str(root))
-    assert s.isStreaming
-    run_stream_to_memory(s, "incr_phash_out", mode="append")
-    got = {
-        (r.doc_a, r.doc_b): r.hamming
-        for r in spark.sql("SELECT * FROM incr_phash_out").collect()
-    }
-    assert got == batch_cross
-
-
-def test_extend_phash_index_is_idempotent(spark, tmp_path, monkeypatch):
-    """Folding the delta into the index twice must not double-count:
-    the fold reads only corpus buckets back (the extend_minhash
-    protocol), so v2 and v3 hold identical row sets."""
-    import pandas as pd
-
-    from data_engineering_challenge_spark.operators.multimodal import (
-        build_phash_index,
-        extend_phash_index,
-        phash_index_dir,
-    )
-    from data_engineering_challenge_spark.sinks.versioned import read_snapshot
-
-    root = tmp_path / "lz"
-    root.mkdir()
-    pd.DataFrame(
-        {"doc_id": range(80), "text": ["img"] * 80, "source": ["s"] * 80}
-    ).to_parquet(root / "documents.parquet", index=False)
-    monkeypatch.setenv("SPARK_GRAFT_INDEX_DIR", str(tmp_path / "idx"))
-    d = phash_index_dir(str(root))
-    build_phash_index(spark, str(root), d)
-    v2 = extend_phash_index(spark, str(root), d)
-    rows2 = sorted(
-        (r.doc_id, r.fp) for r in read_snapshot(spark, d, v2).collect()
-    )
-    v3 = extend_phash_index(spark, str(root), d)
-    rows3 = sorted(
-        (r.doc_id, r.fp) for r in read_snapshot(spark, d, v3).collect()
-    )
-    assert rows2 == rows3 and len(rows2) == 80

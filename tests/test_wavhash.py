@@ -7,7 +7,7 @@ from __future__ import annotations
 import os
 
 from data_engineering_challenge_spark.operators.multimodal import (
-    WAVHASH_MAX_HAMMING,
+    FP_MAX_HAMMING,
     _wavhash_doc_audio,
     encode_wav,
     resample_nearest,
@@ -56,7 +56,7 @@ def test_wavhash_planted_resampled_copies_pair(spark, tmp_path_factory):
         (a, b): bin(fps[a] ^ fps[b]).count("1")
         for a in range(n)
         for b in range(a + 1, n)
-        if bin(fps[a] ^ fps[b]).count("1") <= WAVHASH_MAX_HAMMING
+        if bin(fps[a] ^ fps[b]).count("1") <= FP_MAX_HAMMING
     }
     assert got == expect
     for g in range(n // 4):
@@ -73,7 +73,7 @@ def test_wavhash_perturbed_variant_hamming_is_small_but_not_all_zero():
         f0 = wavhash60_of_wav(_wavhash_doc_audio(4 * g)[1])
         f2 = wavhash60_of_wav(_wavhash_doc_audio(4 * g + 2)[1])
         h = bin(f0 ^ f2).count("1")
-        if 1 <= h <= WAVHASH_MAX_HAMMING:
+        if 1 <= h <= FP_MAX_HAMMING:
             nonzero += 1
     assert nonzero > 0
 
@@ -88,95 +88,3 @@ def test_wavhash_rates_follow_variant():
     r1, p1 = _wavhash_doc_audio(1)
     assert (r0, r1) == (8000, 16000)
     assert len(decode_wav(p1)[1]) == 2 * len(decode_wav(p0)[1])
-
-
-def test_streaming_wavhash_landing_matches_batch(spark, tmp_path, monkeypatch):
-    """The landing-zone audio filter: streamed delta docs probed
-    against the frozen wavhash index emit exactly the corpus-delta
-    pairs the batch incremental_wavhash_pairs finds (delta-delta pairs
-    are the batch path's job), with canonical ordering."""
-    import hashlib as _hl
-
-    import pandas as pd
-
-    from data_engineering_challenge_spark.operators.dedup import (
-        INCR_DELTA_BUCKETS,
-        INCR_DELTA_FROM,
-    )
-    from data_engineering_challenge_spark.operators.multimodal import (
-        incremental_wavhash_pairs,
-        incremental_wavhash_stream,
-    )
-    from data_engineering_challenge_spark.streaming.pipelines import (
-        run_stream_to_memory,
-    )
-
-    def bucket(doc_id: int) -> int:
-        return int(_hl.md5(f"inc:{doc_id}".encode()).hexdigest()[:8], 16) % INCR_DELTA_BUCKETS
-
-    n = 400
-    delta_set = {i for i in range(n) if bucket(i) >= INCR_DELTA_FROM}
-    straddle = [
-        g for g in range(n // 4)
-        if (4 * g in delta_set) != (4 * g + 1 in delta_set)
-    ]
-    assert straddle, "fixture must exercise a cross corpus/delta planted pair"
-
-    root = tmp_path / "lz"
-    root.mkdir()
-    pd.DataFrame(
-        {"doc_id": range(n), "text": ["wav"] * n, "source": ["s"] * n}
-    ).to_parquet(root / "documents.parquet", index=False)
-    monkeypatch.setenv("SPARK_GRAFT_INDEX_DIR", str(tmp_path / "idx"))
-
-    batch = {
-        (r.doc_a, r.doc_b): r.hamming
-        for r in incremental_wavhash_pairs(spark, str(root)).collect()
-    }
-    batch_cross = {
-        k: v for k, v in batch.items() if not (k[0] in delta_set and k[1] in delta_set)
-    }
-    assert batch_cross, batch
-    g = straddle[0]
-    pin = (min(4 * g, 4 * g + 1), max(4 * g, 4 * g + 1))
-    assert batch_cross[pin] == 0, "straddling planted pair must be found"
-
-    s = incremental_wavhash_stream(spark, str(root))
-    assert s.isStreaming
-    run_stream_to_memory(s, "incr_wavhash_out", mode="append")
-    got = {
-        (r.doc_a, r.doc_b): r.hamming
-        for r in spark.sql("SELECT * FROM incr_wavhash_out").collect()
-    }
-    assert got == batch_cross
-
-
-def test_extend_wavhash_index_is_idempotent(spark, tmp_path, monkeypatch):
-    """Folding the delta into the index twice must not double-count
-    (the generic _fp_index lifecycle's corpus-bucket read guard)."""
-    import pandas as pd
-
-    from data_engineering_challenge_spark.operators.multimodal import (
-        build_wavhash_index,
-        extend_wavhash_index,
-        wavhash_index_dir,
-    )
-    from data_engineering_challenge_spark.sinks.versioned import read_snapshot
-
-    root = tmp_path / "lz"
-    root.mkdir()
-    pd.DataFrame(
-        {"doc_id": range(80), "text": ["wav"] * 80, "source": ["s"] * 80}
-    ).to_parquet(root / "documents.parquet", index=False)
-    monkeypatch.setenv("SPARK_GRAFT_INDEX_DIR", str(tmp_path / "idx"))
-    d = wavhash_index_dir(str(root))
-    build_wavhash_index(spark, str(root), d)
-    v2 = extend_wavhash_index(spark, str(root), d)
-    rows2 = sorted(
-        (r.doc_id, r.fp) for r in read_snapshot(spark, d, v2).collect()
-    )
-    v3 = extend_wavhash_index(spark, str(root), d)
-    rows3 = sorted(
-        (r.doc_id, r.fp) for r in read_snapshot(spark, d, v3).collect()
-    )
-    assert rows2 == rows3 and len(rows2) == 80

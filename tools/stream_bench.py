@@ -191,31 +191,21 @@ def run_all(
         sec, state = drive_distributed_sink(ld, "append")
         results["landing_dedup"] = {"sec": sec, "events_per_sec": round(n_docs / sec), "state": state}
 
-    # landing-zone image / audio fingerprint filters (r10 queries, r11
-    # stream-bench coverage): the same doc drop through the
-    # stream-static band join against the frozen phash / wavhash
-    # indexes (index builds untimed setup — the nightly shape). The
-    # static side is persisted pre-partitioned on the band key inside
-    # the transform; state telemetry covers the output-bounded
+    # landing-zone image / audio fingerprint filters: the same doc drop
+    # through the stream-static band join against each media kind's
+    # frozen index (index builds untimed setup — the nightly shape).
+    # The static side is persisted pre-partitioned on the band key
+    # inside the transform; state telemetry covers the output-bounded
     # same-batch dropDuplicates.
-    from data_engineering_challenge_spark.operators.multimodal import (
-        build_phash_index,
-        build_wavhash_index,
-        landing_phash_transform,
-        landing_wavhash_transform,
-        phash_index_dir,
-        wavhash_index_dir,
-    )
+    from data_engineering_challenge_spark.operators.multimodal import FP_KINDS
 
-    for nm, build_fn, dir_fn, transform in (
-        ("landing_phash", build_phash_index, phash_index_dir, landing_phash_transform),
-        ("landing_wavhash", build_wavhash_index, wavhash_index_dir, landing_wavhash_transform),
-    ):
+    for kind in FP_KINDS:
+        nm = f"landing_{kind.name}"
         if not want(nm):
             continue
-        fidx = dir_fn(sf_dir)
-        ensure_snapshot(fidx, lambda: build_fn(spark, sf_dir, fidx))
-        fp = transform(spark, sf_dir, read_drop_stream(spark, ddrop))
+        fidx = kind.index_dir(sf_dir)
+        ensure_snapshot(fidx, lambda: kind.build_index(spark, sf_dir, fidx))
+        fp = kind.landing_transform(spark, sf_dir, read_drop_stream(spark, ddrop))
         sec, state = drive_distributed_sink(fp, "append")
         results[nm] = {"sec": sec, "events_per_sec": round(n_docs / sec), "state": state}
 
