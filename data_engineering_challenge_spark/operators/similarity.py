@@ -22,12 +22,14 @@ Scale design (100 TB posture):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window as W
+from typing import Callable, NamedTuple
+
+from pyspark.sql import Column, DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
 from ..catalog import load_table, spread_scan
-from ..functions.vectors import as_double, cosine, dot, norm
+from ..functions.vectors import as_double, dot, norm
 from ..registry import register, track_persist
 from .banding import (
     COSINE_BUCKET_CAP_FACTOR,
@@ -87,9 +89,9 @@ def _emb_with_norm(spark: SparkSession, sf_dir: str) -> DataFrame:
     # cluster scale (see catalog.spread_scan)
     e = spread_scan(load_table(spark, sf_dir, "embeddings"), spark, "vec_id")
     v = as_double(F.col("embedding"))
-    # r11: staged projection — norm() reads the materialized `v`
-    # attribute instead of re-deriving the cast per sibling expression
-    # (Catalyst does not CSE sibling chains; same rule as lang_id).
+    # staged projection: norm() reads the materialized `v` attribute
+    # instead of re-deriving the cast per sibling expression (Catalyst
+    # does not CSE sibling chains; same rule as lang_id)
     return track_persist(
         e.select("vec_id", v.alias("v")).select(
             "vec_id", "v", norm(F.col("v")).alias("nrm")
@@ -105,6 +107,67 @@ _CORPUS_SQL = f"""
 """
 
 
+# ---------------------------------------------------------------------------
+# ANN building blocks, each written once per engine: the per-query
+# top-K and the exact cosine rerank here, stride seeding, nearest-cell
+# assignment and N_PROBE probing in the IVF section. The queries
+# compose them.
+
+# Per-query top-K of a `scored` CTE: {score} DESC, ties to the lower
+# neighbor_id. Callers add the final ORDER BY they need.
+_TOP_K_SQL = f"""
+        SELECT query_id, neighbor_id, {{score}}, rnk FROM (
+            SELECT query_id, neighbor_id, {{score}},
+                   ROW_NUMBER() OVER (
+                       PARTITION BY query_id
+                       ORDER BY {{score}} DESC, neighbor_id
+                   ) AS rnk
+            FROM scored
+        ) WHERE rnk <= {TOP_K}"""
+
+
+def _top_k(scored: DataFrame, score: str) -> DataFrame:
+    """Spark twin of _TOP_K_SQL: `scored` plus `rnk`, rnk ≤ TOP_K."""
+    w = W.partitionBy("query_id").orderBy(F.desc(score), F.asc("neighbor_id"))
+    return scored.withColumn("rnk", F.row_number().over(w)).filter(F.col("rnk") <= TOP_K)
+
+
+_QUERY_COSINE_SQL = f"{_DOT_SQL.format(a='q.v', b='e.v')} / (q.nrm * e.nrm)"
+
+# Exact cosine rerank of a cand(query_id, neighbor_id) CTE, then top-K.
+_COSINE_RERANK_SQL = f"""
+        scored AS (
+            SELECT query_id, neighbor_id, {_QUERY_COSINE_SQL} AS cosine_sim
+            FROM cand
+            JOIN e q ON q.vec_id = query_id
+            JOIN e ON e.vec_id = neighbor_id
+        )
+        {_TOP_K_SQL.format(score='cosine_sim')}
+        ORDER BY query_id, rnk"""
+
+
+def _query_side(e: DataFrame) -> DataFrame:
+    """(query_id, qv, qn): `e` rows as the query side of a cosine."""
+    return e.select(
+        F.col("vec_id").alias("query_id"), F.col("v").alias("qv"), F.col("nrm").alias("qn")
+    )
+
+
+def _query_cosine() -> Column:
+    return (dot(F.col("qv"), F.col("v")) / (F.col("qn") * F.col("nrm"))).alias("cosine_sim")
+
+
+def _cosine_rerank(e: DataFrame, cand: DataFrame) -> DataFrame:
+    """Spark twin of _COSINE_RERANK_SQL: the broadcast query side and
+    the corpus side join onto (query_id, neighbor_id) candidates."""
+    scored = (
+        cand.join(F.broadcast(_query_side(e)), "query_id")
+        .join(e.select(F.col("vec_id").alias("neighbor_id"), "v", "nrm"), "neighbor_id")
+        .select("query_id", "neighbor_id", _query_cosine())
+    )
+    return _top_k(scored, "cosine_sim").orderBy("query_id", "rnk")
+
+
 @register(
     "ann_topk",
     oracle=f"""
@@ -112,18 +175,10 @@ _CORPUS_SQL = f"""
         q AS (SELECT * FROM e WHERE vec_id % {QUERY_MOD} = 0),
         scored AS (
             SELECT q.vec_id AS query_id, e.vec_id AS neighbor_id,
-                   {_DOT_SQL.format(a='q.v', b='e.v')} / (q.nrm * e.nrm) AS cosine_sim
+                   {_QUERY_COSINE_SQL} AS cosine_sim
             FROM q JOIN e ON q.vec_id <> e.vec_id
         )
-        SELECT query_id, neighbor_id, cosine_sim, rnk FROM (
-            SELECT query_id, neighbor_id, cosine_sim,
-                   ROW_NUMBER() OVER (
-                       PARTITION BY query_id
-                       ORDER BY cosine_sim DESC, neighbor_id
-                   ) AS rnk
-            FROM scored
-        )
-        WHERE rnk <= {TOP_K}
+        {_TOP_K_SQL.format(score='cosine_sim')}
         ORDER BY query_id, rnk
     """,
     doc="Brute-force cosine top-5 for the query subset (vec_id % 50 = 0) "
@@ -132,23 +187,11 @@ _CORPUS_SQL = f"""
 )
 def ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = _emb_with_norm(spark, sf_dir)
-    q = e.filter(F.col("vec_id") % QUERY_MOD == 0).select(
-        F.col("vec_id").alias("query_id"), F.col("v").alias("qv"), F.col("nrm").alias("qn")
+    q = _query_side(e.filter(F.col("vec_id") % QUERY_MOD == 0))
+    scored = e.join(F.broadcast(q), F.col("query_id") != F.col("vec_id")).select(
+        "query_id", F.col("vec_id").alias("neighbor_id"), _query_cosine()
     )
-    scored = (
-        e.join(F.broadcast(q), F.col("query_id") != F.col("vec_id"))
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            (dot(F.col("qv"), F.col("v")) / (F.col("qn") * F.col("nrm"))).alias("cosine_sim"),
-        )
-    )
-    w = W.partitionBy("query_id").orderBy(F.desc("cosine_sim"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= TOP_K)
-        .orderBy("query_id", "rnk")
-    )
+    return _top_k(scored, "cosine_sim").orderBy("query_id", "rnk")
 
 
 @register(
@@ -164,23 +207,7 @@ def ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             JOIN buckets eb ON qb.band = eb.band AND qb.bucket = eb.bucket
                            AND qb.vec_id <> eb.vec_id
         ),
-        scored AS (
-            SELECT query_id, neighbor_id,
-                   {_DOT_SQL.format(a='q.v', b='e.v')} / (q.nrm * e.nrm) AS cosine_sim
-            FROM cand
-            JOIN e q ON q.vec_id = query_id
-            JOIN e ON e.vec_id = neighbor_id
-        )
-        SELECT query_id, neighbor_id, cosine_sim, rnk FROM (
-            SELECT query_id, neighbor_id, cosine_sim,
-                   ROW_NUMBER() OVER (
-                       PARTITION BY query_id
-                       ORDER BY cosine_sim DESC, neighbor_id
-                   ) AS rnk
-            FROM scored
-        )
-        WHERE rnk <= {TOP_K}
-        ORDER BY query_id, rnk
+        {_COSINE_RERANK_SQL}
     """,
     doc="Banded sign-LSH ANN: 4 bands × 8 deterministic md5-derived "
     "hyperplanes; candidates = union of same-(band,bucket) pairs; exact "
@@ -205,22 +232,7 @@ def ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("query_id", F.col("vec_id").alias("neighbor_id"))
         .distinct()
     )
-    qe = e.select(F.col("vec_id").alias("query_id"), F.col("v").alias("qv"), F.col("nrm").alias("qn"))
-    scored = (
-        cand.join(F.broadcast(qe), "query_id")
-        .join(e.select(F.col("vec_id").alias("neighbor_id"), "v", "nrm"), "neighbor_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            (dot(F.col("qv"), F.col("v")) / (F.col("qn") * F.col("nrm"))).alias("cosine_sim"),
-        )
-    )
-    w = W.partitionBy("query_id").orderBy(F.desc("cosine_sim"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= TOP_K)
-        .orderBy("query_id", "rnk")
-    )
+    return _cosine_rerank(e, cand)
 
 
 @register(
@@ -314,51 +326,73 @@ def embedding_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Shared probe/rerank tail for the IVF oracles: assignment + nprobe
-# probing + exact cosine rerank against whatever centroid CTE `cents`
-# the head defined.
-_IVF_SEARCH_SQL = f"""
-        scored_cells AS (
-            SELECT e.vec_id, cent_id,
-                   ROW_NUMBER() OVER (
-                       PARTITION BY e.vec_id
-                       ORDER BY {_DOT_SQL.format(a='e.v', b='cv')} / (e.nrm * cn)
-                                DESC, cent_id
-                   ) AS crnk
-            FROM e CROSS JOIN cents
-        ),
-        assign AS (SELECT vec_id, cent_id AS cell FROM scored_cells WHERE crnk = 1),
-        probes AS (
-            SELECT vec_id AS query_id, cent_id AS cell FROM scored_cells
-            WHERE vec_id % {QUERY_MOD} = 0 AND crnk <= {N_PROBE}
-        ),
-        cand AS (
-            SELECT DISTINCT query_id, a.vec_id AS neighbor_id
-            FROM probes p JOIN assign a ON a.cell = p.cell
-            WHERE a.vec_id <> query_id
-        ),
-        scored AS (
-            SELECT query_id, neighbor_id,
-                   {_DOT_SQL.format(a='q.v', b='e.v')} / (q.nrm * e.nrm) AS cosine_sim
-            FROM cand
-            JOIN e q ON q.vec_id = query_id
-            JOIN e ON e.vec_id = neighbor_id
-        )
-        SELECT query_id, neighbor_id, cosine_sim, rnk FROM (
-            SELECT query_id, neighbor_id, cosine_sim,
-                   ROW_NUMBER() OVER (
-                       PARTITION BY query_id
-                       ORDER BY cosine_sim DESC, neighbor_id
-                   ) AS rnk
-            FROM scored
-        )
-        WHERE rnk <= {TOP_K}
-        ORDER BY query_id, rnk
-"""
+# ---------------------------------------------------------------------------
+# IVF building blocks: stride seeding, nearest-cell assignment and
+# N_PROBE probing.
+
+
+class StrideRule(NamedTuple):
+    """Stride seeding: every stride-th vec_id is a seed, with stride =
+    GREATEST(floor, FLOOR(n / cells)) over n = COUNT(*). Only the cell
+    count and the floor differ between seeders. Both engines compute
+    the stride from the same COUNT with identical double arithmetic,
+    so the oracle replays the seeds at every SF."""
+
+    floor: int
+    cells: Callable[[Column], Column]  # Spark cell count of the count column
+    cells_sql: str  # the same cell count over DuckDB's COUNT(*)
+
+
+def _stride_seeds(e: DataFrame, rule: StrideRule) -> DataFrame:
+    """`e` rows at every stride-th vec_id. The stride is a 1-row
+    broadcast frame computed engine-side from COUNT(*): no collect."""
+    n = F.count(F.lit(1))
+    params = e.agg(
+        F.greatest(
+            F.lit(rule.floor).cast("bigint"), F.floor(n / rule.cells(n)).cast("bigint")
+        ).alias("stride")
+    )
+    return e.crossJoin(F.broadcast(params)).filter(F.col("vec_id") % F.col("stride") == 0)
+
+
+def _stride_centroids(e: DataFrame, rule: StrideRule) -> DataFrame:
+    """(cent_id, cv, cn): the stride seeds as centroids."""
+    return _stride_seeds(e, rule).select(
+        F.col("vec_id").alias("cent_id"), F.col("v").alias("cv"), F.col("nrm").alias("cn")
+    )
+
+
+def _stride_seeds_sql(
+    rule: StrideRule, cols: str = "vec_id AS cent_id, v AS cv, nrm AS cn"
+) -> str:
+    """Oracle twin of _stride_seeds over the `e` CTE; the default
+    columns are _stride_centroids'."""
+    return f"""
+            SELECT {cols} FROM e, (
+                SELECT GREATEST({rule.floor}, CAST(FLOOR(COUNT(*) / {rule.cells_sql}) AS BIGINT))
+                       AS stride FROM e
+            ) WHERE vec_id % stride = 0"""
+
+
+# Adaptive cells ≈ √n (see the CENT_STRIDE_MIN comment); GREATEST(·,1):
+# an empty corpus must yield stride=23, not ÷0.
+IVF_STRIDE = StrideRule(
+    CENT_STRIDE_MIN,
+    lambda n: F.greatest(F.ceil(F.sqrt(n)), F.lit(1)),
+    "GREATEST(CEIL(SQRT(COUNT(*))), 1)",
+)
 
 
 def _cent_sim():
     return dot(F.col("v"), F.col("cv")) / (F.col("nrm") * F.col("cn"))
+
+
+# A vector's rank of every centroid: cosine DESC, ties to the lowest cent_id.
+_CELL_RANK_SQL = f"""ROW_NUMBER() OVER (
+                           PARTITION BY e.vec_id
+                           ORDER BY {_DOT_SQL.format(a='e.v', b='cv')} / (e.nrm * cn)
+                                    DESC, cent_id
+                       ) AS crnk"""
 
 
 def _assign_nearest(e: DataFrame, cents: DataFrame, keep_v: bool = False) -> DataFrame:
@@ -379,117 +413,104 @@ def _assign_nearest(e: DataFrame, cents: DataFrame, keep_v: bool = False) -> Dat
     return e.crossJoin(F.broadcast(cents)).groupBy("vec_id").agg(*aggs)
 
 
-def _ivf_candidates(e: DataFrame, cents: DataFrame) -> DataFrame:
-    """(query_id, neighbor_id): the nprobe-pruned candidate set —
-    corpus assigned to its nearest cell, each query probing its
-    N_PROBE best cells. The pruning half of every IVF search; the
-    rerank half (exact cosine or PQ/ADC) is the caller's choice."""
-    assign = _assign_nearest(e, cents).select("vec_id", "cell")
-    # top-nprobe cells only for the query SUBSET: filter before the
-    # crossJoin so the window sorts |Q| × cells rows, not corpus × cells
+def _assign_sql(cents: str, out: str) -> str:
+    """Oracle twin of _assign_nearest: CTE `out`(vec_id, cell, v), each
+    vector's nearest centroid of the `cents` CTE."""
+    return f"""
+        {out} AS (
+            SELECT vec_id, cell, v FROM (
+                SELECT e.vec_id, cent_id AS cell, e.v, {_CELL_RANK_SQL}
+                FROM e CROSS JOIN {cents}
+            ) WHERE crnk = 1
+        )"""
+
+
+def _probes(e: DataFrame, cents: DataFrame) -> DataFrame:
+    """(query_id, cell): each query's N_PROBE best cells. The query
+    SUBSET is filtered before the crossJoin, so the window sorts
+    |Q| × cells rows, not corpus × cells."""
     cw = W.partitionBy("vec_id").orderBy(F.desc(_cent_sim()), F.asc("cent_id"))
-    probes = (
+    return (
         e.filter(F.col("vec_id") % QUERY_MOD == 0)
         .crossJoin(F.broadcast(cents))
         .withColumn("crnk", F.row_number().over(cw))
         .filter(F.col("crnk") <= N_PROBE)
         .select(F.col("vec_id").alias("query_id"), F.col("cent_id").alias("cell"))
     )
+
+
+def _ivf_candidates(e: DataFrame, cents: DataFrame) -> DataFrame:
+    """(query_id, neighbor_id): the nprobe-pruned candidate set —
+    corpus assigned to its nearest cell, each query probing its
+    N_PROBE best cells. Centroids broadcast; the corpus never shuffles
+    for assignment — at scale, cell-partitioned storage turns each
+    query into a partition-pruned read of nprobe/ncells of the data."""
+    assign = _assign_nearest(e, cents).select("vec_id", "cell")
     return (
-        assign.join(F.broadcast(probes), "cell")
+        assign.join(F.broadcast(_probes(e, cents)), "cell")
         .filter(F.col("vec_id") != F.col("query_id"))
         .select("query_id", F.col("vec_id").alias("neighbor_id"))
         .distinct()
     )
 
 
-def _ivf_search(e: DataFrame, cents: DataFrame) -> DataFrame:
-    """Assignment + nprobe probing + exact rerank against `cents`
-    (cent_id, cv, cn). Centroids broadcast; the corpus never shuffles
-    for assignment — at scale, cell-partitioned storage turns each
-    query into a partition-pruned read of nprobe/ncells of the data."""
-    cand = _ivf_candidates(e, cents)
-    qe = e.select(F.col("vec_id").alias("query_id"), F.col("v").alias("qv"), F.col("nrm").alias("qn"))
-    scored = (
-        cand.join(F.broadcast(qe), "query_id")
-        .join(e.select(F.col("vec_id").alias("neighbor_id"), "v", "nrm"), "neighbor_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            (dot(F.col("qv"), F.col("v")) / (F.col("qn") * F.col("nrm"))).alias("cosine_sim"),
-        )
-    )
-    w = W.partitionBy("query_id").orderBy(F.desc("cosine_sim"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= TOP_K)
-        .orderBy("query_id", "rnk")
-    )
+# Oracle twin of _ivf_candidates over a `cents` CTE: cand(query_id,
+# neighbor_id). The rerank tail (exact cosine or PQ/ADC) is the
+# caller's choice.
+_IVF_PROBE_SQL = f"""
+        {_assign_sql('cents', 'assign')},
+        probes AS (
+            SELECT vec_id AS query_id, cent_id AS cell FROM (
+                SELECT e.vec_id, cent_id, {_CELL_RANK_SQL}
+                FROM e CROSS JOIN cents WHERE e.vec_id % {QUERY_MOD} = 0
+            ) WHERE crnk <= {N_PROBE}
+        ),
+        cand AS (
+            SELECT DISTINCT query_id, a.vec_id AS neighbor_id
+            FROM probes p JOIN assign a ON a.cell = p.cell
+            WHERE a.vec_id <> query_id
+        )"""
 
 
-# Adaptive stride as a 1-row broadcast frame / oracle CTE — cells ≈ √n
-# (see CENT_STRIDE_MIN comment). Computed engine-side from COUNT(*):
-# no collect, and the oracle replays the identical arithmetic.
-_STRIDE_SQL = (
-    f"SELECT GREATEST({CENT_STRIDE_MIN}, "
-    "CAST(FLOOR(COUNT(*) / GREATEST(CEIL(SQRT(COUNT(*))), 1)) AS BIGINT)) "
-    "AS stride FROM e"
+@register(
+    "ann_ivf_topk",
+    oracle=f"""
+        WITH e AS ({_CORPUS_SQL}),
+        cents AS ({_stride_seeds_sql(IVF_STRIDE)}),
+        {_IVF_PROBE_SQL},
+        {_COSINE_RERANK_SQL}
+    """,
+    doc="IVF-style ANN: corpus assigned to the nearest coarse cell; every "
+    "23rd vector seeds a centroid (unbiased stride sample standing in "
+    "for trained KMeans so the oracle can replay the assignment); "
+    "queries probe their 3 best cells; exact cosine rerank within "
+    "probed cells. Scale: "
+    "centroids broadcast, assignment is one narrow scan, and "
+    "cell-partitioned storage turns each query into a partition-pruned "
+    "read of nprobe/ncells of the corpus.",
+    tags=("similarity", "ivf", "extension"),
 )
+def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
+    e = _emb_with_norm(spark, sf_dir)
+    return _cosine_rerank(e, _ivf_candidates(e, _stride_centroids(e, IVF_STRIDE)))
 
 
-def _stride_centroids(e: DataFrame) -> DataFrame:
-    n = F.count(F.lit(1))
-    params = e.agg(
-        F.greatest(
-            F.lit(CENT_STRIDE_MIN).cast("bigint"),
-            # GREATEST(·,1): an empty corpus must yield stride=23, not ÷0
-            F.floor(n / F.greatest(F.ceil(F.sqrt(n)), F.lit(1))).cast("bigint"),
-        ).alias("stride")
-    )
-    return (
-        e.crossJoin(F.broadcast(params))
-        .filter(F.col("vec_id") % F.col("stride") == 0)
-        .select(
-            F.col("vec_id").alias("cent_id"), F.col("v").alias("cv"), F.col("nrm").alias("cn")
-        )
-    )
-
-
-# Search-optimal cell count for the TRAINED quantizer (r5 VERDICT item
-# 5): with a fixed query fraction 1/QUERY_MOD and fixed N_PROBE, total
-# search cost = assignment n·c + probing (n/QUERY_MOD)·N_PROBE·(n/c),
-# minimized at c* = √(n·N_PROBE/QUERY_MOD) ≈ √n/4 — not the √n the
-# untrained/semdedup stride uses (semantic_dedup's within-cell pair
-# scan costs n²/c, so FEWER cells would hurt it; each operator gets its
-# balance point). The trained path pays assignment 3× (2 k-median
-# rounds + final), so the 4× fewer cells cut its sf10 cost ~97→~30 s.
-# Same GREATEST floors as _STRIDE_SQL; both engines compute the stride
-# from the same COUNT with identical double arithmetic.
-_TRAINED_STRIDE_SQL = (
-    "SELECT GREATEST(1, CAST(FLOOR(COUNT(*) / GREATEST("
-    f"CEIL(SQRT(COUNT(*) * {N_PROBE}.0 / {QUERY_MOD}.0)), 1)) AS BIGINT)) "
-    "AS stride FROM e"
-)
-
-
-def _trained_stride_centroids(e: DataFrame) -> DataFrame:
-    n = F.count(F.lit(1))
-    cells = F.greatest(
+# Search-optimal cell count for the TRAINED quantizer: with a fixed
+# query fraction 1/QUERY_MOD and fixed N_PROBE, total search cost =
+# assignment n·c + probing (n/QUERY_MOD)·N_PROBE·(n/c), minimized at
+# c* = √(n·N_PROBE/QUERY_MOD) ≈ √n/4 — not the √n the untrained/
+# semdedup stride uses (semantic_dedup's within-cell pair scan costs
+# n²/c, so FEWER cells would hurt it; each operator gets its balance
+# point). The trained path pays assignment 3× (2 k-median rounds +
+# final), so the 4× fewer cells cut its sf10 cost ~97→~30 s.
+TRAINED_IVF_STRIDE = StrideRule(
+    1,
+    lambda n: F.greatest(
         F.ceil(F.sqrt(n * F.lit(float(N_PROBE)) / F.lit(float(QUERY_MOD)))),
         F.lit(1).cast("bigint"),
-    )
-    params = e.agg(
-        F.greatest(
-            F.lit(1).cast("bigint"), F.floor(n / cells).cast("bigint")
-        ).alias("stride")
-    )
-    return (
-        e.crossJoin(F.broadcast(params))
-        .filter(F.col("vec_id") % F.col("stride") == 0)
-        .select(
-            F.col("vec_id").alias("cent_id"), F.col("v").alias("cv"), F.col("nrm").alias("cn")
-        )
-    )
+    ),
+    f"GREATEST(CEIL(SQRT(COUNT(*) * {N_PROBE}.0 / {QUERY_MOD}.0)), 1)",
+)
 
 
 def _kmedian_centroids(e: DataFrame, n_iter: int = N_KMEDIAN_ITER) -> DataFrame:
@@ -499,7 +520,7 @@ def _kmedian_centroids(e: DataFrame, n_iter: int = N_KMEDIAN_ITER) -> DataFrame:
     (cell, component) pairs (64 rows per vector) for the order-statistic
     update — partitioning-invariant and oracle-replayable, unlike a
     float mean (module header). Empty cells drop out naturally."""
-    cents = _trained_stride_centroids(e)
+    cents = _stride_centroids(e, TRAINED_IVF_STRIDE)
     for _ in range(n_iter):
         assigned = _assign_nearest(e, cents, keep_v=True).select("cell", "v")
         med = (
@@ -513,11 +534,11 @@ def _kmedian_centroids(e: DataFrame, n_iter: int = N_KMEDIAN_ITER) -> DataFrame:
             .agg(cv.alias("cv"))
             .select(F.col("cell").alias("cent_id"), "cv", norm(F.col("cv")).alias("cn"))
         )
-        # r10: materialize each generation (a ~√n-row centroid table).
-        # Downstream consumes cents 2x per round (assignment build +
-        # probe build) and 2x again in _ivf_search — unchecked, every
-        # broadcast build re-executed the whole preceding k-median
-        # chain (measured: the 2-round train replayed ~4x per query).
+        # materialize each generation (a ~√n-row centroid table):
+        # downstream consumes cents twice per round (assignment build +
+        # probe build) and twice again in the search; unchecked, every
+        # broadcast build re-executes the whole preceding k-median chain
+        # (the 2-round train replayed ~4x per query).
         cents = cents.localCheckpoint(eager=True)
     return cents
 
@@ -526,17 +547,7 @@ def _kmedian_iter_sql(prev: str, out: str) -> str:
     """One unrolled k-median iteration as oracle CTEs: `out` centroids
     from `prev` centroids (cent_id, cv, cn)."""
     return f"""
-        a_{out} AS (
-            SELECT vec_id, cell, v FROM (
-                SELECT e.vec_id, cent_id AS cell, e.v,
-                       ROW_NUMBER() OVER (
-                           PARTITION BY e.vec_id
-                           ORDER BY {_DOT_SQL.format(a='e.v', b='cv')} / (e.nrm * cn)
-                                    DESC, cent_id
-                       ) AS crnk
-                FROM e CROSS JOIN {prev}
-            ) WHERE crnk = 1
-        ),
+        {_assign_sql(prev, f'a_{out}')},
         m_{out} AS (
             SELECT cell, i, quantile_cont(v[i], 0.5) AS m
             FROM a_{out}, range(1, {DIM + 1}) t(i)
@@ -551,39 +562,14 @@ def _kmedian_iter_sql(prev: str, out: str) -> str:
 
 
 @register(
-    "ann_ivf_topk",
-    oracle=f"""
-        WITH e AS ({_CORPUS_SQL}),
-        params AS ({_STRIDE_SQL}),
-        cents AS (SELECT vec_id AS cent_id, v AS cv, nrm AS cn FROM e, params
-                  WHERE vec_id % stride = 0),
-        {_IVF_SEARCH_SQL}
-    """,
-    doc="IVF-style ANN: corpus assigned to the nearest coarse cell; every "
-    "23rd vector seeds a centroid (unbiased stride sample standing in "
-    "for trained KMeans so the oracle can replay the assignment); "
-    "queries probe their 3 best cells; exact cosine rerank within "
-    "probed cells. Scale: "
-    "centroids broadcast, assignment is one narrow scan, and "
-    "cell-partitioned storage turns each query into a partition-pruned "
-    "read of nprobe/ncells of the corpus.",
-    tags=("similarity", "ivf", "extension"),
-)
-def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = _emb_with_norm(spark, sf_dir)
-    return _ivf_search(e, _stride_centroids(e))
-
-
-@register(
     "ann_ivf_trained_topk",
     oracle=f"""
         WITH e AS ({_CORPUS_SQL}),
-        params AS ({_TRAINED_STRIDE_SQL}),
-        cents0 AS (SELECT vec_id AS cent_id, v AS cv, nrm AS cn FROM e, params
-                   WHERE vec_id % stride = 0),
+        cents0 AS ({_stride_seeds_sql(TRAINED_IVF_STRIDE)}),
         {_kmedian_iter_sql('cents0', 'cents1')},
         {_kmedian_iter_sql('cents1', 'cents')},
-        {_IVF_SEARCH_SQL}
+        {_IVF_PROBE_SQL},
+        {_COSINE_RERANK_SQL}
     """,
     doc="IVF with a TRAINED coarse quantizer: the stride seeds refined "
     f"by {N_KMEDIAN_ITER} k-median iterations (assign by cosine, "
@@ -600,7 +586,7 @@ def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def ann_ivf_trained_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = _emb_with_norm(spark, sf_dir)
-    return _ivf_search(e, _kmedian_centroids(e))
+    return _cosine_rerank(e, _ivf_candidates(e, _kmedian_centroids(e)))
 
 
 SEMDEDUP_THRESHOLD = 0.4  # matches COSINE_DUP_THRESHOLD for this corpus
@@ -610,20 +596,8 @@ SEMDEDUP_THRESHOLD = 0.4  # matches COSINE_DUP_THRESHOLD for this corpus
     "semantic_dedup",
     oracle=f"""
         WITH e AS ({_CORPUS_SQL}),
-        params AS ({_STRIDE_SQL}),
-        cents AS (SELECT vec_id AS cent_id, v AS cv, nrm AS cn FROM e, params
-                  WHERE vec_id % stride = 0),
-        a2 AS (
-            SELECT vec_id, cell FROM (
-                SELECT e.vec_id, cent_id AS cell,
-                       ROW_NUMBER() OVER (
-                           PARTITION BY e.vec_id
-                           ORDER BY {_DOT_SQL.format(a='e.v', b='cv')} / (e.nrm * cn)
-                                    DESC, cent_id
-                       ) AS crnk
-                FROM e CROSS JOIN cents
-            ) WHERE crnk = 1
-        ),
+        cents AS ({_stride_seeds_sql(IVF_STRIDE)}),
+        {_assign_sql('cents', 'a2')},
         dup AS (
             SELECT DISTINCT b.vec_id
             FROM a2 a JOIN a2 b ON a.cell = b.cell AND a.vec_id < b.vec_id
@@ -649,7 +623,7 @@ SEMDEDUP_THRESHOLD = 0.4  # matches COSINE_DUP_THRESHOLD for this corpus
 )
 def semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = _emb_with_norm(spark, sf_dir)
-    assign = _assign_nearest(e, _stride_centroids(e)).select("vec_id", "cell")
+    assign = _assign_nearest(e, _stride_centroids(e, IVF_STRIDE)).select("vec_id", "cell")
     a = assign.join(e, "vec_id")
     lo = a.select("cell", F.col("vec_id").alias("ia"), F.col("v").alias("va"), F.col("nrm").alias("na"))
     hi = a.select("cell", F.col("vec_id").alias("ib"), F.col("v").alias("vb"), F.col("nrm").alias("nb"))
@@ -672,20 +646,8 @@ def semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     "ivf_cell_purity",
     oracle=f"""
         WITH e AS ({_CORPUS_SQL}),
-        params AS ({_STRIDE_SQL}),
-        cents AS (SELECT vec_id AS cent_id, v AS cv, nrm AS cn FROM e, params
-                  WHERE vec_id % stride = 0),
-        a2 AS (
-            SELECT vec_id, cell FROM (
-                SELECT e.vec_id, cent_id AS cell,
-                       ROW_NUMBER() OVER (
-                           PARTITION BY e.vec_id
-                           ORDER BY {_DOT_SQL.format(a='e.v', b='cv')} / (e.nrm * cn)
-                                    DESC, cent_id
-                       ) AS crnk
-                FROM e CROSS JOIN cents
-            ) WHERE crnk = 1
-        ),
+        cents AS ({_stride_seeds_sql(IVF_STRIDE)}),
+        {_assign_sql('cents', 'a2')},
         s AS (
             SELECT cell, emb.label, COUNT(*) AS n
             FROM a2 JOIN embeddings emb USING (vec_id)
@@ -712,7 +674,7 @@ def semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 def ivf_cell_purity(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = _emb_with_norm(spark, sf_dir)
     labels = load_table(spark, sf_dir, "embeddings").select("vec_id", "label")
-    assign = _assign_nearest(e, _stride_centroids(e)).select("vec_id", "cell")
+    assign = _assign_nearest(e, _stride_centroids(e, IVF_STRIDE)).select("vec_id", "cell")
     s = (
         assign.join(labels, "vec_id")
         .groupBy("cell", "label")
@@ -788,6 +750,8 @@ def embedding_norm_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 PQ_SUBSPACES = 8
 PQ_SUBDIM = DIM // PQ_SUBSPACES
 PQ_CODES = 16  # codebook entries per subspace (stride-sampled seeds)
+# the codebook seeds: PQ_CODES stride-sampled vectors
+PQ_CODEBOOK_STRIDE = StrideRule(1, lambda n: F.lit(float(PQ_CODES)), f"{PQ_CODES}.0")
 
 _PQ_L2_SQL = (
     f"list_sum(list_transform(range(1, {PQ_SUBDIM + 1}), "
@@ -806,34 +770,34 @@ def _pq_l2_col(a: F.Column, b: F.Column) -> F.Column:
     )
 
 
-def _pq_subs(vec: F.Column) -> F.Column:
-    """Array of PQ_SUBSPACES contiguous PQ_SUBDIM-dim slices."""
-    return F.array(
-        *[F.slice(vec, s * PQ_SUBDIM + 1, PQ_SUBDIM) for s in range(PQ_SUBSPACES)]
+def _pq_split(df: DataFrame, key: str, out: str) -> DataFrame:
+    """(s, key, out): one row per 1-based subspace s, `out` being the
+    s-th contiguous PQ_SUBDIM-dim slice of df's `v`."""
+    subs = F.array(
+        *[F.slice(F.col("v"), s * PQ_SUBDIM + 1, PQ_SUBDIM) for s in range(PQ_SUBSPACES)]
     )
+    return df.select(key, F.posexplode(subs).alias("s0", out)).select(
+        (F.col("s0") + 1).alias("s"), key, out
+    )
+
+
+def _pq_split_sql(key: str, src: str, out: str) -> str:
+    """Oracle twin of _pq_split over the `src` CTE."""
+    return f"""
+            SELECT {key}, s,
+                   list_slice(v, (s - 1) * {PQ_SUBDIM} + 1, s * {PQ_SUBDIM}) AS {out}
+            FROM {src}, range(1, {PQ_SUBSPACES + 1}) t(s)"""
 
 
 def _pq_codebook(e: DataFrame) -> DataFrame:
     """(s, code, cvec): PQ_CODES stride-sampled seed vectors, sliced
     into one codebook entry per subspace."""
-    params = e.agg(
-        F.greatest(
-            F.lit(1).cast("bigint"),
-            F.floor(F.count(F.lit(1)) / F.lit(float(PQ_CODES))).cast("bigint"),
-        ).alias("stride")
-    )
-    seeds = (
-        e.crossJoin(F.broadcast(params))
-        .filter(F.col("vec_id") % F.col("stride") == 0)
-        .select("vec_id", "v")
-    )
+    seeds = _stride_seeds(e, PQ_CODEBOOK_STRIDE).select("vec_id", "v")
     # the seed set is PQ_CODES-sized: a global row_number over ~16 rows
     codes = seeds.select(
         F.row_number().over(W.orderBy("vec_id")).alias("code"), "v"
     )
-    return codes.select(
-        "code", F.posexplode(_pq_subs(F.col("v"))).alias("s0", "cvec")
-    ).select(F.col("s0") + 1, "code", "cvec").toDF("s", "code", "cvec")
+    return _pq_split(codes, "code", "cvec")
 
 
 def _pq_encode(e: DataFrame, codebook: DataFrame) -> DataFrame:
@@ -847,9 +811,7 @@ def _pq_encode(e: DataFrame, codebook: DataFrame) -> DataFrame:
     rows ever shuffle. Tie rule identical to the oracle's
     ROW_NUMBER ... ORDER BY d ASC, code ASC: min of the (d, code)
     struct. The winner's d is MIN(d) (ties share the same d)."""
-    esub = e.select(
-        "vec_id", F.posexplode(_pq_subs(F.col("v"))).alias("s0", "sub")
-    ).select((F.col("s0") + 1).alias("s"), "vec_id", "sub")
+    esub = _pq_split(e, "vec_id", "sub")
     d = _pq_l2_col(F.col("sub"), F.col("cvec"))
     return (
         esub.join(F.broadcast(codebook), "s")
@@ -879,9 +841,7 @@ def _pq_query_luts(e: DataFrame, codebook: DataFrame) -> DataFrame:
     q = e.filter(F.col("vec_id") % QUERY_MOD == 0).select(
         F.col("vec_id").alias("query_id"), "v"
     )
-    qsub = q.select(
-        "query_id", F.posexplode(_pq_subs(F.col("v"))).alias("s0", "qs")
-    ).select((F.col("s0") + 1).alias("s"), "query_id", "qs")
+    qsub = _pq_split(q, "query_id", "qs")
     qp = qsub.join(F.broadcast(codebook), "s").select(
         "query_id", "s", "code", dot(F.col("qs"), F.col("cvec")).alias("p")
     )
@@ -913,20 +873,9 @@ def _pq_adc_score() -> F.Column:
 # which pq_reconstruction_error folds into the per-vector error).
 _PQ_ENC_SQL = f"""
         e AS ({_CORPUS_SQL}),
-        params AS (SELECT GREATEST(1, CAST(FLOOR(COUNT(*) / {PQ_CODES}.0) AS BIGINT))
-                   AS stride FROM e),
-        seeds AS (SELECT ROW_NUMBER() OVER (ORDER BY vec_id) AS code, v
-                  FROM e, params WHERE vec_id % stride = 0),
-        codebook AS (
-            SELECT code, s,
-                   list_slice(v, (s - 1) * {PQ_SUBDIM} + 1, s * {PQ_SUBDIM}) AS cvec
-            FROM seeds, range(1, {PQ_SUBSPACES + 1}) t(s)
-        ),
-        esub AS (
-            SELECT vec_id, s,
-                   list_slice(v, (s - 1) * {PQ_SUBDIM} + 1, s * {PQ_SUBDIM}) AS sub
-            FROM e, range(1, {PQ_SUBSPACES + 1}) t(s)
-        ),
+        seeds AS ({_stride_seeds_sql(PQ_CODEBOOK_STRIDE, 'ROW_NUMBER() OVER (ORDER BY vec_id) AS code, v')}),
+        codebook AS ({_pq_split_sql('code', 'seeds', 'cvec')}),
+        esub AS ({_pq_split_sql('vec_id', 'e', 'sub')}),
         enc AS (
             SELECT vec_id, s, code, d FROM (
                 SELECT esub.vec_id, esub.s, cb.code,
@@ -941,20 +890,14 @@ _PQ_ENC_SQL = f"""
         )
 """
 
-
-@register(
-    "ann_pq_topk",
-    oracle=f"""
-        WITH {_PQ_ENC_SQL},
+# The PQ search side as oracle CTEs, twins of _pq_codes_wide and
+# _pq_query_luts: codes_w(vec_id, codes) and qw(query_id, pls).
+_PQ_LUT_SQL = f"""
         codes_w AS (
             SELECT vec_id, list(code ORDER BY s) AS codes FROM enc GROUP BY vec_id
         ),
         q AS (SELECT vec_id AS query_id, v FROM e WHERE vec_id % {QUERY_MOD} = 0),
-        qsub AS (
-            SELECT query_id, s,
-                   list_slice(v, (s - 1) * {PQ_SUBDIM} + 1, s * {PQ_SUBDIM}) AS qs
-            FROM q, range(1, {PQ_SUBSPACES + 1}) t(s)
-        ),
+        qsub AS ({_pq_split_sql('query_id', 'q', 'qs')}),
         qp AS (
             SELECT query_id, qsub.s, cb.code,
                    {_PQ_DOT_SQL.format(a='qs', b='cvec')} AS p
@@ -967,22 +910,22 @@ _PQ_ENC_SQL = f"""
         qw AS (
             SELECT query_id, list(plist ORDER BY s) AS pls
             FROM qs_ GROUP BY query_id
-        ),
+        )"""
+# Oracle twin of _pq_adc_score, in the same fixed order.
+_PQ_ADC_SQL = " + ".join(f"pls[{s}][codes[{s}]]" for s in range(1, PQ_SUBSPACES + 1))
+
+
+@register(
+    "ann_pq_topk",
+    oracle=f"""
+        WITH {_PQ_ENC_SQL},
+        {_PQ_LUT_SQL},
         scored AS (
-            SELECT qw.query_id, cw.vec_id AS neighbor_id,
-                   {" + ".join(f"pls[{s}][codes[{s}]]" for s in range(1, PQ_SUBSPACES + 1))}
-                       AS pq_score
+            SELECT qw.query_id, cw.vec_id AS neighbor_id, {_PQ_ADC_SQL} AS pq_score
             FROM codes_w cw CROSS JOIN qw
             WHERE cw.vec_id <> qw.query_id
         )
-        SELECT query_id, neighbor_id, pq_score, rnk FROM (
-            SELECT query_id, neighbor_id, pq_score,
-                   ROW_NUMBER() OVER (
-                       PARTITION BY query_id
-                       ORDER BY pq_score DESC, neighbor_id
-                   ) AS rnk
-            FROM scored
-        ) WHERE rnk <= {TOP_K}
+        {_TOP_K_SQL.format(score='pq_score')}
         ORDER BY query_id, rnk
     """,
     doc=f"Product-quantization ANN: the corpus is encoded as "
@@ -1013,12 +956,7 @@ def ann_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             _pq_adc_score().alias("pq_score"),
         )
     )
-    wk = W.partitionBy("query_id").orderBy(F.desc("pq_score"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rnk", F.row_number().over(wk))
-        .filter(F.col("rnk") <= TOP_K)
-        .orderBy("query_id", "rnk")
-    )
+    return _top_k(scored, "pq_score").orderBy("query_id", "rnk")
 
 
 @register(
@@ -1077,10 +1015,13 @@ def pq_reconstruction_error(spark: SparkSession, sf_dir: str) -> DataFrame:
 # gives c* = √(n·N_PROBE/(8·QUERY_MOD)) ≈ √n/11.5 — fewer, fatter
 # cells than either exact-rerank path, because cheap reranks make big
 # candidate lists affordable while assignment stays the dominant scan.
-_IVFPQ_STRIDE_SQL = (
-    "SELECT GREATEST(1, CAST(FLOOR(COUNT(*) / GREATEST("
-    f"CEIL(SQRT(COUNT(*) * {N_PROBE}.0 / (8.0 * {QUERY_MOD}.0))), 1)) AS BIGINT)) "
-    "AS stride FROM e"
+IVFPQ_STRIDE = StrideRule(
+    1,
+    lambda n: F.greatest(
+        F.ceil(F.sqrt(n * F.lit(float(N_PROBE)) / F.lit(8.0 * QUERY_MOD))),
+        F.lit(1).cast("bigint"),
+    ),
+    f"GREATEST(CEIL(SQRT(COUNT(*) * {N_PROBE}.0 / (8.0 * {QUERY_MOD}.0))), 1)",
 )
 
 
@@ -1106,7 +1047,7 @@ def build_pq_index(spark: SparkSession, sf_dir: str, table_dir: str) -> int:
     from ..sinks.versioned import write_snapshot
 
     e = _emb_with_norm(spark, sf_dir)
-    cents = _ivfpq_stride_centroids(e)
+    cents = _stride_centroids(e, IVFPQ_STRIDE)
     codebook = _pq_codebook(e)
     coded = _assign_nearest(e, cents).select("vec_id", "cell").join(
         _pq_codes_wide(_pq_encode(e, codebook)), "vec_id"
@@ -1142,90 +1083,20 @@ def extend_pq_index(spark: SparkSession, table_dir: str, new_vectors: DataFrame)
     )
 
 
-def _ivfpq_stride_centroids(e: DataFrame) -> DataFrame:
-    n = F.count(F.lit(1))
-    cells = F.greatest(
-        F.ceil(F.sqrt(n * F.lit(float(N_PROBE)) / F.lit(8.0 * QUERY_MOD))),
-        F.lit(1).cast("bigint"),
-    )
-    params = e.agg(
-        F.greatest(F.lit(1).cast("bigint"), F.floor(n / cells).cast("bigint")).alias(
-            "stride"
-        )
-    )
-    return (
-        e.crossJoin(F.broadcast(params))
-        .filter(F.col("vec_id") % F.col("stride") == 0)
-        .select(
-            F.col("vec_id").alias("cent_id"), F.col("v").alias("cv"), F.col("nrm").alias("cn")
-        )
-    )
-
-
 @register(
     "ann_ivfpq_topk",
     oracle=f"""
         WITH {_PQ_ENC_SQL},
-        codes_w AS (
-            SELECT vec_id, list(code ORDER BY s) AS codes FROM enc GROUP BY vec_id
-        ),
-        cparams AS ({_IVFPQ_STRIDE_SQL}),
-        cents AS (SELECT vec_id AS cent_id, v AS cv, nrm AS cn FROM e, cparams
-                  WHERE vec_id % stride = 0),
-        scored_cells AS (
-            SELECT e.vec_id, cent_id,
-                   ROW_NUMBER() OVER (
-                       PARTITION BY e.vec_id
-                       ORDER BY {_DOT_SQL.format(a='e.v', b='cv')} / (e.nrm * cn)
-                                DESC, cent_id
-                   ) AS crnk
-            FROM e CROSS JOIN cents
-        ),
-        assign AS (SELECT vec_id, cent_id AS cell FROM scored_cells WHERE crnk = 1),
-        probes AS (
-            SELECT vec_id AS query_id, cent_id AS cell FROM scored_cells
-            WHERE vec_id % {QUERY_MOD} = 0 AND crnk <= {N_PROBE}
-        ),
-        cand AS (
-            SELECT DISTINCT query_id, a.vec_id AS neighbor_id
-            FROM probes p JOIN assign a ON a.cell = p.cell
-            WHERE a.vec_id <> query_id
-        ),
-        q AS (SELECT vec_id AS query_id, v FROM e WHERE vec_id % {QUERY_MOD} = 0),
-        qsub AS (
-            SELECT query_id, s,
-                   list_slice(v, (s - 1) * {PQ_SUBDIM} + 1, s * {PQ_SUBDIM}) AS qs
-            FROM q, range(1, {PQ_SUBSPACES + 1}) t(s)
-        ),
-        qp AS (
-            SELECT query_id, qsub.s, cb.code,
-                   {_PQ_DOT_SQL.format(a='qs', b='cvec')} AS p
-            FROM qsub JOIN codebook cb ON qsub.s = cb.s
-        ),
-        qs_ AS (
-            SELECT query_id, s, list(p ORDER BY code) AS plist
-            FROM qp GROUP BY query_id, s
-        ),
-        qw AS (
-            SELECT query_id, list(plist ORDER BY s) AS pls
-            FROM qs_ GROUP BY query_id
-        ),
+        {_PQ_LUT_SQL},
+        cents AS ({_stride_seeds_sql(IVFPQ_STRIDE)}),
+        {_IVF_PROBE_SQL},
         scored AS (
-            SELECT c.query_id, c.neighbor_id,
-                   {" + ".join(f"pls[{s}][codes[{s}]]" for s in range(1, PQ_SUBSPACES + 1))}
-                       AS pq_score
+            SELECT c.query_id, c.neighbor_id, {_PQ_ADC_SQL} AS pq_score
             FROM cand c
             JOIN codes_w cw ON cw.vec_id = c.neighbor_id
             JOIN qw ON qw.query_id = c.query_id
         )
-        SELECT query_id, neighbor_id, pq_score, rnk FROM (
-            SELECT query_id, neighbor_id, pq_score,
-                   ROW_NUMBER() OVER (
-                       PARTITION BY query_id
-                       ORDER BY pq_score DESC, neighbor_id
-                   ) AS rnk
-            FROM scored
-        ) WHERE rnk <= {TOP_K}
+        {_TOP_K_SQL.format(score='pq_score')}
         ORDER BY query_id, rnk
     """,
     doc="The production ANN stack: IVF selects, PQ compresses, and the "
@@ -1270,21 +1141,13 @@ def ann_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     codebook = read_snapshot(spark, _os.path.join(table_dir, "codebook"))
     # only the |Q| query vectors are read from the raw table
     e = _emb_with_norm(spark, sf_dir)
-    cw = W.partitionBy("vec_id").orderBy(F.desc(_cent_sim()), F.asc("cent_id"))
-    probes = (
-        e.filter(F.col("vec_id") % QUERY_MOD == 0)
-        .crossJoin(F.broadcast(cents))
-        .withColumn("crnk", F.row_number().over(cw))
-        .filter(F.col("crnk") <= N_PROBE)
-        .select(F.col("vec_id").alias("query_id"), F.col("cent_id").alias("cell"))
-    )
     # candidates never materialize: broadcast probes expand the coded
     # scan map-side ((query, neighbor) is already unique — one cell per
     # neighbor, distinct cells per query), ADC scores against the
     # broadcast per-query LUTs in the same stage; the only wide
     # exchange after the index build is the per-query top-k window
     scored = (
-        coded.join(F.broadcast(probes), "cell")
+        coded.join(F.broadcast(_probes(e, cents)), "cell")
         .filter(F.col("vec_id") != F.col("query_id"))
         .join(F.broadcast(_pq_query_luts(e, codebook)), "query_id")
         .select(
@@ -1293,18 +1156,13 @@ def ann_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             _pq_adc_score().alias("pq_score"),
         )
     )
-    wk = W.partitionBy("query_id").orderBy(F.desc("pq_score"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rnk", F.row_number().over(wk))
-        .filter(F.col("rnk") <= TOP_K)
-        .orderBy("query_id", "rnk")
-    )
+    return _top_k(scored, "pq_score").orderBy("query_id", "rnk")
 
 
 # ---------------------------------------------------------------------------
-# int8 affine quantization audit (round 8). PQ compresses for the ADC
-# SCAN; plain per-dimension int8 (scale/zero-point, the faiss
-# SQ8 / vector-DB storage format) compresses the STORED table 8× while
+# int8 affine quantization audit. PQ compresses for the ADC SCAN;
+# plain per-dimension int8 (scale/zero-point, the faiss SQ8 /
+# vector-DB storage format) compresses the STORED table 8× while
 # keeping exact-ish dots — the first compression lever a 100 TB
 # embedding store reaches for. Before flipping it, a deployment needs
 # the round-trip error envelope.
@@ -1387,9 +1245,9 @@ def int8_quantization_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Truncated-dimension recall audit (round 7). The cheapest ANN lever
-# at 100 TB is not a better index — it is fewer dimensions: scoring on
-# a 16-dim prefix cuts memory traffic 4× before IVF/PQ even start (and
+# Truncated-dimension recall audit. The cheapest ANN lever at 100 TB
+# is not a better index — it is fewer dimensions: scoring on a 16-dim
+# prefix cuts memory traffic 4× before IVF/PQ even start (and
 # Matryoshka-style models train so prefixes stay meaningful). Before a
 # deployment flips that switch it needs the recall number: how much of
 # the TRUE full-dim top-k does prefix scoring keep?
@@ -1403,34 +1261,19 @@ _DOT16_SQL = "list_sum(list_transform(range(1, 17), i -> {a}[i] * {b}[i]))"
     oracle=f"""
         WITH e AS ({_CORPUS_SQL}),
         et AS (
-            SELECT vec_id, v,
+            SELECT vec_id, v, nrm,
                    sqrt({_DOT16_SQL.format(a='v', b='v')}) AS nrm16
             FROM e
         ),
-        q AS (SELECT * FROM e WHERE vec_id % {QUERY_MOD} = 0),
-        qt AS (SELECT * FROM et WHERE vec_id % {QUERY_MOD} = 0),
-        fk AS (
-            SELECT query_id, neighbor_id FROM (
-                SELECT q.vec_id AS query_id, e.vec_id AS neighbor_id,
-                       ROW_NUMBER() OVER (
-                           PARTITION BY q.vec_id
-                           ORDER BY {_DOT_SQL.format(a='q.v', b='e.v')}
-                                    / (q.nrm * e.nrm) DESC, e.vec_id
-                       ) AS rnk
-                FROM q JOIN e ON q.vec_id <> e.vec_id
-            ) WHERE rnk <= {TOP_K}
+        scored AS (
+            SELECT q.vec_id AS query_id, e.vec_id AS neighbor_id,
+                   {_QUERY_COSINE_SQL} AS sim_full,
+                   {_DOT16_SQL.format(a='q.v', b='e.v')} / (q.nrm16 * e.nrm16) AS sim_trunc
+            FROM et q JOIN et e ON q.vec_id <> e.vec_id
+            WHERE q.vec_id % {QUERY_MOD} = 0
         ),
-        tk AS (
-            SELECT query_id, neighbor_id FROM (
-                SELECT qt.vec_id AS query_id, et.vec_id AS neighbor_id,
-                       ROW_NUMBER() OVER (
-                           PARTITION BY qt.vec_id
-                           ORDER BY {_DOT16_SQL.format(a='qt.v', b='et.v')}
-                                    / (qt.nrm16 * et.nrm16) DESC, et.vec_id
-                       ) AS rnk
-                FROM qt JOIN et ON qt.vec_id <> et.vec_id
-            ) WHERE rnk <= {TOP_K}
-        ),
+        fk AS ({_TOP_K_SQL.format(score='sim_full')}),
+        tk AS ({_TOP_K_SQL.format(score='sim_trunc')}),
         matches AS (
             SELECT f.query_id, COUNT(*) AS m
             FROM fk f JOIN tk t
@@ -1478,21 +1321,11 @@ def truncated_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("sim_trunc"),
     )
     scored = track_persist(scored, StorageLevel.MEMORY_AND_DISK)
-    wf = W.partitionBy("query_id").orderBy(F.desc("sim_full"), F.asc("neighbor_id"))
-    wt = W.partitionBy("query_id").orderBy(F.desc("sim_trunc"), F.asc("neighbor_id"))
-    fk = (
-        scored.withColumn("rnk", F.row_number().over(wf))
-        .filter(F.col("rnk") <= TOP_K)
-        .select("query_id", "neighbor_id")
-    )
-    tk = (
-        scored.withColumn("rnk", F.row_number().over(wt))
-        .filter(F.col("rnk") <= TOP_K)
-        .select("query_id", "neighbor_id")
-    )
+    fk = _top_k(scored, "sim_full").select("query_id", "neighbor_id")
+    tk = _top_k(scored, "sim_trunc").select("query_id", "neighbor_id")
     # fk/tk/matches are |Q| x TOP_K rows. |Q| is corpus/QUERY_MOD —
     # SF-scaled — so these carry NO static broadcast hint (a hint
-    # bypasses the 8 GiB ceiling; the round-6 lesson). The
+    # bypasses the 8 GiB broadcast ceiling). The
     # intersection join AQE-broadcasts at runtime; the zero-match
     # queries the oracle's LEFT JOIN accounts for are folded in
     # arithmetically instead (matched-query count vs total-query

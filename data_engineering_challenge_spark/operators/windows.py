@@ -27,6 +27,33 @@ from ..registry import register
 
 DEC = "decimal(18,2)"
 
+_SESSIONIZE_ORACLE = """
+        WITH flagged AS (
+            SELECT user_id, ts, event_id,
+                   CASE WHEN LAG(ts) OVER w IS NULL
+                             OR ts - LAG(ts) OVER w > INTERVAL 30 MINUTE
+                        THEN 1 ELSE 0 END AS is_new_session
+            FROM events
+            WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
+        ),
+        numbered AS (
+            SELECT user_id, ts, event_id,
+                   SUM(is_new_session) OVER (
+                       PARTITION BY user_id ORDER BY ts, event_id
+                       ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW
+                   ) AS session_id
+            FROM flagged
+        )
+        SELECT user_id,
+               CAST(session_id AS BIGINT) AS session_id,
+               COUNT(*) AS n_events,
+               MIN(ts) AS session_start,
+               MAX(ts) AS session_end
+        FROM numbered
+        GROUP BY user_id, session_id
+        ORDER BY user_id, session_id
+    """
+
 
 @register(
     "top3_parts_per_supplier",
@@ -105,32 +132,7 @@ def revenue_running_total(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "sessionize_events",
-    oracle="""
-        WITH flagged AS (
-            SELECT user_id, ts, event_id,
-                   CASE WHEN LAG(ts) OVER w IS NULL
-                             OR ts - LAG(ts) OVER w > INTERVAL 30 MINUTE
-                        THEN 1 ELSE 0 END AS is_new_session
-            FROM events
-            WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-        ),
-        numbered AS (
-            SELECT user_id, ts, event_id,
-                   SUM(is_new_session) OVER (
-                       PARTITION BY user_id ORDER BY ts, event_id
-                       ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW
-                   ) AS session_id
-            FROM flagged
-        )
-        SELECT user_id,
-               CAST(session_id AS BIGINT) AS session_id,
-               COUNT(*) AS n_events,
-               MIN(ts) AS session_start,
-               MAX(ts) AS session_end
-        FROM numbered
-        GROUP BY user_id, session_id
-        ORDER BY user_id, session_id
-    """,
+    oracle=_SESSIONIZE_ORACLE,
     doc="Batch sessionization: 30-min inactivity gap → session rows. "
     "Routed through the skew-safe hybrid (sessionize_hybrid_frame): on "
     "uniform data the plan is the one-shuffle lag formulation plus one "
@@ -138,7 +140,8 @@ def revenue_running_total(spark: SparkSession, sf_dir: str) -> DataFrame:
     "decomposition instead of funnelling through a single window task "
     "(sf10 measured 4x cliff on a 30%%-one-key corpus). The plain lag "
     "plan survives as sessionize_lag_plan, pytest-pinned equivalent "
-    "(tests/test_windows.py).",
+    "(tests/test_scale_utils.py::"
+    "test_sessionize_events_registered_is_hybrid_and_lag_twin_matches).",
     tags=("window", "sessionize"),
 )
 def sessionize_events(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -183,33 +186,6 @@ SEG_CHUNK_US = 3_600 * 1_000_000  # 1-hour segments
 # Per-task-memory bound, corpus-size-independent — calibration and
 # re-tuning rule in SCALING.md "Threshold provenance".
 HOT_KEY_THRESHOLD = 100_000
-
-_SESSIONIZE_ORACLE = """
-        WITH flagged AS (
-            SELECT user_id, ts, event_id,
-                   CASE WHEN LAG(ts) OVER w IS NULL
-                             OR ts - LAG(ts) OVER w > INTERVAL 30 MINUTE
-                        THEN 1 ELSE 0 END AS is_new_session
-            FROM events
-            WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-        ),
-        numbered AS (
-            SELECT user_id, ts, event_id,
-                   SUM(is_new_session) OVER (
-                       PARTITION BY user_id ORDER BY ts, event_id
-                       ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW
-                   ) AS session_id
-            FROM flagged
-        )
-        SELECT user_id,
-               CAST(session_id AS BIGINT) AS session_id,
-               COUNT(*) AS n_events,
-               MIN(ts) AS session_start,
-               MAX(ts) AS session_end
-        FROM numbered
-        GROUP BY user_id, session_id
-        ORDER BY user_id, session_id
-    """
 
 
 def _sessionize_segmented(e: DataFrame) -> DataFrame:

